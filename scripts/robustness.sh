@@ -1,27 +1,11 @@
 #!/usr/bin/env bash
-# Memory-pressure robustness run: fork graft.Robustness in a 4 GiB JVM
+# Memory-pressure robustness run: fork graft.Robustness in a 4 GiB G1 JVM
 # (local[8]) over the dedup/similarity/text family at sf0.1 and write
 # ROBUSTNESS.json. The tight heap forces the spill paths the 100 TB claim
 # depends on; any OOM or query failure exits non-zero.
 set -euo pipefail
 cd "$(dirname "$0")/.."
-CLASSES=target/scala-2.13/classes
-[ -d "$CLASSES" ] || { echo "run 'sbt compile' first" >&2; exit 2; }
-HEAP="${ROBUSTNESS_HEAP:-4g}"
-exec java -Xmx"$HEAP" -XX:+UseG1GC \
-  --add-opens=java.base/java.lang=ALL-UNNAMED \
-  --add-opens=java.base/java.lang.invoke=ALL-UNNAMED \
-  --add-opens=java.base/java.lang.reflect=ALL-UNNAMED \
-  --add-opens=java.base/java.io=ALL-UNNAMED \
-  --add-opens=java.base/java.net=ALL-UNNAMED \
-  --add-opens=java.base/java.nio=ALL-UNNAMED \
-  --add-opens=java.base/java.util=ALL-UNNAMED \
-  --add-opens=java.base/java.util.concurrent=ALL-UNNAMED \
-  --add-opens=java.base/java.util.concurrent.atomic=ALL-UNNAMED \
-  --add-opens=java.base/jdk.internal.ref=ALL-UNNAMED \
-  --add-opens=java.base/sun.nio.ch=ALL-UNNAMED \
-  --add-opens=java.base/sun.nio.cs=ALL-UNNAMED \
-  --add-opens=java.base/sun.security.action=ALL-UNNAMED \
-  --add-opens=java.base/sun.util.calendar=ALL-UNNAMED \
-  -cp "$CLASSES:/opt/spark/jars/*" \
-  graft.Robustness "$@"
+[ -d target/scala-2.13/classes ] || { echo "run 'sbt compile' first" >&2; exit 2; }
+SPARK_DRIVER_MEM="${ROBUSTNESS_HEAP:-4g}" \
+JAVA_TOOL_OPTIONS="-XX:+UseG1GC${JAVA_TOOL_OPTIONS:+ $JAVA_TOOL_OPTIONS}" \
+  exec scripts/jrun.sh graft.Robustness "$@"

@@ -41,6 +41,9 @@ object Mat {
     *
     *   spark.graft.mat.multi-use = none (default) | cache | checkpoint
     *
+    * (settable per JVM, e.g. `-Dspark.graft.mat.multi-use=cache`, which is
+    * how a cold A/B of `graft.Bench` picks its arm — see README).
+    *
     * r19 measurement (sf0.1, local[32], within-session A/B, median of 7):
     * "none" ≥ "cache" at EVERY multiUse call site — q95 2.58→1.76 s,
     * q97 2.56→2.26, q98 2.49→2.44, q99 1.23→1.13, q45 1.45→1.23 — the

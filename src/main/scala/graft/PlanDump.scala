@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 import java.nio.file.{Files, Paths}
 import java.nio.charset.StandardCharsets
@@ -21,16 +20,7 @@ object PlanDump {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").map(_.trim).toSet) else None
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.graft.mat.multi-use",
-        sys.env.getOrElse("SPARK_GRAFT_MAT_MULTI_USE", "none"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     Files.createDirectories(Paths.get(outDir))
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.exists(n.startsWith)))

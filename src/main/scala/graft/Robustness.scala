@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import java.util.concurrent.atomic.AtomicLong
 
@@ -42,19 +41,13 @@ object Robustness {
     // every buffering operator (external sorter, window, SMJ, object-hash
     // fallback) spills after a few thousand elements, making this run
     // traverse exactly the code paths a 100 TB shuffle partition lives in.
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.shuffle.spill.numElementsForceSpillThreshold", "5000")
-      .config("spark.sql.windowExec.buffer.spill.threshold", "2048")
-      .config("spark.sql.sessionWindow.buffer.spill.threshold", "2048")
-      .config("spark.sql.sortMergeJoinExec.buffer.spill.threshold", "2048")
-      .config("spark.sql.cartesianProductExec.buffer.spill.threshold", "2048")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "128")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(cpus,
+      "spark.shuffle.spill.numElementsForceSpillThreshold" -> "5000",
+      "spark.sql.windowExec.buffer.spill.threshold" -> "2048",
+      "spark.sql.sessionWindow.buffer.spill.threshold" -> "2048",
+      "spark.sql.sortMergeJoinExec.buffer.spill.threshold" -> "2048",
+      "spark.sql.cartesianProductExec.buffer.spill.threshold" -> "2048",
+      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "128")
 
     val memSpilled = new AtomicLong(0L)
     val diskSpilled = new AtomicLong(0L)
@@ -70,34 +63,27 @@ object Robustness {
 
     val heapMb = Runtime.getRuntime.maxMemory() / (1024 * 1024)
     val results = family.map { name =>
-      System.gc()
-      val t0 = System.nanoTime()
-      val status =
-        try {
-          SparkEntry.queries(name)(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-          "ok"
-        } catch {
-          case e: OutOfMemoryError => s"OOM:${e.getMessage}"
-          case e: Throwable => s"error:${e.getClass.getSimpleName}"
-        }
-      val sec = (System.nanoTime() - t0) / 1e9
-      (name, status, sec)
+      val run = Harness.timeNoop(spark, name, sfDir)
+      val status = run.failure match {
+        case None => "ok"
+        case Some(e: OutOfMemoryError) => s"OOM:${e.getMessage}"
+        case Some(e) => s"error:${e.getClass.getSimpleName}"
+      }
+      (name, status, run.sec)
     }
     // listener events are async; give the bus a moment to drain before
     // reporting totals (the private listenerBus.waitUntilEmpty is sealed)
     Thread.sleep(2000)
-    val failures = results.collect { case (n, s, _) if s != "ok" => s""""$n":"$s"""" }
+    val failures = results.collect { case (n, s, _) if s != "ok" => Harness.str(n) }
     val qs = results.map { case (n, s, sec) =>
-      f""""$n":{"status":"$s","sec":$sec%.3f}""" }.mkString("{", ",", "}")
-    val json =
+      s"""${Harness.str(n)}:{"status":${Harness.str(s)},"sec":${Harness.num(sec, "%.3f")}}"""
+    }.mkString("{", ",", "}")
+    Harness.emit(
       s"""{"metric":"robustness","heap_mb":$heapMb,"cores":$cpus,"sf":"$sfDir",""" +
       s""""queries":$qs,"memory_bytes_spilled":${memSpilled.get},""" +
       s""""disk_bytes_spilled":${diskSpilled.get},""" +
-      s""""failures":${failures.mkString("[", ",", "]")}}"""
-    println(json)
-    java.nio.file.Files.write(java.nio.file.Paths.get(out),
-      (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      s""""failures":${failures.mkString("[", ",", "]")}}""",
+      out)
     spark.stop()
     if (failures.nonEmpty) sys.exit(1)
   }

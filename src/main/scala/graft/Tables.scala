@@ -108,13 +108,6 @@ object Tables {
     * count is pinned (REPARTITION_BY_NUM) so AQE's size-based coalescing
     * cannot merge the small-but-CPU-heavy outputs back onto a few tasks. */
   def spreadIfNarrow(df: DataFrame, key: org.apache.spark.sql.Column): DataFrame = {
-    // A/B lever (same pattern as spark.graft.mat.multi-use): lets the
-    // narrow-scan spread be re-measured on any box without a code flip —
-    // within-session A/B is the only signal clean enough to keep/revert
-    // call sites (between-JVM runs of sub-second queries swing ±30%).
-    val enabled = scala.util.Try(df.sparkSession.sessionState.conf
-      .getConfString("spark.graft.spread.narrow", "on")).getOrElse("on")
-    if (enabled == "off") return df
     val target = df.sparkSession.sessionState.conf.numShufflePartitions
     // physical-plan partition count BEFORE any exchange: for a (filtered/
     // projected) scan this is the split count — planning-time only, no job.

@@ -60,7 +60,9 @@ object Pipeline {
         .select($"id", least($"label", coalesce($"nl", $"label")).as("label"),
           ($"label" > coalesce($"nl", $"label")).cast("long").as("chg"))
         .transform(Mat.checkpoint)
-      changed = next.agg(sum($"chg")).as[Long].head()
+      // coalesce: SUM over zero rows is NULL — a corpus with no near-dup
+      // pairs has no labels at all, and converges at once
+      changed = next.agg(coalesce(sum($"chg"), lit(0L))).as[Long].head()
       Mat.release(labels) // superseded generation: freed NOW, not at GC time
       labels = next // chg rides along; release() must see the checkpoint ROOT
       rounds += 1

@@ -3,7 +3,7 @@ package graft
 /** Cache hygiene across the WHOLE query surface (VERDICT r12 #7).
   *
   * Contract: queries may park SCRATCH state while they run — a cached
-  * intermediate reused across a self-join (q41/q43/q45), or the final
+  * intermediate reused across a self-join (q41/q43), or the final
   * localCheckpoint of an iterative loop whose RDD necessarily backs the
   * returned DataFrame (q62/q100/q119) — but (a) only a KNOWN allowlist of
   * queries does so (a new query silently starting to cache is a regression
@@ -18,18 +18,13 @@ class BenchHygieneSpec extends SparkSpec {
   private val scratchAllowlist: Set[String] = Set(
     "q41_dedup_minhash_lsh",   // cached signature table, reused by 3 band projections
     "q43_dedup_ngram_jaccard", // cached inverted index, reused by candidate join + verify
-    "q45_embed_neardup_lsh",   // cached LSH signature table, reused by 4 band self-joins
     "q62_dedup_clusters",      // final min-label frontier localCheckpoint backs the result
     "q86_cross_source_dups",   // reuses q41's cached signatures across two sources
     "q100_pagerank",           // final rank frontier localCheckpoint backs the result
     "q119_triangles",          // oriented adjacency localCheckpoint backs the result
     "q67_dedup_simhash_pairs", // cached simhash table, reused by 4 pigeonhole bands
     "q72_recursive_cte",       // checkpointed narrow base relation backs the UnionLoop
-    "q90_block_dedup",         // cached block table, reused by candidate join + verify
-    "q95_bigram_lm",           // cached token stream feeds model build AND scoring join
-    "q97_nb_langid",           // cached char n-grams feed class priors AND likelihoods
-    "q98_dsir_weights",        // cached doc bigrams feed target AND proposal models
-    "q99_tfidf_keywords")      // cached term counts feed df AND the score join
+    "q90_block_dedup")         // cached block table, reused by candidate join + verify
 
   test("only allowlisted queries park scratch; releaseScratch leaves nothing") {
     SparkEntry.releaseScratch(spark) // settle leftovers from earlier suites

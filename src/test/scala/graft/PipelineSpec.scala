@@ -28,6 +28,19 @@ class PipelineSpec extends SparkSpec {
       assert(labels(a) == labels(c))
   }
 
+  test("q62: a corpus with no near-duplicate pairs yields no clusters, not a crash") {
+    // five fixture documents whose texts share no word, so q41 finds no
+    // pair: the label frame is empty and SUM(chg) over it is NULL
+    val dir = java.nio.file.Files
+      .createTempDirectory(java.nio.file.Paths.get("target"), "q62-nodup-").toString
+    Tables.documents(spark, sf).orderBy("doc_id").limit(5)
+      .withColumn("text", expr(
+        "array_join(transform(sequence(1, 8), i -> concat('w', doc_id, '_', i)), ' ')"))
+      .write.parquet(s"$dir/documents.parquet")
+    assert(Dedup.q41(spark, dir).isEmpty, "fixture must have no near-dup pairs")
+    assert(Pipeline.q62(spark, dir).collect().isEmpty)
+  }
+
   test("q63: bm25 scores are positive and capped by top-k contract") {
     val rows = Pipeline.q63(spark, sf).collect()
     assert(rows.length <= 20)

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Tables.spreadIfNarrow — the r18 conditional parallelism normalizer.
   * Contract: results are IDENTICAL with the spread on/off (it may only move
   * rows between partitions); it fires on few-split inputs; it no-ops when
-  * the scan already has enough parallelism or when disabled by conf. */
+  * the scan already has enough parallelism. */
 class SpreadSpec extends AnyFunSuite {
 
   private lazy val spark = SparkSession.builder()
@@ -30,12 +30,17 @@ class SpreadSpec extends AnyFunSuite {
 
   test("results identical with the spread on and off (q01 shape)") {
     import spark.implicits._
-    def q01at(flag: String) = {
-      spark.conf.set("spark.graft.spread.narrow", flag)
-      try queries.Relational.q01(spark, sf).collect().toSeq
-      finally spark.conf.unset("spark.graft.spread.narrow")
-    }
-    assert(q01at("on") == q01at("off"),
+    val base = Tables.lineitem(spark, sf)
+      .select($"l_orderkey", $"l_returnflag", $"l_linestatus", $"l_quantity")
+    val spreadDf = Tables.spreadIfNarrow(base, $"l_orderkey")
+    assert(spreadDf.rdd.getNumPartitions != base.rdd.getNumPartitions,
+      "the spread must actually fire for this comparison to mean anything")
+    def q01Shape(df: org.apache.spark.sql.DataFrame) =
+      df.groupBy($"l_returnflag", $"l_linestatus")
+        // DECIMAL sum: exact under any partitioning, like q01's msum
+        .agg(sum($"l_quantity".cast("decimal(18,2)")).as("sum_qty"), count(lit(1)).as("n"))
+        .orderBy($"l_returnflag", $"l_linestatus").collect().toSeq
+    assert(q01Shape(spreadDf) == q01Shape(base),
       "spreadIfNarrow must never change query results")
   }
 
@@ -45,16 +50,5 @@ class SpreadSpec extends AnyFunSuite {
     val out = Tables.spreadIfNarrow(wide, $"k")
     assert(out.rdd.getNumPartitions == 8,
       "an input at/above half the target parallelism must pass through untouched")
-  }
-
-  test("conf kill-switch: spark.graft.spread.narrow=off passes through") {
-    import spark.implicits._
-    spark.conf.set("spark.graft.spread.narrow", "off")
-    try {
-      val base = Tables.lineitem(spark, sf).select($"l_orderkey")
-      val out = Tables.spreadIfNarrow(base, $"l_orderkey")
-      assert(out.rdd.getNumPartitions == base.rdd.getNumPartitions,
-        "disabled spread must be a no-op")
-    } finally spark.conf.unset("spark.graft.spread.narrow")
   }
 }
