@@ -34,20 +34,24 @@ object Bench {
     s(s.length / 2)
   }
 
+  /** Local-iteration aid: `SPARK_GRAFT_BENCH_ONLY=q103,q98` times a subset,
+    * each entry an exact name or an underscore-delimited prefix (`q10` is
+    * q10_join_anti alone, never q100–q109 too). Unset, every query runs. */
+  private[graft] def select(names: Iterable[String], only: Option[String]): Seq[String] = {
+    val all = names.toSeq.sorted
+    only.fold(all) { qs =>
+      val want = qs.split(",").map(_.trim).toSet
+      all.filter(n => want.exists(p => n == p || n.startsWith(p + "_")))
+    }
+  }
+
   private def outPath(default: String): String =
     sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", default)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Harness.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    // local-iteration aid: SPARK_GRAFT_BENCH_ONLY=q103,q100 times a subset
-    // (the driver never sets it, so its runs stay total)
-    val names = sys.env.get("SPARK_GRAFT_BENCH_ONLY") match {
-      case Some(qs) =>
-        val want = qs.split(",").map(_.trim).toSet
-        SparkEntry.queries.keys.toSeq.sorted.filter(n => want.exists(n.startsWith))
-      case None => SparkEntry.queries.keys.toSeq.sorted
-    }
+    val names = select(SparkEntry.queries.keys, sys.env.get("SPARK_GRAFT_BENCH_ONLY"))
     try sys.env.get("SPARK_GRAFT_SCALE_CHECK") match {
       case Some(spec) => scaling(spark, names, spec)
       case None => total(spark, names, sfDir)

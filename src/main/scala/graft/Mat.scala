@@ -30,41 +30,6 @@ object Mat {
     else persistTruncated(df)
   }
 
-  /** Materialization for MULTI-CONSUMER, non-iterative intermediates — the
-    * q95 family shape: one per-doc aggregate feeding both a corpus model
-    * and a scoring join. Default since r19 is NO materialization: every
-    * consumer recomputes the frame and AQE's runtime shuffle-stage reuse
-    * dedups the expensive upstream exchanges (the same reason the q43/q82
-    * self-joins are deliberately uncached). The strategy stays a session
-    * knob so the choice is MEASURABLE per deployment instead of hard-coded
-    * (VERDICT r16 #2):
-    *
-    *   spark.graft.mat.multi-use = none (default) | cache | checkpoint
-    *
-    * (settable per JVM, e.g. `-Dspark.graft.mat.multi-use=cache`, which is
-    * how a cold A/B of `graft.Bench` picks its arm — see README).
-    *
-    * r19 measurement (sf0.1, local[32], within-session A/B, median of 7):
-    * "none" ≥ "cache" at EVERY multiUse call site — q95 2.58→1.76 s,
-    * q97 2.56→2.26, q98 2.49→2.44, q99 1.23→1.13, q45 1.45→1.23 — the
-    * lazy cache's serialize-into-storage cost exceeded the duplicate
-    * linear recompute it saved once the r18 spread normalizer made that
-    * recompute parallel (r17's cache-vs-checkpoint numbers predate the
-    * spread). At 100 TB "none" is also the memory-safe default: nothing
-    * competes with execution memory. */
-  def multiUse(df: DataFrame): DataFrame =
-    scala.util.Try(df.sparkSession.sessionState.conf
-      .getConfString("spark.graft.mat.multi-use", "none"))
-      .getOrElse("none") match {
-      case "checkpoint" => checkpoint(df)
-      // "none": no materialization at all — consumers recompute the frame,
-      // relying on AQE's runtime shuffle-stage reuse to dedup the expensive
-      // upstream exchanges (the q43/q82 self-join rule). Added r19 so the
-      // lazy-cache default stays A/B-measurable against plain recompute.
-      case "none" => df
-      case _ => df.cache()
-    }
-
   /** The no-checkpoint-dir cluster tier; package-visible so MatSpec can
     * exercise it on the local test master too. */
   private[graft] def persistTruncated(df: DataFrame): DataFrame = {

@@ -106,6 +106,8 @@ case class GraftDsv2Table(t: GraftTable, identName: String,
         new V1Scan with SupportsReportStatistics {
         private val filters = pushed
         private val outSchema = required
+        // one snapshot for both the statistics and the rows they describe
+        private val snap = snapshotForRead
         override def readSchema(): StructType = outSchema
         /** Exact post-pruning size/row counts from the snapshot log's file
           * stats (the manifest numbers — no file IO). With them the planner
@@ -114,7 +116,6 @@ case class GraftDsv2Table(t: GraftTable, identName: String,
           * them a V1 relation defaults to `defaultSizeInBytes` (= "huge")
           * and every dim join shuffles. */
         override def estimateStatistics(): Statistics = new Statistics {
-          private val snap = snapshotForRead
           private val files = t.pruneFiles(snap, filters.toIndexedSeq)
           override def sizeInBytes(): util.OptionalLong =
             util.OptionalLong.of(files.map(_.bytes).sum)
@@ -182,7 +183,7 @@ case class GraftDsv2Table(t: GraftTable, identName: String,
             override def sqlContext: SQLContext = context
             override def schema: StructType = outSchema
             override def buildScan(): RDD[Row] = {
-              val base = prunedDf(filters)
+              val base = t.readPruned(snap, filters.toIndexedSeq)
               val filtered = filters.flatMap(toColumn).foldLeft(base)(_ filter _)
               filtered.select(outSchema.fieldNames.map(org.apache.spark.sql.functions.col): _*).rdd
             }
@@ -216,7 +217,9 @@ case class GraftDsv2Table(t: GraftTable, identName: String,
   }
 
   /** The snapshot this table instance reads (honors time travel and branch
-    * identifiers). */
+    * identifiers). An unpinned table re-reads the log HEAD on every call,
+    * so a caller that makes one decision from several facts about the
+    * snapshot binds it once: two calls can straddle a commit. */
   private[graft] def snapshotForRead: graft.table.Snapshot = branch match {
     case Some(b) =>
       val r = t.log.refs.getOrElse(b, throw new IllegalArgumentException(
@@ -230,9 +233,6 @@ case class GraftDsv2Table(t: GraftTable, identName: String,
     }
   }
 
-  private[graft] def prunedDf(filters: Array[Filter]): DataFrame =
-    t.readPruned(snapshotForRead, filters.toIndexedSeq)
-
   /** Catalog-statistics rendering of the (file-pruned) snapshot for plan
     * paths that LEAVE DSv2 — the [[graft.plans.GraftNativeScan]] parquet
     * swap: the same metadata-only numbers `estimateStatistics` reports
@@ -242,10 +242,9 @@ case class GraftDsv2Table(t: GraftTable, identName: String,
     * to the CBO. Without this the swap silently drops column statistics
     * and cost-based filter/join estimation never sees an analyzed graft
     * table on the hot (vectorized) read path. Zero file IO. */
-  private[graft] def catalogStatistics(filters: Array[Filter]):
+  private[graft] def catalogStatistics(snap: graft.table.Snapshot, filters: Array[Filter]):
       org.apache.spark.sql.catalyst.catalog.CatalogStatistics = {
     import org.apache.spark.sql.catalyst.catalog.{CatalogColumnStat, CatalogStatistics}
-    val snap = snapshotForRead
     val files = t.pruneFiles(snap, filters.toIndexedSeq)
     val rows = files.map(_.rows).sum
     val colStats = schema().fields.flatMap { f =>

@@ -41,10 +41,11 @@ case class GraftMetadataAggregate(spark: SparkSession) extends Rule[LogicalPlan]
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
     case agg @ Aggregate(groupless, aggExprs, child, _) if groupless.isEmpty && aggExprs.nonEmpty =>
-      graftOf(child) match {
-        case Some(g) if g.snapshotForRead.deleteFiles.isEmpty &&
-            g.snapshotForRead.eqDeleteFiles.isEmpty =>
-          val snap = g.snapshotForRead
+      // one snapshot for the no-deletes guard AND the answer: a merge-on-
+      // read delete committed between two reads would otherwise pass the
+      // guard and then count the row totals of a snapshot with deletes
+      graftOf(child).map(g => g -> g.snapshotForRead) match {
+        case Some((g, snap)) if snap.deleteFiles.isEmpty && snap.eqDeleteFiles.isEmpty =>
           val answers = aggExprs.map(e => answer(e, snap))
           if (answers.forall(_.isDefined)) {
             // metadata values ARE reads: loadTable accepts SELECT-or-MODIFY

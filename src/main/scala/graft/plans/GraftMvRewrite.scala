@@ -51,7 +51,8 @@ import graft.table.GraftTable
   * `materialize_agg` / `refresh_agg` in this session, or re-attached via
   * `CALL graft.system.register_agg_rewrite` after a restart. Freshness
   * costs one snapshot-log head read per candidate per query — metadata
-  * grain, never data IO. Disable with `spark.graft.mv.rewrite=false`.
+  * grain, never data IO. Disable it like any optimizer rule, with
+  * `spark.sql.optimizer.excludedRules=graft.plans.GraftMvRewrite`.
   *
   * Injected BEFORE [[GraftNativeScan]] (same optimizer batch): it must see
   * the graft relation before the swap rewrites it into a parquet plan.
@@ -59,9 +60,7 @@ import graft.table.GraftTable
 case class GraftMvRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (IncrementalAgg.rewriteRegistryEmpty ||
-        spark.sessionState.conf.getConfString("spark.graft.mv.rewrite", "true") != "true")
-      plan
+    if (IncrementalAgg.rewriteRegistryEmpty) plan
     else plan.transform {
       case agg: Aggregate => rewrite(agg).getOrElse(agg)
     }

@@ -8,6 +8,7 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.graftglue.Bridge
 import org.apache.spark.sql.sources.Filter
 import graft.catalog.GraftDsv2Table
+import graft.table.Snapshot
 
 /** Keeps catalog-table reads vectorized: swaps a graft DSv2 relation for the
   * logical plan of the snapshot's (file-pruned) parquet read, so `SELECT …
@@ -36,23 +37,25 @@ case class GraftNativeScan(spark: SparkSession) extends Rule[LogicalPlan] {
     case d: DeleteFromTable => d
     case u: UpdateTable     => u
     case m: MergeIntoTable  => m
-    case f @ Filter(cond, r: DataSourceV2Relation) if swappable(r) =>
-      f.copy(child = swap(r, conjuncts(cond).flatMap(Bridge.translateFilter)))
-    case r: DataSourceV2Relation if swappable(r) =>
-      swap(r, Seq.empty)
+    case f @ Filter(cond, r: DataSourceV2Relation) =>
+      swappable(r).fold[LogicalPlan](f) { case (g, snap) =>
+        f.copy(child = swap(r, g, snap, conjuncts(cond).flatMap(Bridge.translateFilter)))
+      }
+    case r: DataSourceV2Relation =>
+      swappable(r).fold[LogicalPlan](r) { case (g, snap) => swap(r, g, snap, Seq.empty) }
     case other => other.mapChildren(rewrite)
   }
 
-  /** Leave the relation on the DSv2 path when the runtime-filtering scan
-    * would serve it ([[graft.table.GraftRuntimeScan]] — join-time file
-    * pruning needs `BatchScanExec`, which only a real DSv2 scan plans);
-    * swap to the pruned-parquet logical plan otherwise. */
-  private def swappable(r: DataSourceV2Relation): Boolean = graftOf(r) match {
-    case None => false
-    case Some(g) =>
-      !(graft.catalog.GraftDsv2Table.runtimeFilteringEnabled(spark) &&
-        graft.table.GraftRuntimeScan.eligible(g.t, g.snapshotForRead))
-  }
+  /** The graft table and the ONE snapshot the swap reads and describes,
+    * unless the relation stays on the DSv2 path because the runtime-
+    * filtering scan would serve it ([[graft.table.GraftRuntimeScan]] —
+    * join-time file pruning needs `BatchScanExec`, which only a real DSv2
+    * scan plans). */
+  private def swappable(r: DataSourceV2Relation): Option[(GraftDsv2Table, Snapshot)] =
+    graftOf(r).map(g => g -> g.snapshotForRead).filterNot { case (g, snap) =>
+      graft.catalog.GraftDsv2Table.runtimeFilteringEnabled(spark) &&
+        graft.table.GraftRuntimeScan.eligible(g.t, snap)
+    }
 
   private def graftOf(r: DataSourceV2Relation): Option[GraftDsv2Table] = r.table match {
     case g: GraftDsv2Table => Some(g)
@@ -74,13 +77,13 @@ case class GraftNativeScan(spark: SparkSession) extends Rule[LogicalPlan] {
     * the CBO the same numbers the DSv2 `estimateStatistics` reports, and
     * an ANALYZEd low-cardinality filter can still flip a join to
     * broadcast on the vectorized path. */
-  private def swap(r: DataSourceV2Relation, filters: Seq[Filter]): LogicalPlan = {
-    val g = graftOf(r).get
+  private def swap(r: DataSourceV2Relation, g: GraftDsv2Table, snap: Snapshot,
+      filters: Seq[Filter]): LogicalPlan = {
     // this swap IS the read path when it fires (newScanBuilder never runs),
     // so the SELECT grant check must happen here too
     g.readGuard()
-    val child = g.prunedDf(filters.toArray).queryExecution.analyzed
-    val stats = g.catalogStatistics(filters.toArray)
+    val child = g.t.readPruned(snap, filters).queryExecution.analyzed
+    val stats = g.catalogStatistics(snap, filters.toArray)
     val statsTable = org.apache.spark.sql.catalyst.catalog.CatalogTable(
       identifier = org.apache.spark.sql.catalyst.TableIdentifier(g.name()),
       tableType = org.apache.spark.sql.catalyst.catalog.CatalogTableType.EXTERNAL,

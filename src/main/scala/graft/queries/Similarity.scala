@@ -89,11 +89,11 @@ object Similarity {
       val w = array(planes(j).map(v => lit(v.toFloat)): _*)
       when(cos($"embedding", w) > 0, lit("1")).otherwise(lit("0")).as(s"bit$j")
     }
-    // cache the one-pass signature table: the bit columns are interpreted
-    // higher-order folds (HOFs don't codegen), and downstream the 4-band
-    // union is self-joined — uncached they would be re-evaluated 8×
-    // (lazy cache over checkpoint: the q95 rationale)
-    val sigs = e.select(($"vec_id" +: bitCols): _*).transform(graft.Mat.multiUse)
+    // the signature table feeds all 8 sides of the 4-band self-join, yet
+    // recomputing it holds up against a cache: cold A/B, sf0.1, 4 cores,
+    // 10 fresh-JVM pairs — median 1.56 s recomputed (IQR 0.12) vs 1.51 s
+    // cached, cache won 4/10 (below the 9/10 bar for keeping a cache)
+    val sigs = e.select(($"vec_id" +: bitCols): _*)
     val bands = (0 until Bands).map { b =>
       sigs.select($"vec_id", lit(b).as("band"),
         concat((0 until BandRows).map(r => col(s"bit${BandRows * b + r}")): _*).as("sig"))

@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Mat
 import graft.Tables._
 
 /** Text-analysis operators over `documents.text` (north-star training-data
@@ -305,14 +304,9 @@ object TextAnalysis {
           " (a, b) -> struct(a AS w1, b AS w2))")).as("p"))
       .select($"doc_id", $"p.w1".as("w1"), $"p.w2".as("w2"))
       .groupBy($"doc_id", $"w1", $"w2").agg(count(lit(1)).as("c"))
-      // feeds the model build AND the scoring join. Lazy cache, NOT
-      // localCheckpoint (measured 1.4 -> 1.9 s checkpointed at sf0.1): the
-      // first consumer materializes the cache inside its own job, so the
-      // checkpoint's separate eager write is pure overhead; and unlike
-      // q100, an eviction recompute here is one linear tokenize pass —
-      // same cost class, no plan-shape cliff. Strategy measurable via
-      // spark.graft.mat.multi-use (VERDICT r16 #2).
-      .transform(Mat.multiUse)
+      // feeds the model build AND the scoring join, recomputed for each:
+      // cold A/B, sf0.1, 4 cores, 10 fresh-JVM pairs — median 2.22 s
+      // recomputed (IQR 0.26) vs 2.05 s cached, cache won only 7/10
     val corpusBg = docBg.groupBy($"w1", $"w2").agg(sum($"c").as("c12"))
     val corpusUni = corpusBg.groupBy($"w1").agg(sum($"c12").as("c1"))
     // r19: MODEL-FIRST join — fold c1 into the (much smaller) bigram model
@@ -377,17 +371,19 @@ object TextAnalysis {
       .select($"doc_id", $"lang",
         explode(expr("filter(split(text, ' '), x -> length(x) > 0)")).as("word"))
     // per-doc word counts (true lang rides along — no join back later).
-    // Cached (the q95 lazy-cache rationale), and cw/vocab are DERIVED from
-    // dw by algebra (sum of per-doc counts = corpus count; distinct word
-    // set identical) so the corpus tokenizes exactly ONCE instead of 3x
+    // cw/vocab are DERIVED from dw by algebra (sum of per-doc counts =
+    // corpus count; distinct word set identical). dw itself is recomputed
+    // per consumer: cold A/B, sf0.1, 4 cores, 10 fresh-JVM pairs — median
+    // 2.69 s recomputed (IQR 0.48) vs 2.23 s cached, cache won 9/10 but
+    // by less than the IQR, short of the bar for keeping a cache
     val dw = toks.groupBy($"doc_id", $"lang", $"word")
-      .agg(count(lit(1)).as("c")).transform(Mat.multiUse)
+      .agg(count(lit(1)).as("c"))
     val cw = dw.groupBy($"lang".as("cls"), $"word")
       .agg(sum($"c").as("cw"))
     val ct = cw.groupBy($"cls").agg(sum($"cw").as("ctot"))
     // r19: vocab DERIVES from cw (same distinct word set by construction),
     // riding cw's (cls, word) exchange instead of re-tokenizing the corpus
-    // a third time under the no-cache multiUse default (A/B at sf0.1:
+    // a third time while dw is recomputed per consumer (A/B at sf0.1:
     // mins 2.13 → 1.77 s for the whole query; same value, oracle-proven)
     val vocab = cw.select($"word").distinct().agg(count(lit(1)).as("v"))
     val docs = documents(spark, dir)
@@ -458,8 +454,9 @@ object TextAnalysis {
       .select($"doc_id",
         explode(expr("filter(split(text, ' '), x -> length(x) > 0)")).as("word"))
       .groupBy($"doc_id", $"word").agg(count(lit(1)).as("tf"))
-      // feeds df AND the score join (lazy multi-use: the q95 rationale)
-      .transform(Mat.multiUse)
+      // feeds df AND the score join, recomputed for each: cold A/B, sf0.1,
+      // 4 cores, 10 fresh-JVM pairs — median 1.38 s recomputed (IQR 0.14)
+      // vs 1.25 s cached, cache won 9/10 but by less than the IQR
     val df = dw.groupBy($"word").agg(count(lit(1)).as("df"))
     val n = documents(spark, dir).agg(count(lit(1)).as("n"))
     val scored = dw.join(df, "word").crossJoin(broadcast(n))

@@ -114,20 +114,12 @@ class RestCatalogServer(val warehouse: String,
     // answer (default) is always available — the async mode exists for
     // spec completeness and to prove the CLIENT's polling leg against a
     // spec-conforming async catalog.
-    planAsync: Boolean = false,
-    // Async-leg plan registry bound (ADVICE r17: was hard-coded 128 while
-    // planCacheSize was a knob). Beyond it the oldest submitted-but-
-    // unfetched plan-ids 404 pollers — correct (the client re-plans) but
-    // degraded, so deployments sizing planCacheSize up should size this up
-    // alongside.
-    asyncPlanSize: Int = 128) {
+    planAsync: Boolean = false) {
 
   require(planPageSize > 0, // 0 would page forever at the same offset
     s"planPageSize must be positive, got $planPageSize")
   require(planCacheSize > 0,
     s"planCacheSize must be positive, got $planCacheSize")
-  require(asyncPlanSize > 0,
-    s"asyncPlanSize must be positive, got $asyncPlanSize")
 
   private implicit val fmts: Formats = DefaultFormats
   // token -> (principal = OAuth client id, absolute expiry epoch ms);
@@ -1254,13 +1246,14 @@ class RestCatalogServer(val warehouse: String,
     * restarted registry costs a 404 and a re-plan, never a wrong file
     * list. A cancelled plan stays as a TOMBSTONE so pollers read back the
     * spec's `"plan-status":"cancelled"` instead of an ambiguous 404
-    * (VERDICT r17 #6). Bounded LRU ([[asyncPlanSize]]), evicted with the
+    * (VERDICT r17 #6). Bounded LRU ([[AsyncPlanSize]]), evicted with the
     * plan cache on drop/rename. */
+  private val AsyncPlanSize = 128 // beyond it the oldest unfetched plan-ids 404 (the client re-plans)
   private val asyncPlans = java.util.Collections.synchronizedMap(
     new java.util.LinkedHashMap[(String, String), (Long, String, Boolean)](16, 0.75f, true) {
       override def removeEldestEntry(
           e: java.util.Map.Entry[(String, String), (Long, String, Boolean)]): Boolean =
-        size() > asyncPlanSize
+        size() > AsyncPlanSize
     })
 
   /** Async submit (planAsync mode): validate exactly like the sync leg

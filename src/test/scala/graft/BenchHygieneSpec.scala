@@ -24,7 +24,8 @@ class BenchHygieneSpec extends SparkSpec {
     "q119_triangles",          // oriented adjacency localCheckpoint backs the result
     "q67_dedup_simhash_pairs", // cached simhash table, reused by 4 pigeonhole bands
     "q72_recursive_cte",       // checkpointed narrow base relation backs the UnionLoop
-    "q90_block_dedup")         // cached block table, reused by candidate join + verify
+    "q90_block_dedup",         // cached block table, reused by candidate join + verify
+    "q98_dsir_weights")        // cached per-doc bucket counts, reused by model + weight join
 
   test("only allowlisted queries park scratch; releaseScratch leaves nothing") {
     SparkEntry.releaseScratch(spark) // settle leftovers from earlier suites
@@ -44,5 +45,15 @@ class BenchHygieneSpec extends SparkSpec {
     }
     assert(unexpected.isEmpty, unexpected.mkString("\n"))
     assert(leaksAfterRelease.isEmpty, leaksAfterRelease.mkString("\n"))
+  }
+
+  test("SPARK_GRAFT_BENCH_ONLY selects exact names and underscore-delimited prefixes") {
+    val names = Seq("q98_dsir_weights", "q111_heaps_law", "q11_join_cross",
+      "q103_char_entropy", "q100_pagerank", "q10_join_anti")
+    assert(Bench.select(names, Some("q10, q11")) == Seq("q10_join_anti", "q11_join_cross"))
+    assert(Bench.select(names, Some("q100_pagerank,q98")) ==
+      Seq("q100_pagerank", "q98_dsir_weights"))
+    assert(Bench.select(names, None) == names.sorted)
+    assert(Bench.select(SparkEntry.queries.keys, Some("q10")) == Seq("q10_join_anti"))
   }
 }

@@ -125,9 +125,7 @@ class GovernanceSpec extends SparkSpec {
       def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
       val governed = rows(sql(q))
       assert(!governed.exists(_.contains("g0")), "policy must hide g0 everywhere")
-      spark.conf.set("spark.graft.mv.rewrite", "false")
-      val plain = try rows(sql(q))
-        finally spark.conf.set("spark.graft.mv.rewrite", "true")
+      val plain = MvRewriteSpec.withoutRewrite(spark)(rows(sql(q)))
       assert(governed == plain, "MV-rewritten governed read diverged")
     } finally {
       spark.sql("ALTER TABLE graft.db.gov_mv_src UNSET TBLPROPERTIES ('graft.filter')")

@@ -87,37 +87,6 @@ class MatSpec extends SparkSpec {
     }
   }
 
-  test("multiUse honors the spark.graft.mat.multi-use strategy knob") {
-    val df = spark.range(0, 50).toDF("n")
-    // default (r19): none — the frame passes through unmaterialized
-    val plain = Mat.multiUse(df)
-    assert(plain.count() == 50)
-    assert(!plain.queryExecution.withCachedData.toString.contains("InMemoryRelation"),
-      "default multiUse unexpectedly cached")
-    spark.conf.set("spark.graft.mat.multi-use", "cache")
-    // fresh frame: `df`'s queryExecution.withCachedData is already memoized
-    // from the pass-through assertion above and would never see the cache
-    val lazyDf = Mat.multiUse(spark.range(0, 50).toDF("n"))
-    try {
-      assert(lazyDf.count() == 50)
-      assert(lazyDf.queryExecution.withCachedData.toString.contains("InMemoryRelation"),
-        "cache-mode multiUse did not cache")
-    } finally {
-      lazyDf.unpersist(blocking = true)
-      spark.conf.unset("spark.graft.mat.multi-use")
-    }
-    spark.conf.set("spark.graft.mat.multi-use", "checkpoint")
-    try {
-      val eager = Mat.multiUse(spark.range(0, 50).toDF("n"))
-      try {
-        assert(eager.queryExecution.analyzed
-          .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD],
-          s"checkpoint strategy produced ${eager.queryExecution.analyzed.nodeName}")
-        assert(eager.count() == 50)
-      } finally Mat.release(eager)
-    } finally spark.conf.unset("spark.graft.mat.multi-use")
-  }
-
   test("checkpoint result is usable across multiple consumers without recompute") {
     val df = Mat.checkpoint(spark.range(0, 100).toDF("n"))
     try {

@@ -17,9 +17,7 @@ class MvRewriteSpec extends SparkSpec {
   /** Collected rows with the rewrite on vs off must match exactly. */
   private def assertSameResult(q: String): Unit = {
     val on = sql(q).collect().map(_.toString).sorted.toSeq
-    spark.conf.set("spark.graft.mv.rewrite", "false")
-    val off = try sql(q).collect().map(_.toString).sorted.toSeq
-      finally spark.conf.set("spark.graft.mv.rewrite", "true")
+    val off = MvRewriteSpec.withoutRewrite(spark)(sql(q).collect().map(_.toString).sorted.toSeq)
     assert(on == off, s"rewritten result diverges for: $q")
   }
 
@@ -128,10 +126,9 @@ class MvRewriteSpec extends SparkSpec {
     assertNotRewritten("SELECT sub, amount, count(*) FROM graft.db.mvr_src GROUP BY sub, amount")
   }
 
-  test("spark.graft.mv.rewrite=false disables the rule") {
-    spark.conf.set("spark.graft.mv.rewrite", "false")
-    try assertNotRewritten("SELECT grp, count(*) FROM graft.db.mvr_src GROUP BY grp")
-    finally spark.conf.set("spark.graft.mv.rewrite", "true")
+  test("spark.sql.optimizer.excludedRules disables the rule") {
+    MvRewriteSpec.withoutRewrite(spark)(
+      assertNotRewritten("SELECT grp, count(*) FROM graft.db.mvr_src GROUP BY grp"))
   }
 
   test("a source commit makes the MV stale: scan until refresh_agg, then rewrite again") {
@@ -157,5 +154,14 @@ class MvRewriteSpec extends SparkSpec {
     assertNotRewritten(q)
     spark.sql("CALL graft.system.register_agg_rewrite('db.mvr_mat')")
     assertRewritten(q)
+  }
+}
+
+object MvRewriteSpec {
+  /** Run `body` with the rewrite excluded through Spark's own optimizer
+    * rule exclusion. */
+  def withoutRewrite[T](spark: org.apache.spark.sql.SparkSession)(body: => T): T = {
+    spark.conf.set("spark.sql.optimizer.excludedRules", "graft.plans.GraftMvRewrite")
+    try body finally spark.conf.unset("spark.sql.optimizer.excludedRules")
   }
 }
