@@ -47,7 +47,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(session => graft.plans.GraftMvRewrite(session))
     // keeps catalog-table SELECTs on the vectorized parquet path (see
     // graft.plans.GraftNativeScan) instead of the row-based V1Scan fallback
-    ext.injectOptimizerRule(session => graft.plans.GraftNativeScan(session))
+    ext.injectOptimizerRule(_ => graft.plans.GraftNativeScan)
     ext.injectFunction((
       FunctionIdentifier("cosine_sim"),
       new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),

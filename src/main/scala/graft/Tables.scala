@@ -14,9 +14,8 @@ object Tables {
   /** When set (Verify's `SPARK_GRAFT_PLAN_MODE=server` battery), fixture
     * reads route through this catalog.namespace as graft tables instead of
     * raw parquet — every scan then plans its file list through the REST
-    * catalog's /plan endpoint (with `spark.graft.plan-mode=server`), so the
-    * full 156-query oracle battery exercises the server-planned read path
-    * end-to-end (VERDICT r17 #4). */
+    * catalog's /plan endpoint, so the full 156-query oracle battery
+    * exercises the server-planned read path end-to-end (VERDICT r17 #4). */
   val CatalogConf = "spark.graft.verify.table-catalog"
 
   private def catalogPrefix(spark: SparkSession): Option[String] =

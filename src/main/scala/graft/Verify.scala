@@ -53,7 +53,6 @@ object Verify {
           "lineitem", "events", "documents", "embeddings").foreach { t =>
         spark.sql(s"CALL graftv.system.import_parquet('vfy.$t', '$sfDir/$t.parquet')")
       }
-      spark.conf.set("spark.graft.plan-mode", "server")
       spark.conf.set(Tables.CatalogConf, "graftv.vfy")
     }
     // fixture-drift canary: name the drifted table/column loudly up front

@@ -90,92 +90,46 @@ case class GraftDsv2Table(t: GraftTable, identName: String,
       override def pruneColumns(requiredSchema: StructType): Unit =
         if (requiredSchema.nonEmpty) required = requiredSchema
 
-      override def build(): Scan = {
-        // Opt-in scale path: a runtime-filterable DSv2 batch scan (join-time
-        // file pruning via DPP — see [[graft.table.GraftRuntimeScan]]) for
-        // snapshots a bare parquet scan serves exactly; everything else (and
-        // the default) takes the projection-aware V1 path below.
-        val runtime =
-          if (GraftDsv2Table.runtimeFilteringEnabled(t.spark))
-            graft.table.GraftRuntimeScan.forSnapshot(t, snapshotForRead, pushed, required)
-          else None
-        runtime.getOrElse(v1Scan(pushed, required))
-      }
-
-      private def v1Scan(pushed: Array[Filter], required: StructType): Scan =
-        new V1Scan with SupportsReportStatistics {
+      override def build(): Scan = new V1Scan with SupportsReportStatistics {
         private val filters = pushed
         private val outSchema = required
         // one snapshot for both the statistics and the rows they describe
         private val snap = snapshotForRead
         override def readSchema(): StructType = outSchema
-        /** Exact post-pruning size/row counts from the snapshot log's file
-          * stats (the manifest numbers — no file IO). With them the planner
-          * auto-broadcasts small graft tables even where the
-          * [[graft.plans.GraftNativeScan]] swap isn't installed; without
-          * them a V1 relation defaults to `defaultSizeInBytes` (= "huge")
-          * and every dim join shuffles. */
-        override def estimateStatistics(): Statistics = new Statistics {
-          private val files = t.pruneFiles(snap, filters.toIndexedSeq)
-          override def sizeInBytes(): util.OptionalLong =
-            util.OptionalLong.of(files.map(_.bytes).sum)
-          override def numRows(): util.OptionalLong =
-            util.OptionalLong.of(files.map(_.rows).sum)
-          /** Per-COLUMN statistics for the CBO, all metadata-derived:
-            * null counts + exact-numeric min/max merge from the per-file
-            * manifest bounds; distinct counts come from the `stats.ndv.*`
-            * properties an ANALYZE pass ([[GraftTable.computeColumnStats]])
-            * recorded. Zero file IO at plan time. */
-          override def columnStats(): util.Map[org.apache.spark.sql.connector.expressions.NamedReference,
-              org.apache.spark.sql.connector.read.colstats.ColumnStatistics] = {
-            import org.apache.spark.sql.connector.read.colstats.ColumnStatistics
-            val nRows = files.map(_.rows).sum
-            val out = new util.HashMap[org.apache.spark.sql.connector.expressions.NamedReference, ColumnStatistics]()
-            outSchema.fields.foreach { f =>
-              val perFile = files.map(_.stats.get(f.name))
-              // nullCount only when EVERY file tracks it (a file with no
-              // entry is all-null-or-legacy — indeterminate, so skip)
-              val nulls: Option[Long] =
-                if (files.nonEmpty && perFile.forall(_.exists(_.nullCount >= 0)))
-                  Some(perFile.flatMap(_.map(_.nullCount)).sum)
-                else None
-              // min/max only for exact numerics whose string bounds
-              // round-trip losslessly (same rule as GraftMetadataAggregate)
-              def merged(pick: graft.table.ColumnStats => String, wantMin: Boolean): Option[AnyRef] = {
-                // skip all-null marker entries (empty bounds) — one marker
-                // file must not wipe the merged bounds for the column
-                // (review r17: the Try below swallowed "".toLong)
-                val vals = perFile.flatten.map(pick).filter(_.trim.nonEmpty)
-                if (vals.isEmpty) None
-                else f.dataType match {
-                  case LongType | IntegerType | ShortType | ByteType =>
-                    val ls = vals.map(_.toLong)
-                    Some(java.lang.Long.valueOf(if (wantMin) ls.min else ls.max))
-                  case DoubleType | FloatType =>
-                    val ds = vals.map(_.toDouble)
-                    Some(java.lang.Double.valueOf(if (wantMin) ds.min else ds.max))
-                  case _ => None
-                }
-              }
-              val mn = scala.util.Try(merged(_.min, wantMin = true)).toOption.flatten
-              val mx = scala.util.Try(merged(_.max, wantMin = false)).toOption.flatten
-              val ndv = snap.properties.get(s"stats.ndv.${f.name}")
-                .flatMap(s => scala.util.Try(s.toLong).toOption)
-                .map(n => math.min(n, math.max(nRows, 1L))) // NDV can't exceed rows
-              if (nulls.nonEmpty || ndv.nonEmpty || mn.nonEmpty)
-                out.put(org.apache.spark.sql.connector.expressions.Expressions.column(f.name),
-                  new ColumnStatistics {
-                  override def distinctCount(): util.OptionalLong =
-                    ndv.map(util.OptionalLong.of).getOrElse(util.OptionalLong.empty)
-                  override def nullCount(): util.OptionalLong =
-                    nulls.map(util.OptionalLong.of).getOrElse(util.OptionalLong.empty)
-                  override def min(): util.Optional[Object] =
-                    mn.map(util.Optional.of[Object]).getOrElse(util.Optional.empty[Object])
-                  override def max(): util.Optional[Object] =
-                    mx.map(util.Optional.of[Object]).getOrElse(util.Optional.empty[Object])
+        /** The swap path's [[catalogStatistics]] limited to the read
+          * schema: exact post-pruning size/row counts, merged null counts
+          * and numeric bounds, ANALYZE's NDV — manifest numbers, no file
+          * IO. Spark 4.1's scan pushdown wraps a `V1Scan` in a
+          * `V1ScanWrapper` that does not forward these, so a session
+          * without the [[graft.plans.GraftNativeScan]] swap plans the
+          * pushed-down relation at `defaultSizeInBytes`; only a caller
+          * holding the scan itself reads them. */
+        override def estimateStatistics(): Statistics = stats
+        private lazy val stats: Statistics = {
+          import org.apache.spark.sql.connector.expressions.NamedReference
+          import org.apache.spark.sql.connector.read.colstats.ColumnStatistics
+          def long(v: Option[BigInt]) =
+            v.fold(util.OptionalLong.empty)(n => util.OptionalLong.of(n.toLong))
+          def obj(v: Option[Any]) =
+            v.fold(util.Optional.empty[Object])(x => util.Optional.of(x.asInstanceOf[Object]))
+          val cs = catalogStatistics(snap, filters)
+          val cols = new util.HashMap[NamedReference, ColumnStatistics]()
+          outSchema.fields.foreach { f =>
+            // bounds typed as Spark's own catalog statistics type them
+            cs.colStats.get(f.name).map(_.toPlanStat(f.name, f.dataType)).foreach { c =>
+              cols.put(org.apache.spark.sql.connector.expressions.Expressions.column(f.name),
+                new ColumnStatistics {
+                  override def distinctCount(): util.OptionalLong = long(c.distinctCount)
+                  override def nullCount(): util.OptionalLong = long(c.nullCount)
+                  override def min(): util.Optional[Object] = obj(c.min)
+                  override def max(): util.Optional[Object] = obj(c.max)
                 })
             }
-            out
+          }
+          new Statistics {
+            override def sizeInBytes(): util.OptionalLong = util.OptionalLong.of(cs.sizeInBytes.toLong)
+            override def numRows(): util.OptionalLong = long(cs.rowCount)
+            override def columnStats(): util.Map[NamedReference, ColumnStatistics] = cols
           }
         }
         override def toV1TableScan[T <: BaseRelation with TableScan](context: SQLContext): T =
@@ -233,15 +187,16 @@ case class GraftDsv2Table(t: GraftTable, identName: String,
     }
   }
 
-  /** Catalog-statistics rendering of the (file-pruned) snapshot for plan
-    * paths that LEAVE DSv2 — the [[graft.plans.GraftNativeScan]] parquet
-    * swap: the same metadata-only numbers `estimateStatistics` reports
-    * (manifest row/byte totals, merged null counts and exact-numeric
-    * bounds, ANALYZE's `stats.ndv.*` distinct counts), repackaged as a
-    * `CatalogStatistics` the spliced `LogicalRelation.computeStats` serves
-    * to the CBO. Without this the swap silently drops column statistics
-    * and cost-based filter/join estimation never sees an analyzed graft
-    * table on the hot (vectorized) read path. Zero file IO. */
+  /** THE column-statistics derivation of the (file-pruned) snapshot:
+    * manifest row/byte totals, merged null counts and exact-numeric
+    * bounds, ANALYZE's `stats.ndv.*` distinct counts and `stats.hist.*`
+    * histograms, as the `CatalogStatistics` the
+    * [[graft.plans.GraftNativeScan]] swap's spliced
+    * `LogicalRelation.computeStats` serves to the CBO. The V1 scan's
+    * `estimateStatistics` reports the same numbers (histograms aside).
+    * Without this the swap silently drops column statistics and cost-based
+    * filter/join estimation never sees an analyzed graft table on the hot
+    * (vectorized) read path. Zero file IO. */
   private[graft] def catalogStatistics(snap: graft.table.Snapshot, filters: Array[Filter]):
       org.apache.spark.sql.catalyst.catalog.CatalogStatistics = {
     import org.apache.spark.sql.catalyst.catalog.{CatalogColumnStat, CatalogStatistics}
@@ -353,14 +308,4 @@ case class GraftDsv2Table(t: GraftTable, identName: String,
       }
     }
   }
-}
-
-object GraftDsv2Table {
-  /** `spark.graft.runtime-filtering=true` turns on the join-time file
-    * pruning scan ([[graft.table.GraftRuntimeScan]]) for eligible
-    * snapshots — the star-join scale profile. Off by default: the
-    * projection-aware default path serves every snapshot shape. */
-  private[graft] def runtimeFilteringEnabled(
-      spark: org.apache.spark.sql.SparkSession): Boolean =
-    spark.conf.getOption("spark.graft.runtime-filtering").exists(_.toBoolean)
 }

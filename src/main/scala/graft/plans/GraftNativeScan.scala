@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Alias, And, Expression}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -29,7 +28,7 @@ import graft.table.Snapshot
   * the rewrite never descends into them. Writes are safe by construction:
   * a `V2WriteCommand`'s target table is a field, not a child.
   */
-case class GraftNativeScan(spark: SparkSession) extends Rule[LogicalPlan] {
+object GraftNativeScan extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = rewrite(plan)
 
@@ -46,16 +45,9 @@ case class GraftNativeScan(spark: SparkSession) extends Rule[LogicalPlan] {
     case other => other.mapChildren(rewrite)
   }
 
-  /** The graft table and the ONE snapshot the swap reads and describes,
-    * unless the relation stays on the DSv2 path because the runtime-
-    * filtering scan would serve it ([[graft.table.GraftRuntimeScan]] —
-    * join-time file pruning needs `BatchScanExec`, which only a real DSv2
-    * scan plans). */
+  /** The graft table and the ONE snapshot the swap reads and describes. */
   private def swappable(r: DataSourceV2Relation): Option[(GraftDsv2Table, Snapshot)] =
-    graftOf(r).map(g => g -> g.snapshotForRead).filterNot { case (g, snap) =>
-      graft.catalog.GraftDsv2Table.runtimeFilteringEnabled(spark) &&
-        graft.table.GraftRuntimeScan.eligible(g.t, snap)
-    }
+    graftOf(r).map(g => g -> g.snapshotForRead)
 
   private def graftOf(r: DataSourceV2Relation): Option[GraftDsv2Table] = r.table match {
     case g: GraftDsv2Table => Some(g)

@@ -385,9 +385,9 @@ class RestSnapshotLog(tableRoot: String, client: RestCatalogClient,
 
   /** Engine-side consumption of server scan planning: the planned DATA
     * file paths for this table ([[RestCatalogClient.planScan]] drains any
-    * plan-task pages). [[graft.table.GraftTable]] calls this under
-    * `spark.graft.plan-mode=server` so the engine's own catalog-routed
-    * reads exercise the same endpoint foreign engines use. */
+    * plan-task pages). [[graft.table.GraftTable]] calls this for every
+    * read of a REST-backed table, so the engine's own catalog-routed reads
+    * exercise the same endpoint foreign engines use. */
   def planDataFiles(filterJson: Option[String], snapshotId: Option[Long]): Seq[String] =
     client.planScan(ns, table, filterJson, snapshotId).map(_.dataFile)
 }

@@ -1195,8 +1195,9 @@ class RestCatalogServer(val warehouse: String,
   /** One page of spec scan planning — serves BOTH the /plan route (offset
     * 0, with `plan-status`) and the /tasks fetch route (offset from the
     * token). Prunes the snapshot's file list against the filter with the
-    * SAME session-free pruner the engine's own reads use
-    * ([[graft.table.GraftTable.pruneFilesByStats]]), then inlines at most
+    * SAME pruning body the engine's own reads use
+    * ([[graft.table.GraftTable.pruneFilesByStats]], minus the session's
+    * Spark-eval fallback for bucket literals), then inlines at most
     * [[planPageSize]] FileScanTasks; the remainder rides behind one
     * chained `plan-tasks` token per page. delete-files are repeated per
     * page because `delete-file-references` index into the SAME response's

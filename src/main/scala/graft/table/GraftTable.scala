@@ -251,12 +251,12 @@ class GraftTable private (val spark: SparkSession, rawPath: String,
         GraftTable.canonCol(dels("file_path")) &&
         unioned("_graft_pos") === dels("pos")
       val delBytes = s.deleteFiles.map(_.bytes).sum
-      if (delBytes <= morBroadcastThreshold(s))
+      if (delBytes <= morBroadcastThreshold)
         unioned.join(broadcast(dels), cond, "left_anti")
       else {
         GraftTable.logger.warn(
           s"table $path carries $delBytes bytes of positional-delete files " +
-            s"(threshold ${morBroadcastThreshold(s)}): applying deletes as a " +
+            s"(threshold $morBroadcastThreshold): applying deletes as a " +
             "SHUFFLED anti-join — run rewrite_position_delete_files to " +
             "compact them and restore the broadcast plan")
         unioned.join(dels.hint("shuffle_hash"), cond, "left_anti")
@@ -266,18 +266,15 @@ class GraftTable private (val spark: SparkSession, rawPath: String,
   }
 
   /** Broadcast ceiling for merge-on-read delete application, in bytes of
-    * accumulated positional-delete files: the table property wins, else
-    * Spark's own auto-broadcast threshold (disabled → never broadcast). */
-  private def morBroadcastThreshold(s: Snapshot): Long =
-    s.properties.get("graft.mor.broadcast-threshold-bytes")
-      .flatMap(v => scala.util.Try(v.trim.toLong).toOption)
-      .getOrElse {
-        val conf = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB").trim
-        if (conf.startsWith("-")) 0L
-        else scala.util.Try(
-          org.apache.spark.network.util.JavaUtils.byteStringAsBytes(conf))
-          .getOrElse(10L * 1024 * 1024)
-      }
+    * accumulated positional-delete files: Spark's own auto-broadcast
+    * threshold (disabled → never broadcast). */
+  private def morBroadcastThreshold: Long = {
+    val conf = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB").trim
+    if (conf.startsWith("-")) 0L
+    else scala.util.Try(
+      org.apache.spark.network.util.JavaUtils.byteStringAsBytes(conf))
+      .getOrElse(10L * 1024 * 1024)
+  }
 
   /** Current-schema column name of an equality-delete key: resolved by
     * FIELD ID (rename-proof — Iceberg's equality_ids) when recorded, by the
@@ -2132,37 +2129,12 @@ class GraftTable private (val spark: SparkSession, rawPath: String,
     * PROVES no row can match its [min,max] bounds; unknown filter shapes and
     * stat-less files are kept. The same metadata-only pruning Iceberg's
     * ScanBuilder does from manifest column bounds (reference `main.tf:803`;
-    * SURVEY.md §4 row 1). Hidden-partitioning transform bounds prune too:
-    * a filter on the SOURCE column maps into the transform domain —
-    * equality/IN through any transform, ranges through order-preserving
-    * ones — and checks the per-file transform-value bounds. */
+    * SURVEY.md §4 row 1). The body is [[GraftTable.pruneFilesByStats]]; a
+    * table instance adds its session's Spark eval for the bucket literals
+    * (float/decimal/NTZ renderings) no pure evaluator covers. */
   private[graft] def pruneFiles(s: Snapshot,
-      filters: Seq[org.apache.spark.sql.sources.Filter]): Seq[DataFile] = {
-    import org.apache.spark.sql.sources._
-    // base-column min/max/null-count half: shared, session-free core
-    // (GraftTable.statsExcluded) — also the REST scan-planner's pruner
-    val cmp = GraftTable.comparatorOf(s) // schema parsed once per prune pass
-    def excluded(f: DataFile, flt: Filter): Boolean =
-      GraftTable.statsExcluded(cmp, f, flt)
-
-    // ---- transform-domain pruning ----------------------------------------
-    val pruneSchema = stripIds(schemaOf(s, s.currentSchemaId))
-    val transforms = GraftTable.prunableTransforms(s.properties, pruneSchema)
-    // one evaluation per (transform, literal) per call — not per file.
-    // Order-preserving transforms and bucket hashes of plainly-rendered
-    // literal types evaluate session-free (the same pure path the REST
-    // planner uses); remaining bucket literals (float/decimal/NTZ
-    // renderings) still take a driver-local Spark eval.
-    val litCache = scala.collection.mutable.Map.empty[(String, Any), Option[String]]
-    val srcType = pruneSchema.fields.map(f => f.name -> f.dataType).toMap
-    def tlit(t: PartitionTransform, v: Any): Option[String] =
-      litCache.getOrElseUpdate((t.canonical, v),
-        PartitionTransform.evalOrderPreserving(t, v)
-          .orElse(PartitionTransform.evalBucket(t, v, srcType.get(t.source)))
-          .orElse(transformLiteral(t, v)))
-    s.files.filter(f => !filters.exists(fl =>
-      excluded(f, fl) || GraftTable.transformExcluded(transforms, tlit, f, fl)))
-  }
+      filters: Seq[org.apache.spark.sql.sources.Filter]): Seq[DataFile] =
+    GraftTable.pruneFilesByStats(s, filters, transformLiteral)
 
   /** Evaluate a transform over a filter literal, string-canonicalized the
     * same way the per-file stats were (cast to string under the session
@@ -2174,48 +2146,45 @@ class GraftTable private (val spark: SparkSession, rawPath: String,
 
   /** Pruned + projected read of a snapshot for the DSv2 V1 fallback scan
     * (this is the production read path for catalog-routed SELECTs — the
-    * [[graft.plans.GraftNativeScan]] swap lands here). */
+    * [[graft.plans.GraftNativeScan]] swap lands here). The file list is
+    * SERVER-planned when the table sits behind a REST catalog, locally
+    * pruned otherwise. */
   private[graft] def readPruned(s: Snapshot,
       filters: Seq[org.apache.spark.sql.sources.Filter]): DataFrame =
-    readFilesOf(s, planFiles(s, filters), withMeta = false)
-
-  /** The snapshot's pruned file list — SERVER-planned when the session
-    * opts in, locally pruned otherwise. */
-  private[graft] def planFiles(s: Snapshot,
-      filters: Seq[org.apache.spark.sql.sources.Filter]): Seq[DataFile] =
-    serverPlanned(s, filters).getOrElse(pruneFiles(s, filters))
+    readFilesOf(s, serverPlanned(s, filters).getOrElse(pruneFiles(s, filters)),
+      withMeta = false)
 
   /** Dogfood of the REST catalog's scan-planning endpoint (VERDICT r15 #1
     * — the surface foreign engines use must also be the surface the engine
-    * itself exercises, or it rots). Under `spark.graft.plan-mode=server`,
-    * a REST-catalog-backed table asks the CATALOG for its file list
-    * (`POST …/tables/{t}/plan`, filters serialized as Iceberg expression
-    * JSON) instead of pruning the snapshot log itself — the reference's
-    * IRC-centric split (`main.tf:795-801`): the catalog holds the bounds,
-    * the catalog plans. At 100 TB that converts per-engine manifest
-    * listing into one metadata-sized (paged) response. Falls back to local
-    * pruning on ANY failure (4xx/5xx/transport/path mismatch): planning is
-    * an optimization, never a correctness dependency. The server prunes
-    * through the SAME shared path the engine uses locally — column bounds
-    * plus order-preserving transform domains via
-    * `PartitionTransform.evalOrderPreserving`/`transformExcluded` (r17) —
-    * so its soundness rides that shared evaluator's exactness, not a
-    * superset-by-construction argument; the parquet scan's own row-group
-    * pruning still applies either way. */
+    * itself exercises, or it rots). A REST-catalog-backed table asks the
+    * CATALOG for its file list (`POST …/tables/{t}/plan`, filters
+    * serialized as Iceberg expression JSON) instead of pruning the
+    * snapshot log itself — the reference's IRC-centric split
+    * (`main.tf:795-801`): the catalog holds the bounds, the catalog plans.
+    * At 100 TB that converts per-engine manifest listing into one
+    * metadata-sized (paged) response. Falls back to local pruning on ANY
+    * failure (4xx/5xx/transport, or a response naming a path the snapshot
+    * doesn't hold or naming one twice): planning is an optimization, never
+    * a correctness dependency. The server prunes through the SAME
+    * [[GraftTable.pruneFilesByStats]] body the engine uses locally, so its
+    * soundness rides that shared evaluator's exactness; the parquet scan's
+    * own row-group pruning still applies either way. */
   private def serverPlanned(s: Snapshot,
       filters: Seq[org.apache.spark.sql.sources.Filter]): Option[Seq[DataFile]] =
     log match {
-      case r: graft.rest.RestSnapshotLog if planModeServer =>
+      case r: graft.rest.RestSnapshotLog =>
         try {
           val planned = r.planDataFiles(
             graft.rest.IcebergFilterJson.of(filters), Some(s.version))
+            .map(GraftTable.canonStr)
           val byCanon = s.files.map(f =>
             GraftTable.canonStr(resolve(f.path)) -> f).toMap
-          val hits = planned.map(p => byCanon.get(GraftTable.canonStr(p)))
-          if (hits.exists(_.isEmpty)) {
-            // a path the snapshot doesn't know: never guess — plan locally
+          val hits = planned.map(byCanon.get)
+          if (hits.exists(_.isEmpty) || planned.distinct.size != planned.size) {
+            // a path the snapshot doesn't know, or one listed twice (its
+            // rows would be read twice): never guess — plan locally
             GraftTable.logger.warn(
-              s"plan endpoint returned unknown file(s) for $path; using local pruning")
+              s"plan endpoint returned unknown or repeated file(s) for $path; using local pruning")
             None
           } else {
             GraftTable.serverPlanCount.incrementAndGet()
@@ -2229,10 +2198,6 @@ class GraftTable private (val spark: SparkSession, rawPath: String,
         }
       case _ => None
     }
-
-  private def planModeServer: Boolean =
-    scala.util.Try(spark.sessionState.conf
-      .getConfString("spark.graft.plan-mode", "local")).toOption.contains("server")
 }
 
 object GraftTable {
@@ -2245,11 +2210,10 @@ object GraftTable {
   private[graft] val serverPlanCount = new java.util.concurrent.atomic.AtomicLong()
 
   // ---- session-free stats pruning ------------------------------------
-  // The base-column half of [[GraftTable.pruneFiles]], factored out so the
+  // The pruning body behind [[GraftTable.pruneFiles]], session-free so the
   // REST server's spec scan-planning endpoint (which runs WITHOUT a
   // SparkSession) prunes from the same per-file bounds with the same
-  // conservatism. The transform-domain half stays on the class — it
-  // evaluates transform literals through a driver-local Spark job.
+  // conservatism.
 
   /** EXACT numeric compare over stat/literal strings. BigDecimal first:
     * 64-bit integral values above 2^53 (snowflake-style ids ~1e18) are
@@ -2519,21 +2483,28 @@ object GraftTable {
     go(flt)
   }
 
-  /** Stats-only file pruning over a snapshot — the Spark-free entry the
-    * REST scan-planning endpoint uses. Hidden-partitioning bounds prune
-    * here too (VERDICT r16 #3): order-preserving transforms (truncate,
-    * years/months/days/hours) evaluate session-free, so a foreign engine
-    * planning through the catalog prunes a days()-partitioned table like
-    * the engine does locally; a malformed transform property just skips
-    * the transform pass (plan less, never fail the plan). */
+  /** Stats-only file pruning over a snapshot — THE pruning body: local
+    * reads reach it through [[GraftTable.pruneFiles]], the REST
+    * scan-planning endpoint calls it directly (no session, so no
+    * `fallback`). Hidden-partitioning bounds prune here too (VERDICT r16
+    * #3): order-preserving transforms (truncate, years/months/days/hours)
+    * and bucket hashes of plainly-rendered literals evaluate session-free,
+    * so a foreign engine planning through the catalog prunes like the
+    * engine does locally; `fallback` evaluates the transform literals
+    * those leave unlifted (None = no claim, keep the file). A malformed
+    * transform property just skips the transform pass (plan less, never
+    * fail the plan). */
   private[graft] def pruneFilesByStats(s: Snapshot,
-      filters: Seq[org.apache.spark.sql.sources.Filter]): Seq[DataFile] = {
+      filters: Seq[org.apache.spark.sql.sources.Filter],
+      fallback: (PartitionTransform, Any) => Option[String] = (_, _) => None)
+      : Seq[DataFile] = {
     // schema JSON parsed ONCE per call (not per file × filter, and not
     // once for the comparator plus once for the transforms — review r17)
     val schema = DataType.fromJson(
       s.schemas(s.currentSchemaId.toString)).asInstanceOf[StructType]
     val cmp = new StatsComparator(schema)
     val transforms = prunableTransforms(s.properties, schema)
+    // one evaluation per (transform, literal) per call — not per file
     val litCache = scala.collection.mutable.Map.empty[(String, Any), Option[String]]
     val srcType = schema.fields.map(f => f.name -> f.dataType).toMap
     def tlit(t: PartitionTransform, v: Any): Option[String] =
@@ -2542,7 +2513,8 @@ object GraftTable {
           // bucket equality/IN prunes over the wire too: the hash of a
           // plainly-rendered literal is session-free (property-tested
           // against the Spark column eval); None = no claim, keep
-          .orElse(PartitionTransform.evalBucket(t, v, srcType.get(t.source))))
+          .orElse(PartitionTransform.evalBucket(t, v, srcType.get(t.source)))
+          .orElse(fallback(t, v)))
     s.files.filter(f => !filters.exists(flt =>
       statsExcluded(cmp, f, flt) || transformExcluded(transforms, tlit, f, flt)))
   }

@@ -12,6 +12,33 @@ class PlanDisciplineSpec extends SparkSpec {
     df.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
 
+  /** Run `body` with session confs set, restoring the previous values. */
+  private def withConfs[A](confs: (String, String)*)(body: => A): A = {
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
+
+  /** Star tables behind a warehouse catalog: an 80k-row fact RANGE-clustered
+    * into 8 files with disjoint `k` bounds, and a 100-row dimension whose
+    * category "x" keeps 5 keys, all inside the first fact file's range. */
+  private lazy val star: Unit = {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.when
+    val wh = SparkSpec.warehouse
+    spark.conf.set("spark.sql.catalog.graftpd", "graft.catalog.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.graftpd.warehouse", wh)
+    graft.table.GraftTable.create(spark, s"$wh/db/pd_fact", spark.range(80000)
+      .select(($"id" % 8000).as("k"), ($"id" * 7 % 100).as("v"))
+      .repartitionByRange(8, $"k"))
+    graft.table.GraftTable.create(spark, s"$wh/db/pd_dim", spark.range(100)
+      .select(($"id" * 80).as("k"), when($"id" < 5, "x").otherwise("y").as("cat"))
+      .coalesce(1))
+  }
+
   test("q01: the shipdate filter is pushed into the parquet scan") {
     val plan = planOf(Relational.q01(spark, sf))
     assert(plan.contains("PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate"), plan)
@@ -356,19 +383,19 @@ class PlanDisciplineSpec extends SparkSpec {
     t.delete($"id" % 10 === 0)
     val broadcastRows = t.read.orderBy("id").collect()
 
-    // shrink the gate below the accumulated delete bytes: the same
-    // snapshot must now plan the shuffled fallback
-    t.setProperties(Map("graft.mor.broadcast-threshold-bytes" -> "1"))
-    val t2 = graft.table.GraftTable.load(spark, dir + "/t")
-    val df = t2.read
-    df.collect()
-    val plan = df.queryExecution.executedPlan.toString
-    assert(!plan.contains("BroadcastHashJoin"),
-      s"gate ignored — still broadcasting:\n$plan")
-    assert("ShuffledHashJoin .*LeftAnti".r.findAllIn(plan).nonEmpty,
-      s"expected a shuffled hash anti-join past the gate:\n$plan")
-    assert(df.orderBy("id").collect().toSeq == broadcastRows.toSeq,
-      "shuffled fallback changed the result")
+    // shrink Spark's broadcast threshold below the accumulated delete
+    // bytes: the same snapshot must now plan the shuffled fallback
+    withConfs("spark.sql.autoBroadcastJoinThreshold" -> "1") {
+      val df = t.read
+      df.collect()
+      val plan = df.queryExecution.executedPlan.toString
+      assert(!plan.contains("BroadcastHashJoin"),
+        s"gate ignored — still broadcasting:\n$plan")
+      assert("ShuffledHashJoin .*LeftAnti".r.findAllIn(plan).nonEmpty,
+        s"expected a shuffled hash anti-join past the gate:\n$plan")
+      assert(df.orderBy("id").collect().toSeq == broadcastRows.toSeq,
+        "shuffled fallback changed the result")
+    }
   }
 
   test("AQE splits the skewed partition of a PLAIN sort-merge join at runtime") {
@@ -408,5 +435,94 @@ class PlanDisciplineSpec extends SparkSpec {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None)    => spark.conf.unset(k)
     }
+  }
+
+  test("a catalog SELECT plans as FileScan parquet") {
+    star
+    val df = spark.sql("SELECT k, v FROM graftpd.db.pd_fact WHERE k = 42")
+    assert(df.collect().length == 10) // 80000/8000 rows per key
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("FileScan parquet") && !plan.contains("BatchScan"), plan)
+    // the swapped scan reads only the files whose k bounds can hold 42
+    assert(df.inputFiles.length <= 2, s"static pruning missing: ${df.inputFiles.toSeq}")
+  }
+
+  test("Spark's bloom-filter runtime filter injects onto the swapped scan for shuffle joins") {
+    // When the star join must SHUFFLE (dim too big to broadcast — forced
+    // here), the optimizer builds a bloom filter from the dim's selective
+    // side and applies might_contain on the fact BEFORE the exchange,
+    // shrinking the shuffle. Works through the native-scan swap because the
+    // swapped relation is a plain stats-bearing parquet scan.
+    star
+    val q =
+      """SELECT f.k, f.v, d.cat FROM graftpd.db.pd_fact f
+        |JOIN graftpd.db.pd_dim d ON f.k = d.k WHERE d.cat = 'x'""".stripMargin
+    withConfs(
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "32",
+        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB") {
+      val df = spark.sql(q)
+      val optimized = df.queryExecution.optimizedPlan.toString
+      assert(optimized.contains("might_contain"),
+        s"expected an injected bloom runtime filter in:\n$optimized")
+      val rows = df.collect().map(_.toString).sorted.toSeq
+      spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "false")
+      val plain = spark.sql(q)
+      assert(!plain.queryExecution.optimizedPlan.toString.contains("might_contain"))
+      assert(plain.collect().map(_.toString).sorted.toSeq == rows,
+        "bloom-filtered result diverged from the plain join")
+    }
+  }
+
+  test("the V1 scan and the swap report the same statistics for an ANALYZEd table") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.connector.read.SupportsReportStatistics
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    star
+    spark.sql("DROP TABLE IF EXISTS graftpd.db.pd_stats")
+    spark.sql("CREATE TABLE graftpd.db.pd_stats (i INT, l BIGINT, d DOUBLE, s STRING)")
+    spark.sql("INSERT INTO graftpd.db.pd_stats SELECT CAST(id AS INT), " +
+      "IF(id % 4 = 0, NULL, id * 3), id / 2.0, concat('s', id % 7) FROM range(200)")
+    spark.sql("INSERT INTO graftpd.db.pd_stats SELECT CAST(id AS INT), id, " +
+      "IF(id % 5 = 0, NULL, id * 1.5), NULL FROM range(1000, 1100)")
+    spark.sql("CALL graftpd.system.analyze_table('db.pd_stats')")
+    // the swap: the spliced parquet relation's catalog statistics
+    val swap = withConfs("spark.sql.cbo.enabled" -> "true") {
+      spark.table("graftpd.db.pd_stats").queryExecution.optimizedPlan
+        .collectFirst { case r: LogicalRelation => r.stats }
+        .getOrElse(fail("the catalog read was not swapped"))
+    }
+    // the V1 scan, built the way Spark's scan pushdown builds it
+    val t = graft.table.GraftTable.load(spark, s"${SparkSpec.warehouse}/db/pd_stats")
+    val v1 = graft.catalog.GraftDsv2Table(t, "pd_stats")
+      .newScanBuilder(org.apache.spark.sql.util.CaseInsensitiveStringMap.empty())
+      .build().asInstanceOf[SupportsReportStatistics].estimateStatistics()
+    assert(swap.rowCount.contains(BigInt(300)))
+    assert(v1.numRows().getAsLong == 300L)
+    type Stat = (Option[BigInt], Option[BigInt], Option[Any], Option[Any])
+    val sw: Map[String, Stat] = swap.attributeStats.map { case (a, c) =>
+      a.name -> (c.nullCount, c.distinctCount, c.min, c.max) }.toMap
+    val vs: Map[String, Stat] = v1.columnStats().asScala.map { case (k, c) =>
+      def big(v: java.util.OptionalLong) =
+        if (v.isPresent) Some(BigInt(v.getAsLong)) else None
+      k.fieldNames().mkString(".") ->
+        (big(c.nullCount()), big(c.distinctCount()),
+          Option(c.min().orElse(null)), Option(c.max().orElse(null)))
+    }.toMap
+    assert(sw.keySet == Set("i", "l", "d", "s") && vs.keySet == sw.keySet,
+      s"swap columns ${sw.keySet}, V1 columns ${vs.keySet}")
+    sw.foreach { case (name, c) =>
+      val o = vs(name)
+      assert(o._1 == c._1, s"$name nulls: V1 ${o._1} swap ${c._1}")
+      assert(o._2 == c._2, s"$name NDV: V1 ${o._2} swap ${c._2}")
+      // same value AND the same runtime type (an INT bound is an Integer)
+      Seq("min" -> (o._3, c._3), "max" -> (o._4, c._4)).foreach { case (what, (a, b)) =>
+        assert(a == b && a.map(_.getClass) == b.map(_.getClass),
+          s"$name $what: V1 $a (${a.map(_.getClass)}) swap $b (${b.map(_.getClass)})")
+      }
+    }
+    assert(sw("i")._3.contains(0) && sw("i")._4.contains(1099))
+    assert(sw("l")._1.contains(BigInt(50)) && sw("s")._1.contains(BigInt(100)))
   }
 }

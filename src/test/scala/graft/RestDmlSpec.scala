@@ -166,28 +166,75 @@ class RestDmlSpec extends SparkSpec {
     } finally ttlServer.stop()
   }
 
+  /** The same warehouse behind a plain (non-REST) graft catalog: its reads
+    * prune the snapshot log locally, the baseline server planning must
+    * match. */
+  private def initLocal(): Unit = {
+    spark.conf.set("spark.sql.catalog.graftl", "graft.catalog.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.graftl.warehouse", server.warehouse)
+  }
+
+  private def canon(ps: Set[String]): Set[String] = ps.map(graft.table.GraftTable.canonStr)
+
   test("plan-mode=server: the full MERGE/UPDATE/DELETE battery stays exact") {
     init()
-    spark.conf.set("spark.graft.plan-mode", "server")
-    try {
-      spark.sql("DROP TABLE IF EXISTS graftr.dml.sbatt")
-      spark.sql("CREATE TABLE graftr.dml.sbatt (id BIGINT, v STRING)")
-      spark.sql("INSERT INTO graftr.dml.sbatt VALUES (1, 'a'), (2, 'b'), (3, 'c')")
-      spark.sql("""
-        MERGE INTO graftr.dml.sbatt t
-        USING (SELECT * FROM VALUES (2, 'B2'), (4, 'd') AS s(id, v)) s
-        ON t.id = s.id
-        WHEN MATCHED THEN UPDATE SET v = s.v
-        WHEN NOT MATCHED THEN INSERT (id, v) VALUES (s.id, s.v)""")
-      spark.sql("UPDATE graftr.dml.sbatt SET v = 'A1' WHERE id = 1")
-      spark.sql("DELETE FROM graftr.dml.sbatt WHERE id = 3")
-      assert(spark.sql("SELECT id, v FROM graftr.dml.sbatt ORDER BY id").collect()
-        .map(r => (r.getLong(0), r.getString(1))).toSeq ==
-        Seq((1L, "A1"), (2L, "B2"), (4L, "d")))
-      // time travel in server mode plans the OLD snapshot via the endpoint
-      assert(spark.sql("SELECT count(*) FROM graftr.dml.sbatt VERSION AS OF 1")
-        .collect()(0).getLong(0) == 3)
-    } finally spark.conf.unset("spark.graft.plan-mode")
+    spark.sql("DROP TABLE IF EXISTS graftr.dml.sbatt")
+    spark.sql("CREATE TABLE graftr.dml.sbatt (id BIGINT, v STRING)")
+    spark.sql("INSERT INTO graftr.dml.sbatt VALUES (1, 'a'), (2, 'b'), (3, 'c')")
+    spark.sql("""
+      MERGE INTO graftr.dml.sbatt t
+      USING (SELECT * FROM VALUES (2, 'B2'), (4, 'd') AS s(id, v)) s
+      ON t.id = s.id
+      WHEN MATCHED THEN UPDATE SET v = s.v
+      WHEN NOT MATCHED THEN INSERT (id, v) VALUES (s.id, s.v)""")
+    spark.sql("UPDATE graftr.dml.sbatt SET v = 'A1' WHERE id = 1")
+    spark.sql("DELETE FROM graftr.dml.sbatt WHERE id = 3")
+    assert(spark.sql("SELECT id, v FROM graftr.dml.sbatt ORDER BY id").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq ==
+      Seq((1L, "A1"), (2L, "B2"), (4L, "d")))
+    // time travel plans the OLD snapshot via the endpoint
+    assert(spark.sql("SELECT count(*) FROM graftr.dml.sbatt VERSION AS OF 1")
+      .collect()(0).getLong(0) == 3)
+  }
+
+  test("a catalog SELECT on a REST-backed table plans through the catalog by default") {
+    init()
+    spark.sql("DROP TABLE IF EXISTS graftr.dml.dflt")
+    spark.sql("CREATE TABLE graftr.dml.dflt (id BIGINT)")
+    spark.sql("INSERT INTO graftr.dml.dflt VALUES (1), (2)")
+    spark.sql("INSERT INTO graftr.dml.dflt VALUES (10), (11)")
+    // no session setting asks for it: the table's REST log alone decides
+    val before = graft.table.GraftTable.serverPlanCount.get()
+    assert(spark.sql("SELECT id FROM graftr.dml.dflt WHERE id > 5 ORDER BY id")
+      .collect().map(_.getLong(0)).toSeq == Seq(10L, 11L))
+    assert(graft.table.GraftTable.serverPlanCount.get() > before,
+      "a REST-backed read did not consult the plan endpoint")
+  }
+
+  test("a plan response that names a file twice is refused: each row is read once") {
+    init()
+    spark.sql("DROP TABLE IF EXISTS graftr.dml.dupplan")
+    spark.sql("CREATE TABLE graftr.dml.dupplan (id BIGINT)")
+    spark.sql("INSERT INTO graftr.dml.dupplan VALUES (1), (2)")
+    spark.sql("INSERT INTO graftr.dml.dupplan VALUES (3), (4)")
+    val client = new RestCatalogClient(server.uri, Some("engine-a:secret-a"), None)
+    val asked = new AtomicInteger()
+    val t = graft.table.GraftTable.load(spark, s"${server.warehouse}/dml/dupplan",
+      p => new graft.rest.RestSnapshotLog(p, client, Seq("dml"), "dupplan") {
+        // a catalog that repeats its first planned path
+        override def planDataFiles(filterJson: Option[String],
+            snapshotId: Option[Long]): Seq[String] = {
+          asked.incrementAndGet()
+          val planned = super.planDataFiles(filterJson, snapshotId)
+          planned ++ planned.take(1)
+        }
+      })
+    val before = graft.table.GraftTable.serverPlanCount.get()
+    val rows = t.readPruned(t.log.current, Seq.empty).collect().map(_.getLong(0)).sorted.toSeq
+    assert(asked.get() > 0, "the read never asked the catalog for a plan")
+    assert(rows == Seq(1L, 2L, 3L, 4L))
+    assert(graft.table.GraftTable.serverPlanCount.get() == before,
+      "a plan with a repeated file must not count as a server plan")
   }
 
   test("plan-mode=server: a dead/erroring plan endpoint falls back to local pruning") {
@@ -216,18 +263,17 @@ class RestDmlSpec extends SparkSpec {
     }
     // a RestSnapshotLog whose client points at a DEAD port: snapshot READS
     // still come from shared storage (the IRC split), but planScan throws —
-    // the read must fall back to local pruning, not fail
+    // the pruned read must fall back to local pruning, not fail
     val deadClient = new RestCatalogClient("http://127.0.0.1:1", None, Some("dead-token"))
     val t = graft.table.GraftTable.load(spark, loc,
       p => new graft.rest.RestSnapshotLog(p, deadClient, Seq("dml"), "fback"))
-    spark.conf.set("spark.graft.plan-mode", "server")
-    try {
-      val before = graft.table.GraftTable.serverPlanCount.get()
-      val rows = t.read.filter("id > 15").collect().map(_.getLong(0)).sorted.toSeq
-      assert(rows == Seq(20L, 21L))
-      assert(graft.table.GraftTable.serverPlanCount.get() == before,
-        "a dead endpoint cannot have produced a successful server plan")
-    } finally spark.conf.unset("spark.graft.plan-mode")
+    val before = graft.table.GraftTable.serverPlanCount.get()
+    val rows = t.readPruned(t.log.current,
+      Seq(org.apache.spark.sql.sources.GreaterThan("id", 15L)))
+      .collect().map(_.getLong(0)).sorted.toSeq
+    assert(rows == Seq(20L, 21L))
+    assert(graft.table.GraftTable.serverPlanCount.get() == before,
+      "a dead endpoint cannot have produced a successful server plan")
   }
 
   test("plan-mode=server: a filter the wire can't express still reads exactly") {
@@ -236,66 +282,61 @@ class RestDmlSpec extends SparkSpec {
     spark.sql("CREATE TABLE graftr.dml.inexpr (id BIGINT, v STRING)")
     spark.sql("INSERT INTO graftr.dml.inexpr VALUES (1, 'apple'), (2, 'banana')")
     spark.sql("INSERT INTO graftr.dml.inexpr VALUES (3, 'apricot'), (4, 'cherry')")
-    spark.conf.set("spark.graft.plan-mode", "server")
-    try {
-      // LIKE 'a%' pushes StringStartsWith, which IcebergFilterJson drops —
-      // the server plans a SUPERSET and the engine's own filter still
-      // applies over the returned rows
-      val rows = spark.sql(
-        "SELECT v FROM graftr.dml.inexpr WHERE v LIKE 'a%' ORDER BY v")
-        .collect().map(_.getString(0)).toSeq
-      assert(rows == Seq("apple", "apricot"))
-      // NOT <pred> drops whole (negation flips polarity): still exact
-      val neg = spark.sql(
-        "SELECT id FROM graftr.dml.inexpr WHERE NOT (id > 2) ORDER BY id")
-        .collect().map(_.getLong(0)).toSeq
-      assert(neg == Seq(1L, 2L))
-    } finally spark.conf.unset("spark.graft.plan-mode")
+    // LIKE 'a%' pushes StringStartsWith, which IcebergFilterJson drops —
+    // the server plans a SUPERSET and the engine's own filter still
+    // applies over the returned rows
+    val rows = spark.sql(
+      "SELECT v FROM graftr.dml.inexpr WHERE v LIKE 'a%' ORDER BY v")
+      .collect().map(_.getString(0)).toSeq
+    assert(rows == Seq("apple", "apricot"))
+    // NOT <pred> drops whole (negation flips polarity): still exact
+    val neg = spark.sql(
+      "SELECT id FROM graftr.dml.inexpr WHERE NOT (id > 2) ORDER BY id")
+      .collect().map(_.getLong(0)).toSeq
+    assert(neg == Seq(1L, 2L))
   }
 
   test("plan-mode=server: a catalog-routed SELECT builds its scan from the plan endpoint") {
     init()
+    initLocal()
     spark.sql("DROP TABLE IF EXISTS graftr.dml.srvplan")
     spark.sql("CREATE TABLE graftr.dml.srvplan (id BIGINT, v STRING)")
     // three commits -> multiple files with disjoint id ranges (prunable)
     spark.sql("INSERT INTO graftr.dml.srvplan VALUES (1, 'a'), (2, 'b')")
     spark.sql("INSERT INTO graftr.dml.srvplan VALUES (10, 'c'), (11, 'd')")
     spark.sql("INSERT INTO graftr.dml.srvplan VALUES (20, 'e'), (21, 'f')")
-    val q = "SELECT id, v FROM graftr.dml.srvplan WHERE id > 15 ORDER BY id"
-    val localRows = spark.sql(q).collect().map(_.getLong(0)).toSeq
-    val localFiles = spark.sql(q).inputFiles.toSet
+    val q = "SELECT id, v FROM %s.dml.srvplan WHERE id > 15 ORDER BY id"
+    val localRows = spark.sql(q.format("graftl")).collect().map(_.getLong(0)).toSeq
+    val localFiles = spark.sql(q.format("graftl")).inputFiles.toSet
     assert(localRows == Seq(20L, 21L))
 
     val before = graft.table.GraftTable.serverPlanCount.get()
-    spark.conf.set("spark.graft.plan-mode", "server")
-    try {
-      val serverRows = spark.sql(q).collect().map(_.getLong(0)).toSeq
-      val serverFiles = spark.sql(q).inputFiles.toSet
-      // 1. the read PROVABLY planned through the endpoint (no silent fallback)
-      assert(graft.table.GraftTable.serverPlanCount.get() > before,
-        "read did not consult the plan endpoint")
-      // 2. pruning stays exact: same rows, same files as local planning
-      assert(serverRows == localRows)
-      assert(serverFiles == localFiles)
-      // 3. the scan's file list IS the endpoint's response for this filter
-      val client = new RestCatalogClient(server.uri, Some("engine-a:secret-a"), None)
-      val plannedFiles = client.planScan(Seq("dml"), "srvplan",
-        Some("""{"type":"gt","term":"id","value":15}""")).map(_.dataFile).toSet
-      def canon(ps: Set[String]) = ps.map(graft.table.GraftTable.canonStr)
-      assert(canon(serverFiles) == canon(plannedFiles),
-        s"scan read $serverFiles but the endpoint planned $plannedFiles")
-      assert(plannedFiles.size < canon(spark.sql(
-        "SELECT * FROM graftr.dml.srvplan").inputFiles.toSet).size,
-        "filter pruned nothing - the equality above would be vacuous")
+    val serverRows = spark.sql(q.format("graftr")).collect().map(_.getLong(0)).toSeq
+    val serverFiles = spark.sql(q.format("graftr")).inputFiles.toSet
+    // 1. the read PROVABLY planned through the endpoint (no silent fallback)
+    assert(graft.table.GraftTable.serverPlanCount.get() > before,
+      "read did not consult the plan endpoint")
+    // 2. pruning stays exact: same rows, same files as local planning
+    assert(serverRows == localRows)
+    assert(canon(serverFiles) == canon(localFiles))
+    // 3. the scan's file list IS the endpoint's response for this filter
+    val client = new RestCatalogClient(server.uri, Some("engine-a:secret-a"), None)
+    val plannedFiles = client.planScan(Seq("dml"), "srvplan",
+      Some("""{"type":"gt","term":"id","value":15}""")).map(_.dataFile).toSet
+    assert(canon(serverFiles) == canon(plannedFiles),
+      s"scan read $serverFiles but the endpoint planned $plannedFiles")
+    assert(plannedFiles.size < canon(spark.sql(
+      "SELECT * FROM graftr.dml.srvplan").inputFiles.toSet).size,
+      "filter pruned nothing - the equality above would be vacuous")
 
-      // MOR correctness in server mode: deletes still bite
-      spark.sql("DELETE FROM graftr.dml.srvplan WHERE id = 20")
-      assert(spark.sql(q).collect().map(_.getLong(0)).toSeq == Seq(21L))
-    } finally spark.conf.unset("spark.graft.plan-mode")
+    // MOR correctness with server planning: deletes still bite
+    spark.sql("DELETE FROM graftr.dml.srvplan WHERE id = 20")
+    assert(spark.sql(q.format("graftr")).collect().map(_.getLong(0)).toSeq == Seq(21L))
   }
 
   test("plan-mode=server: timestamp range predicates prune SERVER-side (VERDICT r16 #1)") {
     init()
+    initLocal()
     spark.sql("DROP TABLE IF EXISTS graftr.dml.tsplan")
     spark.sql("CREATE TABLE graftr.dml.tsplan (id BIGINT, ev TIMESTAMP)")
     // three commits with disjoint event-time ranges — the dominant 100 TB
@@ -307,35 +348,31 @@ class RestDmlSpec extends SparkSpec {
       "(3, TIMESTAMP'2026-02-01 00:00:00'), (4, TIMESTAMP'2026-02-01 12:00:00')")
     spark.sql("INSERT INTO graftr.dml.tsplan VALUES " +
       "(5, TIMESTAMP'2026-03-01 00:00:00'), (6, TIMESTAMP'2026-03-01 12:00:00')")
-    val q = "SELECT id FROM graftr.dml.tsplan " +
+    val q = "SELECT id FROM %s.dml.tsplan " +
       "WHERE ev >= TIMESTAMP'2026-02-15 00:00:00' ORDER BY id"
-    val localRows = spark.sql(q).collect().map(_.getLong(0)).toSeq
-    val localFiles = spark.sql(q).inputFiles.toSet
+    val localRows = spark.sql(q.format("graftl")).collect().map(_.getLong(0)).toSeq
+    val localFiles = spark.sql(q.format("graftl")).inputFiles.toSet
     assert(localRows == Seq(5L, 6L))
-    val allFiles = spark.sql("SELECT * FROM graftr.dml.tsplan").inputFiles.toSet
+    val allFiles = spark.sql("SELECT * FROM graftl.dml.tsplan").inputFiles.toSet
     assert(localFiles.size < allFiles.size, "local pruning must already prune")
 
     val before = graft.table.GraftTable.serverPlanCount.get()
-    spark.conf.set("spark.graft.plan-mode", "server")
-    try {
-      val serverRows = spark.sql(q).collect().map(_.getLong(0)).toSeq
-      val serverFiles = spark.sql(q).inputFiles.toSet
-      assert(graft.table.GraftTable.serverPlanCount.get() > before,
-        "read did not consult the plan endpoint")
-      assert(serverRows == localRows)
-      // the SERVER pruned (planned < full) and exactly as well as local
-      assert(serverFiles == localFiles,
-        s"server planned $serverFiles, local pruned $localFiles")
-      // raw endpoint check with the emitter's own canonical literal
-      val client = new RestCatalogClient(server.uri, Some("engine-a:secret-a"), None)
-      val lit = graft.table.GraftTable.tsCanon(
-        java.time.Instant.parse("2026-02-15T00:00:00Z").toEpochMilli * 1000L)
-      val planned = client.planScan(Seq("dml"), "tsplan",
-        Some(s"""{"type":"gt-eq","term":"ev","value":"$lit"}""")).map(_.dataFile).toSet
-      def canon(ps: Set[String]) = ps.map(graft.table.GraftTable.canonStr)
-      assert(canon(planned) == canon(localFiles),
-        s"endpoint planned $planned, local pruned $localFiles")
-    } finally spark.conf.unset("spark.graft.plan-mode")
+    val serverRows = spark.sql(q.format("graftr")).collect().map(_.getLong(0)).toSeq
+    val serverFiles = spark.sql(q.format("graftr")).inputFiles.toSet
+    assert(graft.table.GraftTable.serverPlanCount.get() > before,
+      "read did not consult the plan endpoint")
+    assert(serverRows == localRows)
+    // the SERVER pruned (planned < full) and exactly as well as local
+    assert(canon(serverFiles) == canon(localFiles),
+      s"server planned $serverFiles, local pruned $localFiles")
+    // raw endpoint check with the emitter's own canonical literal
+    val client = new RestCatalogClient(server.uri, Some("engine-a:secret-a"), None)
+    val lit = graft.table.GraftTable.tsCanon(
+      java.time.Instant.parse("2026-02-15T00:00:00Z").toEpochMilli * 1000L)
+    val planned = client.planScan(Seq("dml"), "tsplan",
+      Some(s"""{"type":"gt-eq","term":"ev","value":"$lit"}""")).map(_.dataFile).toSet
+    assert(canon(planned) == canon(localFiles),
+      s"endpoint planned $planned, local pruned $localFiles")
   }
 
   test("client drains an ASYNC-planning catalog identically to the sync leg") {
@@ -358,20 +395,17 @@ class RestDmlSpec extends SparkSpec {
       val viaSync = syncClient.planScan(Seq("dml"), "asyncplan", filter)
       assert(viaAsync.nonEmpty && viaAsync.toSet == viaSync.toSet,
         s"async $viaAsync vs sync $viaSync")
-      // and the engine's plan-mode=server read path works through it too
+      // and the engine's server-planned read path works through it too
       spark.conf.set("spark.sql.catalog.graftasync", "graft.catalog.GraftCatalog")
       spark.conf.set("spark.sql.catalog.graftasync.uri", async.uri)
       spark.conf.set("spark.sql.catalog.graftasync.credential", "engine-a:secret-a")
-      spark.conf.set("spark.graft.plan-mode", "server")
-      try {
-        val before = graft.table.GraftTable.serverPlanCount.get()
-        val rows = spark.sql(
-          "SELECT id FROM graftasync.dml.asyncplan WHERE id > 5 ORDER BY id")
-          .collect().map(_.getLong(0)).toSeq
-        assert(rows == Seq(10L, 11L))
-        assert(graft.table.GraftTable.serverPlanCount.get() > before,
-          "read did not plan through the async endpoint")
-      } finally spark.conf.unset("spark.graft.plan-mode")
+      val before = graft.table.GraftTable.serverPlanCount.get()
+      val rows = spark.sql(
+        "SELECT id FROM graftasync.dml.asyncplan WHERE id > 5 ORDER BY id")
+        .collect().map(_.getLong(0)).toSeq
+      assert(rows == Seq(10L, 11L))
+      assert(graft.table.GraftTable.serverPlanCount.get() > before,
+        "read did not plan through the async endpoint")
     } finally async.stop()
   }
 
@@ -415,15 +449,12 @@ class RestDmlSpec extends SparkSpec {
     val notNull = client.planScan(Seq("dml"), "nnplan",
       Some("""{"type":"not-null","term":"v"}""")).map(_.dataFile).toSet
     assert(notNull.size < full.size, s"all-null file not pruned: $notNull of $full")
-    // exactness through the engine in server mode
-    spark.conf.set("spark.graft.plan-mode", "server")
-    try {
-      assert(spark.sql(
-        "SELECT id FROM graftr.dml.nnplan WHERE v IS NOT NULL").collect()
-        .map(_.getLong(0)).toSeq == Seq(3L))
-      assert(spark.sql(
-        "SELECT id FROM graftr.dml.nnplan WHERE v IS NULL ORDER BY id").collect()
-        .map(_.getLong(0)).toSeq == Seq(1L, 2L, 4L))
-    } finally spark.conf.unset("spark.graft.plan-mode")
+    // exactness through the engine's server-planned read
+    assert(spark.sql(
+      "SELECT id FROM graftr.dml.nnplan WHERE v IS NOT NULL").collect()
+      .map(_.getLong(0)).toSeq == Seq(3L))
+    assert(spark.sql(
+      "SELECT id FROM graftr.dml.nnplan WHERE v IS NULL ORDER BY id").collect()
+      .map(_.getLong(0)).toSeq == Seq(1L, 2L, 4L))
   }
 }

@@ -63,7 +63,7 @@ class SnapshotBindingSpec extends SparkSpec {
     }.toMap
     val rel = DataSourceV2Relation.create(GraftDsv2Table(t, "t"), None, None)
     log.stale = Some(0L) // the first read sees v0; the head is v1 after it
-    val swapped = GraftNativeScan(spark)(rel)
+    val swapped = GraftNativeScan(rel)
     val scans = swapped.collect { case lr: LogicalRelation => lr }
     assert(scans.size == 1, swapped.treeString)
     val read = scans.head.relation.asInstanceOf[
