@@ -24,8 +24,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * (overflow is sticky through merge), so the shuffle carries at most the
   * capped set per group.
   *
-  * Powers the per-file distinct-value stats ([[graft.table.GraftTable]]
-  * statFiles → `ColumnStats.values`): low-cardinality columns scattered
+  * Powers the per-file distinct-value stats (`ColumnStats.values`, kept
+  * by the write tasks' [[graft.table.FileStatsTracker]] and the import
+  * read-back alike): low-cardinality columns scattered
   * across files get exact-membership file pruning where min/max ranges
   * prove nothing. Also registered as a user-facing SQL aggregate. */
 case class BoundedSetAgg(

@@ -103,8 +103,8 @@ case class GraftMetadataAggregate(spark: SparkSession) extends Rule[LogicalPlan]
   }
 
   /** Fold one side of the bounds across files. A file without stats for the
-    * column is all-null in it (statFiles stores bounds iff min/max were
-    * non-null), so it contributes nothing — exactly the null-skipping
+    * column is all-null in it (file stats hold bounds iff min/max were
+    * non-null — [[graft.table.StatLayout]]), so it contributes nothing — exactly the null-skipping
     * semantics of MIN/MAX; likewise files predating an added column. All
     * files null → the SQL answer is NULL. */
   private def boundOver(snap: Snapshot, attr: AttributeReference,

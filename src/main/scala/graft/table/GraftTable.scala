@@ -474,10 +474,12 @@ class GraftTable private (val spark: SparkSession, rawPath: String,
 
   /** Append under contention: retry the CAS on [[CommitConflictException]]
     * with the standard optimistic-concurrency loop (files are written once;
-    * only the metadata commit retries — same as Iceberg's commit retry). */
+    * only the metadata commit retries — same as Iceberg's commit retry).
+    * The files are written against ONE head: its schema conforms the rows,
+    * its schema id tags them and its properties lay them out. */
   def appendWithRetry(df: DataFrame, maxRetries: Int = 10): Snapshot = {
-    val staged = writeFiles(conform(df, log.current), log.current.currentSchemaId,
-      log.current.properties)
+    val base = log.current
+    val staged = writeFiles(conform(df, base), base.currentSchemaId, base.properties)
     var attempt = 0
     while (true) {
       val head = log.current
@@ -591,31 +593,22 @@ class GraftTable private (val spark: SparkSession, rawPath: String,
 
   /** Write (file_path, pos) rows as positional-delete parquet files in the
     * table's data dir, stats included (file_path bounds could prune delete
-    * application per data file). With an explicit `schema`, writes
-    * arbitrary-keyed EQUALITY-delete files instead. */
+    * application per data file), computed in the write tasks. With an
+    * explicit `schema`, writes arbitrary-keyed EQUALITY-delete files
+    * instead. A write with no rows commits no file. */
   private[table] def writeDeleteFiles(df: DataFrame,
       schema: StructType = deleteSchema,
       // Iceberg's RESERVED field ids for positional-delete columns; equality
       // deletes pass their key columns' table ids instead
       fieldIds: Map[String, Long] =
         Map("file_path" -> 2147483546L, "pos" -> 2147483545L)): Seq[DataFile] = {
-    val staging = s"${log.root}/_staging-${UUID.randomUUID()}"
     val tagged = StructType(df.schema.fields.map(f =>
       fieldIds.get(f.name).map(id => f.copy(metadata =
         new MetadataBuilder().withMetadata(f.metadata)
           .putLong("parquet.field.id", id).build())).getOrElse(f)))
-    org.apache.spark.sql.graftglue.Bridge.withWriteSchema(spark, df, tagged)
-      .write.parquet(staging)
-    val parts = log.io.listNames(staging).filter(_.endsWith(".parquet"))
-    val moved = parts.map { p =>
-      val name = s"${UUID.randomUUID()}-deletes.parquet"
-      log.io.rename(s"$staging/$p", s"${log.dataDir}/$name")
-      name
-    }
-    log.io.deleteRecursive(staging)
-    if (moved.isEmpty) return Seq.empty
-    statFiles(moved.map(n => s"$path/data/$n"), schema, -1,
-      abs => s"data/${fileName(abs)}")
+    val layout = StatLayout(schema, Seq.empty)
+    writeStaged(df, tagged, Map.empty, layout, _ => s"${UUID.randomUUID()}-deletes.parquet")
+      .map { case (name, raw) => dataFile(name, raw, -1, layout) }
   }
 
   /** Overwrite only rows matching `cond` with `df`, in ONE snapshot commit
@@ -971,7 +964,7 @@ class GraftTable private (val spark: SparkSession, rawPath: String,
     val head = log.current
     val stamped = schemaOf(head, head.currentSchemaId)
     val cur = stripIds(stamped)
-    val statCols = cur.fields.filter(f => isStatType(f.dataType)).map(_.name).toSeq
+    val statCols = cur.fields.filter(f => StatLayout.isStatType(f.dataType)).map(_.name).toSeq
     if (statCols.isEmpty) head
     else {
       // ONE distributed pass computes both stat families: HLL NDV (the
@@ -1112,7 +1105,6 @@ class GraftTable private (val spark: SparkSession, rawPath: String,
                 .parseListFrom(newProps, sch))
               .getOrElse(Seq.empty)
               .filterNot(_.isInstanceOf[PartitionTransform.Identity])
-              .map(t => (t, t.column(qcol(t.source))))
             val origOf = fs.map(f => GraftTable.canonStr(resolve(f.path)) -> f).toMap
             statFiles(fs.map(f => resolve(f.path)), sch, sid,
                 a => origOf(GraftTable.canonStr(a)).path, derived)
@@ -1782,22 +1774,16 @@ class GraftTable private (val spark: SparkSession, rawPath: String,
       properties = head.properties ++ props))
   }
 
-  /** Write rows as immutable data files + collect per-file stats in one
-    * distributed pass (count + min/max per comparable column — the same
-    * bounds Iceberg keeps in manifests for scan pruning). Partition
-    * transforms additionally record their VALUE's bounds per file, keyed by
-    * the canonical transform spec, so [[pruneFiles]] can skip files from
-    * filters on the source column. */
-  /** Stamp `parquet.field.id` (= graft.id + 1, the same mapping
-    * [[IcebergExport]] publishes) into the write schema, at every nesting
-    * level, so Spark's parquet writer embeds REAL field ids in the file
-    * footers — an Iceberg reader then resolves columns by id directly; the
-    * exported name mapping stays only for files written before this.
-    * Best-effort: a frame whose names don't line up with the id-bearing
-    * table schema (imports, legacy paths) writes without ids, exactly as
-    * before. */
-  private def tagParquetFieldIds(df: DataFrame, schemaId: Int,
-      explicitIdSchema: Option[StructType] = None): DataFrame = {
+  /** The schema `df`'s files are written with: `parquet.field.id` (=
+    * graft.id + 1, the same mapping [[IcebergExport]] publishes) stamped at
+    * every nesting level, so Spark's parquet writer embeds REAL field ids in
+    * the file footers — an Iceberg reader then resolves columns by id
+    * directly; the exported name mapping stays only for files written
+    * before this. Best-effort: a frame whose names don't line up with the
+    * id-bearing table schema (imports, legacy paths) writes without ids,
+    * exactly as before. */
+  private def fieldIdSchema(df: DataFrame, schemaId: Int,
+      explicitIdSchema: Option[StructType] = None): StructType = {
     def addIds(dt: DataType): DataType = dt match {
       case st: StructType => StructType(st.fields.map { f =>
         val nested = f.copy(dataType = addIds(f.dataType))
@@ -1815,10 +1801,8 @@ class GraftTable private (val spark: SparkSession, rawPath: String,
       else explicitIdSchema.orElse( // create: first commit not published yet
         scala.util.Try(schemaOf(log.current, schemaId)).toOption)
         .filter(_.fieldNames.sameElements(df.schema.fieldNames))
-    // Merge: frame's structure/types/nullability (what the rows physically
-    // are), tagged schema's metadata (where names line up) — then re-root
-    // through [[graftglue.Bridge.withWriteSchema]]: a plain `.to(schema)`
-    // loses the metadata to RemoveRedundantAliases before the writer sees it.
+    // frame's structure/types/nullability (what the rows physically are),
+    // tagged schema's metadata (where names line up)
     def mergeMeta(frame: DataType, tagged: DataType): DataType = (frame, tagged) match {
       case (fs: StructType, ts: StructType) => StructType(fs.fields.map { f =>
         ts.fields.find(_.name == f.name) match {
@@ -1834,16 +1818,21 @@ class GraftTable private (val spark: SparkSession, rawPath: String,
         valueType = mergeMeta(fm.valueType, tm.valueType))
       case _ => frame
     }
-    idSchema.map { s =>
-      val merged = mergeMeta(df.schema, addIds(s)).asInstanceOf[StructType]
-      org.apache.spark.sql.graftglue.Bridge.withWriteSchema(spark, df, merged)
-    }.getOrElse(df)
+    idSchema.map(s => mergeMeta(df.schema, addIds(s)).asInstanceOf[StructType])
+      .getOrElse(df.schema)
   }
 
+  /** Write rows as immutable data files, laid out by the write properties
+    * ([[arrange]]). The task writing each file records its stats
+    * ([[FileStatsTracker]]), so no pass re-reads the new files: row count,
+    * min/max and null count per comparable column (the bounds Iceberg
+    * keeps in manifests for scan pruning), bounded value sets, and — for
+    * partition transforms — the transform VALUE's bounds and sets, keyed
+    * by the canonical transform spec, so [[pruneFiles]] can skip files
+    * from filters on the source column. Zero-row files are not committed. */
   private[table] def writeFiles(df: DataFrame, schemaId: Int,
       props: Map[String, String],
       idSchema: Option[StructType] = None): Seq[DataFile] = {
-    val staging = s"${log.root}/_staging-${UUID.randomUUID()}"
     // `write.bloom-filter-columns`: per-column parquet Bloom filters — the
     // point-lookup complement to min/max bounds. A random-id equality rarely
     // prunes on ranges (every file spans the id space); the Bloom filter
@@ -1852,95 +1841,93 @@ class GraftTable private (val spark: SparkSession, rawPath: String,
     val bloomOpts = props.get("write.bloom-filter-columns").toSeq
       .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
       .map(c => s"parquet.bloom.filter.enabled#$c" -> "true").toMap
-    withTargetFileSize(props) {
-      // arrange FIRST, tag LAST: the field-id tagger re-roots the frame as
-      // an internal-row relation, and an RDD boundary BELOW the rebalance
-      // would hide the upstream plan from AQE's file-sizing (and from
-      // CollapseRepartition), breaking target-file-size splits
-      tagParquetFieldIds(arrange(df, props), schemaId, idSchema)
-        .write.options(bloomOpts).parquet(staging)
-    }
-    val parts = log.io.listNames(staging).filter(_.endsWith(".parquet"))
+    val schema = stripIds(df.schema)
+    val layout = StatLayout(schema, PartitionTransform.parseListFrom(props, schema)
+      .filterNot(_.isInstanceOf[PartitionTransform.Identity]))
     val bucketed = GraftTable.bucketByOf(props).isDefined
-    val moved = parts.map { p =>
-      // bucketed writes keep the task's partition index as Spark's
-      // `_NNNNN` bucket suffix (partition i = bucket i under the
-      // repartition(n, col) layout) so the read side can group by bucket
-      val name = if (bucketed) {
-        val m = GraftTable.StagedPart.matcher(p)
-        require(m.find(), s"unexpected staged part name: $p")
+    // bucketed writes keep the task's partition index as Spark's `_NNNNN`
+    // bucket suffix (partition i = bucket i under the repartition(n, col)
+    // layout) so the read side can group by bucket
+    def dataName(staged: String): String =
+      if (bucketed) {
+        val m = GraftTable.StagedPart.matcher(staged)
+        require(m.find(), s"unexpected staged part name: $staged")
         f"${UUID.randomUUID()}_${m.group(1).toInt}%05d.parquet"
       } else s"${UUID.randomUUID()}.parquet"
-      log.io.rename(s"$staging/$p", s"${log.dataDir}/$name")
-      name
-    }
-    log.io.deleteRecursive(staging)
-    if (moved.isEmpty) return Seq.empty
-    val absolute = moved.map(n => s"$path/data/$n")
-    val derived = PartitionTransform
-      .parseListFrom(props, stripIds(df.schema))
-      .filterNot(_.isInstanceOf[PartitionTransform.Identity])
-      .map(t => (t, t.column(qcol(t.source))))
-    val files = statFiles(absolute, stripIds(df.schema), schemaId,
-      abs => s"data/${fileName(abs)}", derived)
-    // GC physically-empty parts (parquet writers can emit 0-row files)
-    val present = files.map(f => resolve(f.path)).toSet
-    absolute.filterNot(present.contains).foreach(log.io.delete)
-    files
+    val arranged = arrange(df, props)
+    withTargetFileSize(props) {
+      writeStaged(arranged, fieldIdSchema(arranged, schemaId, idSchema), bloomOpts,
+        layout, dataName)
+    }.map { case (name, raw) => dataFile(name, raw, schemaId, layout) }
   }
 
-  /** One distributed pass over freshly-written (or imported) parquet files:
-    * per-file row count + min/max bounds per comparable column. `storeAs`
-    * maps an absolute path to the path recorded in the snapshot (relative
-    * for owned files, absolute for imported ones). Zero-row files yield no
+  /** Write `df` into a fresh staging dir (with `schema`'s field ids) and
+    * move every file that holds rows into the data dir under
+    * `dataName(stagedName)`; zero-row files (Spark writes one for an empty
+    * frame) are dropped with the staging dir, which never outlives the
+    * call. Returns each kept file's data-dir name and raw stats. */
+  private def writeStaged(df: DataFrame, schema: StructType, options: Map[String, String],
+      layout: StatLayout, dataName: String => String): Seq[(String, RawFile)] = {
+    val staging = s"${log.root}/_staging-${UUID.randomUUID()}"
+    val tracker = FileStatsTracker(df, layout, spark.conf.get("spark.sql.session.timeZone"))
+    try {
+      org.apache.spark.sql.graftglue.Bridge.writeParquet(df, staging, schema, options, tracker)
+      val stats = tracker.files
+      log.io.listNames(staging).filter(_.endsWith(".parquet")).sorted.flatMap { p =>
+        val raw = stats.getOrElse(p,
+          throw new IllegalStateException(s"no write statistics for staged file $p"))
+        if (raw.rows == 0L) None
+        else {
+          val name = dataName(p)
+          log.io.rename(s"$staging/$p", s"${log.dataDir}/$name")
+          Some(name -> raw)
+        }
+      }
+    } finally log.io.deleteRecursive(staging)
+  }
+
+  /** The snapshot entry of data-dir file `name` from its raw stats. */
+  private def dataFile(name: String, raw: RawFile, schemaId: Int,
+      layout: StatLayout): DataFile =
+    DataFile(s"data/$name", raw.rows, log.io.size(s"${log.dataDir}/$name"), schemaId,
+      layout.render(raw))
+
+  /** Stat parquet files graft did NOT write — imports and `refresh_stats`
+    * re-stats — in one distributed read: the same [[StatLayout]] figures
+    * the write tasks record, aggregated per file. `storeAs` maps an
+    * absolute path to the path recorded in the snapshot (relative for
+    * owned files, absolute for imported ones). Zero-row files yield no
     * group and are therefore excluded. */
   private[table] def statFiles(absPaths: Seq[String], schema: StructType,
       schemaId: Int, storeAs: String => String,
-      derived: Seq[(PartitionTransform, Column)] = Seq.empty): Seq[DataFile] = {
-    val statFields = schema.fields.filter(f => isStatType(f.dataType))
+      transforms: Seq[PartitionTransform] = Seq.empty): Seq[DataFile] = {
+    val layout = StatLayout(schema, transforms)
     // TimestampType bounds aggregate as unix_micros — `cast(ts as string)`
     // is a SESSION-ZONE rendering, and per-file bounds must be zone-free
     // so the REST plan endpoint (and any later session) can compare them
-    // (VERDICT r16 #1); the driver renders the micros canonically below.
+    // (VERDICT r16 #1); the layout renders the micros canonically.
     // min/max over micros == min/max over the timestamps (monotone).
     def statVal(f: StructField): Column = f.dataType match {
       case TimestampType => unix_micros(qcol(f.name))
       case _ => qcol(f.name) // NTZ cast-to-string is already zone-free
     }
-    // EXACT bounded distinct-value SETS next to the min/max
-    // ([[ColumnStats.values]], collected by the memory-bounded
-    // [[graft.functions.BoundedSetAgg]] — safe on ANY column at any
-    // cardinality): membership prunes where ranges prove nothing.
-    //  - hash transforms (bucket families): a file holding two scattered
-    //    buckets spans most of the domain — ranges can't prune equality;
-    //  - plain low-cardinality columns (categories, enums, flags): same
-    //    story when values scatter across files. Restricted to types whose
-    //    cast-to-string is the comparator's literal rendering
-    //    ([[GraftTable.StatsComparator.litStr]] — timestamps render
-    //    canonically, floats format-sensitively: excluded).
-    def wantSet(t: PartitionTransform): Boolean =
-      !t.orderPreserving // hash families; ranges are tight for the rest
-    def plainSet(dt: DataType): Boolean = dt match {
-      case StringType | IntegerType | LongType | ShortType | ByteType |
-           BooleanType | DateType => true
-      case _ => false
-    }
     import graft.functions.BoundedSetAgg
     val aggs = Seq(count(lit(1)).as("_rows")) ++
-      statFields.flatMap(f => Seq(
-        min(statVal(f)).cast("string").as(s"_min_${f.name}"),
-        max(statVal(f)).cast("string").as(s"_max_${f.name}"),
-        sum(when(qcol(f.name).isNull, 1L).otherwise(0L)).as(s"_nulls_${f.name}")) ++
-        (if (plainSet(f.dataType))
+      layout.bounded.zipWithIndex.flatMap { case (f, i) => Seq(
+        min(statVal(f)).cast("string").as(s"_min_$i"),
+        max(statVal(f)).cast("string").as(s"_max_$i"),
+        sum(when(qcol(f.name).isNull, 1L).otherwise(0L)).as(s"_nulls_$i")) ++
+        (if (StatLayout.valueSet(f.dataType))
           Seq(BoundedSetAgg(qcol(f.name).cast("string"),
-            GraftTable.MaxPlainValues, GraftTable.MaxPlainLen).as(s"_set_${f.name}"))
-         else Seq.empty)) ++
-      derived.zipWithIndex.flatMap { case ((t, ex), i) => Seq(
-        min(ex).cast("string").as(s"_tmin_$i"),
-        max(ex).cast("string").as(s"_tmax_$i")) ++
-        (if (wantSet(t))
-          Seq(BoundedSetAgg(ex.cast("string"), GraftTable.MaxStatValues, 40)
-            .as(s"_tset_$i"))
+            GraftTable.MaxPlainValues, GraftTable.MaxPlainLen).as(s"_set_$i"))
+         else Seq.empty) } ++
+      transforms.zipWithIndex.flatMap { case (t, i) =>
+        val ex = t.column(qcol(t.source))
+        Seq(min(ex).cast("string").as(s"_tmin_$i"),
+          max(ex).cast("string").as(s"_tmax_$i")) ++
+        (if (StatLayout.transformSet(t))
+          Seq(BoundedSetAgg(ex.cast("string"), GraftTable.MaxStatValues,
+            StatLayout.TransformSetLen).as(s"_tset_$i"))
          else Seq.empty) }
     spark.read.schema(schema).parquet(absPaths: _*)
       .groupBy(col("_metadata.file_path").as("_fp"))
@@ -1950,8 +1937,7 @@ class GraftTable private (val spark: SparkSession, rawPath: String,
         // _metadata.file_path is a URI RENDERING — percent-encoded ("a b"
         // → "a%20b") — while absPaths and FileIO speak raw strings; decode
         // before the io.size call or any imported file with a space/UTF-8
-        // name dies here (native writes never hit this: part-file names
-        // are plain). URI.getPath decodes without '+'-as-space damage.
+        // name dies here. URI.getPath decodes without '+'-as-space damage.
         val decoded = scala.util.Try {
           val u = new java.net.URI(r.getString(0))
           if (u.getScheme == null) r.getString(0)
@@ -1959,50 +1945,17 @@ class GraftTable private (val spark: SparkSession, rawPath: String,
           else s"${u.getScheme}://${u.getAuthority}${u.getPath}"
         }.getOrElse(r.getString(0))
         val local = canon(decoded)
-        val rowsN = r.getAs[Long]("_rows")
-        def setOf(colName: String): Option[Seq[String]] =
-          Option(r.getAs[scala.collection.Seq[String]](colName)).map(_.toSeq)
-        val stats = statFields.flatMap { f =>
-          val mn = r.getAs[String](s"_min_${f.name}")
-          val mx = r.getAs[String](s"_max_${f.name}")
-          val nulls = r.getAs[Long](s"_nulls_${f.name}")
-          if (mn == null || mx == null)
-            // ALL-NULL marker (VERDICT r16 #4): empty bounds + nullCount ==
-            // rows, so IS NOT NULL (and every comparison predicate) can
-            // prune the file — without it an all-null column left no stats
-            // entry and nothing to prove exclusion from
-            if (nulls == rowsN && rowsN > 0L)
-              Some(f.name -> ColumnStats("", "", f.dataType.typeName, nulls))
-            else None
-          else {
-            val (bmn, bmx) = f.dataType match {
-              case StringType => truncateBounds(mn, mx)
-              case TimestampType => // agg produced micros strings
-                (GraftTable.tsCanon(mn.toLong), GraftTable.tsCanon(mx.toLong))
-              case TimestampNTZType => // zone-free cast; re-render canonical
-                (canonNtz(mn), canonNtz(mx))
-              case _ => (mn, mx)
-            }
-            val vals = if (plainSet(f.dataType)) setOf(s"_set_${f.name}") else None
-            Some(f.name -> ColumnStats(bmn, bmx, f.dataType.typeName, nulls, vals))
-          }
-        }.toMap
-        val transformStats = derived.zipWithIndex.flatMap { case ((t, _), i) =>
-          val mn = r.getAs[String](s"_tmin_$i")
-          val mx = r.getAs[String](s"_tmax_$i")
-          if (mn == null || mx == null) None
-          else {
-            // BoundedSetAgg already enforced the cap (null = overflow), so
-            // per-file metadata stays bounded no matter how scattered a
-            // low-parallelism write was
-            val set: Option[Seq[String]] =
-              if (!wantSet(t)) None else setOf(s"_tset_$i")
-            Some(t.canonical -> ColumnStats(mn, mx,
-              if (t.numeric) "long" else "string", -1L, set))
-          }
-        }.toMap
-        DataFile(storeAs(local), r.getAs[Long]("_rows"),
-          log.io.size(local), schemaId, stats ++ transformStats)
+        // BoundedSetAgg answers null on overflow: no set
+        def setOf(kept: Boolean, name: String): Option[Seq[String]] =
+          if (!kept) None else Option(r.getAs[scala.collection.Seq[String]](name)).map(_.toSeq)
+        val raw = RawFile(r.getAs[Long]("_rows"),
+          layout.bounded.zipWithIndex.map { case (f, i) => RawStat(r.getAs[String](s"_min_$i"),
+            r.getAs[String](s"_max_$i"), r.getAs[Long](s"_nulls_$i"),
+            setOf(StatLayout.valueSet(f.dataType), s"_set_$i")) },
+          transforms.zipWithIndex.map { case (t, i) => RawStat(r.getAs[String](s"_tmin_$i"),
+            r.getAs[String](s"_tmax_$i"), -1L,
+            setOf(StatLayout.transformSet(t), s"_tset_$i")) })
+        DataFile(storeAs(local), raw.rows, log.io.size(local), schemaId, layout.render(raw))
       }.toSeq
   }
 
@@ -2071,41 +2024,6 @@ class GraftTable private (val spark: SparkSession, rawPath: String,
           case None    => spark.conf.unset(key)
         }
     }
-
-  /** Iceberg-style string-bound truncation so a long-text column (a whole
-    * document!) never bloats snapshot metadata: the lower bound truncates to
-    * a prefix (any prefix IS a valid lower bound), the upper bound truncates
-    * and increments its last incrementable char (making it strictly above
-    * everything sharing the prefix). Pruning comparisons stay conservative —
-    * never excluding a file that could match. */
-  private val BoundLen = 32
-  private def truncateBounds(min: String, max: String): (String, String) = {
-    val mn = if (min.length > BoundLen) min.substring(0, BoundLen) else min
-    val mx =
-      if (max.length <= BoundLen) max
-      else {
-        val t = max.substring(0, BoundLen)
-        val i = t.lastIndexWhere(_ < Char.MaxValue)
-        if (i < 0) max // pathological all-￿ prefix: keep the full bound
-        else t.substring(0, i) + (t(i) + 1).toChar
-      }
-    (mn, mx)
-  }
-
-  private def isStatType(dt: DataType): Boolean = dt match {
-    case _: NumericType | StringType | DateType | TimestampType |
-         TimestampNTZType | BooleanType => true
-    case _ => false
-  }
-
-  /** NTZ `cast(string)` rendering ("yyyy-MM-dd HH:mm:ss[.ffffff]", already
-    * zone-free) → canonical 'T' form; unparseable falls through verbatim
-    * (it then carries no pruning claim — safe). */
-  private def canonNtz(s: String): String =
-    GraftTable.tsLitMicros(s).map(GraftTable.tsCanon).getOrElse(s)
-
-  /** Last segment of a path or URI. */
-  private def fileName(p: String): String = p.substring(p.lastIndexOf('/') + 1)
 
   private def qcol(n: String): Column = GraftTable.qcol(n)
 
@@ -2332,7 +2250,7 @@ object GraftTable {
               cmpOpt(column, value, st.max).forall(_ <= 0)
         }
       }
-    /** The all-null marker ([[GraftTable.statFiles]] records empty bounds
+    /** The all-null marker ([[StatLayout.render]] records empty bounds
       * with nullCount == rows): no non-null value in the column. The
       * nullCount check disambiguates a real file of empty strings. */
     def allNull(f: DataFile, st: ColumnStats): Boolean =

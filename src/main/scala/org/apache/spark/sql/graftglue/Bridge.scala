@@ -47,19 +47,42 @@ object Bridge {
     spark.asInstanceOf[classic.SparkSession]
       .internalCreateDataFrame(rdd, schema, isStreaming = false)
 
-  /** Re-root a frame as an internal-row relation carrying `schema` — which
-    * must match the frame's output in names, types, and (at least as wide)
-    * nullability; only METADATA may differ. Zero-copy: the relation iterates
-    * the original plan's own InternalRows. This is how schema metadata
-    * (parquet field ids) survives to the file writer: the optimizer strips
-    * Alias metadata (RemoveRedundantAliases/ConvertToLocalRelation), but a
-    * leaf relation's attribute metadata is kept. */
-  def withWriteSchema(spark: SparkSession, df: DataFrame,
-      schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val cls = spark.asInstanceOf[classic.SparkSession]
-    cls.internalCreateDataFrame(
-      df.asInstanceOf[classic.Dataset[org.apache.spark.sql.Row]].queryExecution.toRdd,
-      schema, isStreaming = false)
+  /** Write a frame as parquet files under `dir` through Spark's own file
+    * writer, in the one job `df.write.parquet(dir)` runs, with `tracker`
+    * seeing every row in the task that writes its file. The files take
+    * their schema from `schema`: the frame's names, types and order, whose
+    * field METADATA (parquet field ids) reaches the footers — the optimizer
+    * strips Alias metadata before a plain write sees it. `options` are the
+    * writer options (`df.write.options`). `FileFormatWriter`, the session
+    * state it reads and the execution id it needs are internals, hence
+    * bridged. */
+  def writeParquet(df: DataFrame, dir: String, schema: org.apache.spark.sql.types.StructType,
+      options: Map[String, String],
+      tracker: org.apache.spark.sql.execution.datasources.WriteJobStatsTracker): Unit = {
+    import org.apache.spark.sql.execution.SQLExecution
+    import org.apache.spark.sql.execution.datasources.FileFormatWriter
+    val ds = df.asInstanceOf[classic.Dataset[org.apache.spark.sql.Row]]
+    val session = ds.sparkSession
+    val qe = ds.queryExecution
+    val plan = qe.executedPlan
+    require(plan.output.size == schema.size &&
+      plan.output.zip(schema.fields).forall { case (a, f) => a.dataType.sameType(f.dataType) },
+      s"write schema ${schema.simpleString} does not match the frame's ${df.schema.simpleString}")
+    val columns = plan.output.zip(schema.fields).map { case (a, f) =>
+      a.withName(f.name).withDataType(f.dataType).withNullability(f.nullable)
+        .withMetadata(f.metadata)
+    }
+    val committer = org.apache.spark.internal.io.FileCommitProtocol.instantiate(
+      session.sessionState.conf.fileCommitProtocolClass,
+      java.util.UUID.randomUUID().toString, dir)
+    SQLExecution.withNewExecutionId(qe, Some("graft write")) {
+      FileFormatWriter.write(session, plan,
+        new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
+        committer, FileFormatWriter.OutputSpec(dir, Map.empty, columns),
+        session.sessionState.newHadoopConfWithOptions(options),
+        partitionColumns = Nil, bucketSpec = None, statsTrackers = Seq(tracker),
+        options = options)
+    }
   }
 
   /** DISTINCT built directly as `Aggregate(output, output, plan)`.

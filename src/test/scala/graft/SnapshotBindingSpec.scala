@@ -55,6 +55,22 @@ class SnapshotBindingSpec extends SparkSpec {
     assert(answer.forall(n => n == 10L || n == 13L), s"COUNT(*) answered $answer")
   }
 
+  test("appendWithRetry writes its files against one head") {
+    val (t, log) = lagged(Map.empty) { w =>
+      w.addColumn("b", org.apache.spark.sql.types.IntegerType) // v1: schema 1
+      w.setProperties(Map("write.partition-by" -> "bucket(4,b)")) // v2
+    }
+    log.stale = Some(0L) // the first read sees v0 (no `b`); the head is v2 after it
+    val s = t.appendWithRetry((21L to 23L).toDF("id"))
+    val added = s.files.filterNot(f => t.log.snapshot(2L).files.exists(_.path == f.path))
+    // conformed to v0's schema, so tagged with v0's schema id and laid out
+    // by v0's properties — not bucketed by a column the rows do not have
+    assert(added.nonEmpty && added.forall(_.schemaId == 0), added)
+    assert(added.forall(f => !f.stats.contains("bucket(4,b)")), added)
+    assert(t.read.filter($"id" > 20L).select($"id", $"b").as[(Long, Option[Int])]
+      .collect().sorted.toSeq == Seq((21L, None), (22L, None), (23L, None)))
+  }
+
   test("native-scan swap reads and describes one snapshot") {
     val (t, log) = lagged(Map.empty)(_.append((11L to 15L).toDF("id")))
     val rowsByFiles = Seq(0L, 1L).map { v =>
