@@ -7,9 +7,11 @@ import graft.functions.{CosineSimilarity, IcebergBucket, MinHashSignature, Norma
 
 /** Session-extensions hook — the engine's analogue of the reference's
   * `spark.sql.extensions = IcebergSparkSessionExtensions` line
-  * (`main.tf:803`): registers the custom Catalyst functions with SQL and
-  * the row-level SQL DML rewrite (UPDATE / MERGE INTO / full-expression
-  * DELETE) over graft catalog tables.
+  * (`main.tf:803`): registers the custom Catalyst functions with SQL, the
+  * row-level SQL DML rewrite (UPDATE / MERGE INTO / full-expression
+  * DELETE) over graft catalog tables, views, row filters and column masks,
+  * and the metadata-only and materialized-aggregate rewrites. The read
+  * path is the catalog's ([[graft.plans.GraftNativeScan]]), as in Iceberg.
   *
   * {{{
   *   spark.sql.extensions = graft.GraftExtensions
@@ -39,15 +41,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // late by view expansion — a view over a governed table is governed
     ext.injectHintResolutionRule(session => graft.catalog.GraftGovernance(session))
     ext.injectResolutionRule(session => graft.catalog.GraftGovernance(session))
-    // metadata-only COUNT(*) from snapshot-log row counts — must be
-    // injected BEFORE GraftNativeScan so it sees the un-swapped relation
+    // metadata-only COUNT(*) from snapshot-log row counts
     ext.injectOptimizerRule(session => graft.plans.GraftMetadataAggregate(session))
-    // transparent materialized-aggregate rewrite (exact + fresh only) —
-    // like the rules below it must see the un-swapped graft relation
+    // transparent materialized-aggregate rewrite (exact + fresh only)
     ext.injectOptimizerRule(session => graft.plans.GraftMvRewrite(session))
-    // keeps catalog-table SELECTs on the vectorized parquet path (see
-    // graft.plans.GraftNativeScan) instead of the row-based V1Scan fallback
-    ext.injectOptimizerRule(_ => graft.plans.GraftNativeScan)
     ext.injectFunction((
       FunctionIdentifier("cosine_sim"),
       new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),

@@ -6,8 +6,8 @@ import java.nio.file.{Files, Paths}
 import java.util.Locale
 
 /** Shared plumbing of the measurement mains (Bench, Verify, PlanDump,
-  * Robustness): one local session recipe, one timed noop run, one JSON
-  * layer. Each main keeps its own defaults and its own JSON keys. */
+  * Robustness): one session recipe, one REST fixture registration, one
+  * timed noop run, one JSON layer. Each main keeps its defaults and keys. */
 object Harness {
 
   /** Local session sized to `cpus` (shuffle partitions = cores), UTC, UI
@@ -23,6 +23,34 @@ object Harness {
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
+  }
+
+  /** Under `SPARK_GRAFT_PLAN_MODE=server` (`server-async` also plans via
+    * submit/poll): register the fixtures in place (zero data copies) behind
+    * an in-process REST catalog and point the declared queries at them, so
+    * every scan plans through `/plan`. Returns the server for the caller to
+    * stop; None otherwise. */
+  def restFixtures(spark: SparkSession, sfDir: String): Option[graft.rest.RestCatalogServer] = {
+    val planMode = sys.env.getOrElse("SPARK_GRAFT_PLAN_MODE", "local")
+    if (planMode != "server" && planMode != "server-async") return None
+    val srv = new graft.rest.RestCatalogServer(
+      Files.createTempDirectory("graft-verify-wh").toString,
+      Map("verify" -> "verify-secret"),
+      planAsync = planMode == "server-async").start()
+    try {
+      spark.conf.set("spark.sql.catalog.graftv", "graft.catalog.GraftCatalog")
+      spark.conf.set("spark.sql.catalog.graftv.uri", srv.uri)
+      spark.conf.set("spark.sql.catalog.graftv.credential", "verify:verify-secret")
+      spark.sql("CREATE NAMESPACE IF NOT EXISTS graftv.vfy")
+      // a ns-vintage events fixture imports its ts as raw long; the
+      // Tables.events adapter handles either form downstream
+      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      FixtureContract.expected.keys.foreach { t =>
+        spark.sql(s"CALL graftv.system.import_parquet('vfy.$t', '$sfDir/$t.parquet')")
+      }
+      spark.conf.set(Tables.CatalogConf, "graftv.vfy")
+      Some(srv)
+    } catch { case e: Throwable => srv.stop(); throw e }
   }
 
   /** One timed run: wall seconds, and the failure if the query threw. */

@@ -11,7 +11,9 @@ import java.nio.charset.StandardCharsets
   * optimization rounds. Writes `<outDir>/<query>_<tag>.txt`.
   *
   * Usage: runMain graft.PlanDump <outDir> <tag> [q43,q100,...]
-  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32).
+  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32),
+  * SPARK_GRAFT_PLAN_MODE=server to plan the queries over the fixtures
+  * registered behind the in-process REST catalog ([[Harness.restFixtures]]).
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -22,6 +24,7 @@ object PlanDump {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Harness.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     Files.createDirectories(Paths.get(outDir))
+    val restServer = Harness.restFixtures(spark, sfDir)
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.exists(n.startsWith)))
     names.foreach { name =>
@@ -35,6 +38,7 @@ object PlanDump {
         case e: Throwable => println(s"[plandump] $name FAILED: $e")
       } finally SparkEntry.releaseScratch(spark)
     }
+    restServer.foreach(_.stop())
     spark.stop()
   }
 }

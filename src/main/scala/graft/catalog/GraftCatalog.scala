@@ -45,6 +45,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
 
   override def initialize(name: String, options: CaseInsensitiveStringMap): Unit = {
     catalogName = name
+    graft.plans.GraftNativeScan.install() // the read path, whatever the session's extensions
     Option(options.get("uri")) match {
       case Some(uri) =>
         val client = new graft.rest.RestCatalogClient(uri,
@@ -63,22 +64,15 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
   override def name(): String = catalogName
 
   // ---- catalog access control ([[GrantStore]]) -----------------------
-  // The acting principal is `spark.graft.principal` (sessions fronting a
-  // named identity — the engine-side twin of the REST bearer identity). A
-  // session with NO principal set is engine-internal/privileged, same as
-  // the direct GraftTable path; a warehouse with no grants file is not
-  // enforcing at all. Enforcement composes with row filters/masks:
-  // grants decide WHETHER loadTable succeeds, [[GraftGovernance]] then
-  // decides WHAT the granted reader sees.
-  private def grantPrincipal: Option[String] =
-    scala.util.Try(org.apache.spark.sql.internal.SQLConf.get
-      .getConfString("spark.graft.principal", "")).toOption.filter(_.nonEmpty)
-
+  // A warehouse with no grants file is not enforcing at all. Enforcement
+  // composes with row filters/masks: grants decide WHETHER loadTable
+  // succeeds, [[GraftGovernance]] then decides WHAT the granted reader sees.
   private def enforce(privilege: String, parts: Seq[String]): Unit =
-    grantPrincipal.foreach(p => GrantStore.check(warehouse, p, privilege, parts))
+    GrantStore.sessionPrincipal.foreach(p => GrantStore.check(warehouse, p, privilege, parts))
 
   private def enforceAny(privileges: Seq[String], parts: Seq[String]): Unit =
-    grantPrincipal.foreach(p => GrantStore.checkAny(warehouse, p, privileges, parts))
+    GrantStore.sessionPrincipal.foreach(p =>
+      GrantStore.checkAny(warehouse, p, privileges, parts))
 
   private def identParts(ident: Identifier): Seq[String] =
     ident.namespace().toSeq :+ ident.name()

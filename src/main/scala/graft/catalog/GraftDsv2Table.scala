@@ -2,23 +2,22 @@ package graft.catalog
 
 import java.util
 import scala.jdk.CollectionConverters._
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SQLContext}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability}
-import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, Statistics, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportStatistics, V1Scan}
+import org.apache.spark.sql.connector.read.{Batch, Scan, ScanBuilder, Statistics, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportStatistics}
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsOverwrite, V1Write, Write, WriteBuilder}
-import org.apache.spark.sql.sources.{BaseRelation, InsertableRelation, TableScan}
+import org.apache.spark.sql.sources.InsertableRelation
 import org.apache.spark.sql.types.{ByteType, DoubleType, FloatType, IntegerType, LongType, ShortType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import graft.table.GraftTable
 
 /** DSv2 table over a graft snapshot log, optionally pinned to a version or
-  * timestamp (time travel — SURVEY.md §2.8). Read and write delegate to the
-  * engine's own distributed paths through the V1 fallback hooks (`V1Scan` /
-  * `V1Write`), so the scan is still Spark's vectorized parquet reader over
-  * the snapshot's file list and a write is an ACID append/overwrite commit —
-  * no bespoke row-level IO. */
+  * timestamp (time travel — SURVEY.md §2.8). A read builds a [[GraftScan]]
+  * that [[graft.plans.GraftNativeScan]] swaps for Spark's vectorized
+  * parquet read of the snapshot's file list; a write goes through the V1
+  * fallback hook (`V1Write`) into an ACID append/overwrite commit — no
+  * bespoke row-level IO. */
 case class GraftDsv2Table(t: GraftTable, identName: String,
     asOfVersion: Option[Long] = None, asOfTimestampMs: Option[Long] = None,
     branch: Option[String] = None,
@@ -72,84 +71,38 @@ case class GraftDsv2Table(t: GraftTable, identName: String,
 
   /** Scan with pushdown: accepted filters prune whole files from the
     * snapshot log via column bounds (Iceberg-manifest-style, SURVEY.md §4
-    * row 1), column pruning narrows the parquet read schema, and both are
-    * re-applied on the inner DataFrame so the vectorized parquet reader gets
-    * its own row-group-level PushedFilters. Filters are also returned as
-    * residuals, so Spark re-checks them — pruning can never lose rows. */
+    * row 1) and column pruning narrows the read to the referenced
+    * top-level columns. Filters are also returned as residuals, so Spark
+    * re-checks them — pruning can never lose rows. The scan only describes
+    * the read; [[graft.plans.GraftNativeScan]] turns it into the columnar
+    * parquet plan. */
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     readGuard()
     new ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
       private var pushed: Array[Filter] = Array.empty
-      private var required: StructType = schema()
+      private val full = schema()
+      private var required: StructType = full
 
       override def pushFilters(filters: Array[Filter]): Array[Filter] = {
         pushed = filters
         filters // conservatively all residual: Spark re-evaluates post-scan
       }
       override def pushedFilters(): Array[Filter] = pushed
+      // top-level columns at full types: the swap re-aliases the parquet
+      // read's columns by name, and a nested-pruned struct would not match
       override def pruneColumns(requiredSchema: StructType): Unit =
-        if (requiredSchema.nonEmpty) required = requiredSchema
+        required = StructType(full.fields.filter(f => requiredSchema.fieldNames.contains(f.name)))
 
-      override def build(): Scan = new V1Scan with SupportsReportStatistics {
-        private val filters = pushed
-        private val outSchema = required
-        // one snapshot for both the statistics and the rows they describe
-        private val snap = snapshotForRead
-        override def readSchema(): StructType = outSchema
-        /** The swap path's [[catalogStatistics]] limited to the read
-          * schema: exact post-pruning size/row counts, merged null counts
-          * and numeric bounds, ANALYZE's NDV — manifest numbers, no file
-          * IO. Spark 4.1's scan pushdown wraps a `V1Scan` in a
-          * `V1ScanWrapper` that does not forward these, so a session
-          * without the [[graft.plans.GraftNativeScan]] swap plans the
-          * pushed-down relation at `defaultSizeInBytes`; only a caller
-          * holding the scan itself reads them. */
-        override def estimateStatistics(): Statistics = stats
-        private lazy val stats: Statistics = {
-          import org.apache.spark.sql.connector.expressions.NamedReference
-          import org.apache.spark.sql.connector.read.colstats.ColumnStatistics
-          def long(v: Option[BigInt]) =
-            v.fold(util.OptionalLong.empty)(n => util.OptionalLong.of(n.toLong))
-          def obj(v: Option[Any]) =
-            v.fold(util.Optional.empty[Object])(x => util.Optional.of(x.asInstanceOf[Object]))
-          val cs = catalogStatistics(snap, filters)
-          val cols = new util.HashMap[NamedReference, ColumnStatistics]()
-          outSchema.fields.foreach { f =>
-            // bounds typed as Spark's own catalog statistics type them
-            cs.colStats.get(f.name).map(_.toPlanStat(f.name, f.dataType)).foreach { c =>
-              cols.put(org.apache.spark.sql.connector.expressions.Expressions.column(f.name),
-                new ColumnStatistics {
-                  override def distinctCount(): util.OptionalLong = long(c.distinctCount)
-                  override def nullCount(): util.OptionalLong = long(c.nullCount)
-                  override def min(): util.Optional[Object] = obj(c.min)
-                  override def max(): util.Optional[Object] = obj(c.max)
-                })
-            }
-          }
-          new Statistics {
-            override def sizeInBytes(): util.OptionalLong = util.OptionalLong.of(cs.sizeInBytes.toLong)
-            override def numRows(): util.OptionalLong = long(cs.rowCount)
-            override def columnStats(): util.Map[NamedReference, ColumnStatistics] = cols
-          }
-        }
-        override def toV1TableScan[T <: BaseRelation with TableScan](context: SQLContext): T =
-          new BaseRelation with TableScan {
-            override def sqlContext: SQLContext = context
-            override def schema: StructType = outSchema
-            override def buildScan(): RDD[Row] = {
-              val base = t.readPruned(snap, filters.toIndexedSeq)
-              val filtered = filters.flatMap(toColumn).foldLeft(base)(_ filter _)
-              filtered.select(outSchema.fieldNames.map(org.apache.spark.sql.functions.col): _*).rdd
-            }
-          }.asInstanceOf[T]
-      }
+      override def build(): Scan =
+        GraftScan(GraftDsv2Table.this, snapshotForRead, pushed.toSeq, required)
     }
   }
 
-  /** Best-effort translation of pushed filters back to Columns for the inner
-    * parquet scan (unsupported shapes are skipped — Spark re-checks all
+  /** Best-effort translation of pushed filters back to Columns, for the
+    * read the swap splices in and for DELETE / overwrite conditions
+    * (unsupported shapes are skipped on reads — Spark re-checks all
     * residuals anyway). */
-  private def toColumn(f: Filter): Option[org.apache.spark.sql.Column] = {
+  private[graft] def toColumn(f: Filter): Option[org.apache.spark.sql.Column] = {
     import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.sources._
     f match {
@@ -188,21 +141,17 @@ case class GraftDsv2Table(t: GraftTable, identName: String,
   }
 
   /** THE column-statistics derivation of the (file-pruned) snapshot:
-    * manifest row/byte totals, merged null counts and exact-numeric
-    * bounds, ANALYZE's `stats.ndv.*` distinct counts and `stats.hist.*`
-    * histograms, as the `CatalogStatistics` the
-    * [[graft.plans.GraftNativeScan]] swap's spliced
-    * `LogicalRelation.computeStats` serves to the CBO. The V1 scan's
-    * `estimateStatistics` reports the same numbers (histograms aside).
-    * Without this the swap silently drops column statistics and cost-based
-    * filter/join estimation never sees an analyzed graft table on the hot
-    * (vectorized) read path. Zero file IO. */
-  private[graft] def catalogStatistics(snap: graft.table.Snapshot, filters: Array[Filter]):
-      org.apache.spark.sql.catalyst.catalog.CatalogStatistics = {
+    * manifest row/byte totals and, for the columns of `cols`, merged null
+    * counts and exact-numeric bounds, ANALYZE's `stats.ndv.*` distinct
+    * counts and `stats.hist.*` histograms. [[GraftScan]] reports them to the
+    * optimizer, and the [[graft.plans.GraftNativeScan]] swap attaches the
+    * same result to its parquet relations for physical planning. Zero IO. */
+  private[graft] def catalogStatistics(snap: graft.table.Snapshot, filters: Seq[Filter],
+      cols: StructType): org.apache.spark.sql.catalyst.catalog.CatalogStatistics = {
     import org.apache.spark.sql.catalyst.catalog.{CatalogColumnStat, CatalogStatistics}
-    val files = t.pruneFiles(snap, filters.toIndexedSeq)
+    val files = t.pruneFiles(snap, filters)
     val rows = files.map(_.rows).sum
-    val colStats = schema().fields.flatMap { f =>
+    val colStats = cols.fields.flatMap { f =>
       val perFile = files.map(_.stats.get(f.name))
       val nulls: Option[BigInt] =
         if (files.nonEmpty && perFile.forall(_.exists(_.nullCount >= 0)))
@@ -306,6 +255,57 @@ case class GraftDsv2Table(t: GraftTable, identName: String,
             }
           }
       }
+    }
+  }
+}
+
+/** A graft read — its ONE bound snapshot, pushed filters and read schema —
+  * reporting [[GraftDsv2Table.catalogStatistics]] but with no batch of its
+  * own: [[graft.plans.GraftNativeScan]] swaps it for the columnar read before
+  * physical planning. A case class, so equal reads compare equal. */
+case class GraftScan(table: GraftDsv2Table, snap: graft.table.Snapshot,
+    filters: Seq[Filter], readSchema: StructType) extends Scan with SupportsReportStatistics {
+
+  lazy val catalogStats: org.apache.spark.sql.catalyst.catalog.CatalogStatistics =
+    table.catalogStatistics(snap, filters, readSchema)
+
+  override def toBatch: Batch = throw new IllegalStateException(s"graft scan of ${table.name()} " +
+    "reached physical planning unswapped: graft.plans.GraftNativeScan is not installed")
+
+  override def estimateStatistics(): Statistics = stats
+
+  private lazy val stats: Statistics = {
+    import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
+    import org.apache.spark.sql.connector.read.colstats.{ColumnStatistics, Histogram, HistogramBin}
+    def long(v: Option[BigInt]) =
+      v.fold(util.OptionalLong.empty)(n => util.OptionalLong.of(n.toLong))
+    def opt[A >: Null](v: Option[A]): util.Optional[A] = util.Optional.ofNullable(v.orNull)
+    val cs = catalogStats
+    val cols = new util.HashMap[NamedReference, ColumnStatistics]()
+    readSchema.fields.foreach { f =>
+      // bounds typed as Spark's own catalog statistics type them
+      cs.colStats.get(f.name).map(_.toPlanStat(f.name, f.dataType)).foreach { c =>
+        cols.put(Expressions.column(f.name), new ColumnStatistics {
+          override def distinctCount(): util.OptionalLong = long(c.distinctCount)
+          override def nullCount(): util.OptionalLong = long(c.nullCount)
+          override def min(): util.Optional[Object] = opt(c.min.map(_.asInstanceOf[Object]))
+          override def max(): util.Optional[Object] = opt(c.max.map(_.asInstanceOf[Object]))
+          override def histogram(): util.Optional[Histogram] = opt[Histogram](c.histogram.map(h =>
+            new Histogram {
+              override def height(): Double = h.height
+              override def bins(): Array[HistogramBin] = h.bins.map(b => new HistogramBin {
+                override def lo(): Double = b.lo
+                override def hi(): Double = b.hi
+                override def ndv(): Long = b.ndv
+              })
+            }))
+        })
+      }
+    }
+    new Statistics {
+      override def sizeInBytes(): util.OptionalLong = util.OptionalLong.of(cs.sizeInBytes.toLong)
+      override def numRows(): util.OptionalLong = long(cs.rowCount)
+      override def columnStats(): util.Map[NamedReference, ColumnStatistics] = cols
     }
   }
 }

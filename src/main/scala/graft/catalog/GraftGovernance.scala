@@ -56,8 +56,7 @@ case class GraftGovernance(spark: SparkSession) extends Rule[LogicalPlan] {
   import GraftGovernance._
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (spark.sessionState.conf
-        .getConfString("spark.graft.governance.bypass", "false") == "true") return plan
+    if (bypassed(spark)) return plan
     // write/DML targets keep the raw table: collect them BY REFERENCE
     val exempt = java.util.Collections.newSetFromMap(
       new java.util.IdentityHashMap[LogicalPlan, java.lang.Boolean]())
@@ -112,7 +111,7 @@ case class GraftGovernance(spark: SparkSession) extends Rule[LogicalPlan] {
       // the masks, while unprincipaled sessions stay engine-internal.
       case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
           if r.getTagValue(WrappedTag).isEmpty && r.catalog.isEmpty &&
-            r.identifier.isEmpty && !exempt.contains(r) && principaled =>
+            r.identifier.isEmpty && !exempt.contains(r) && GrantStore.sessionPrincipal.nonEmpty =>
         r.table match {
           case g: GraftDsv2Table =>
             policiesOf(g.t.log.current.properties) match {
@@ -126,12 +125,6 @@ case class GraftGovernance(spark: SparkSession) extends Rule[LogicalPlan] {
         }
     }
   }
-
-  /** Is the session acting as a governed principal? (the same trigger the
-    * path entry's grant gate uses — `spark.graft.principal`) */
-  private def principaled: Boolean =
-    scala.util.Try(spark.sessionState.conf
-      .getConfString("spark.graft.principal", "")).toOption.exists(_.nonEmpty)
 
   /** (row filter, masks by column, column order) when `parts` names a graft
     * table carrying governance properties.
@@ -159,19 +152,6 @@ case class GraftGovernance(spark: SparkSession) extends Rule[LogicalPlan] {
       }
     }
 
-  /** The ONE property→policy extraction — shared by the catalog-identifier
-    * and path-relation routes so a policy-property change can never cover
-    * one route and silently miss the other. */
-  private def policiesOf(props: Map[String, String])
-      : Option[(Option[String], Map[String, String])] = {
-    val filter = props.get(FilterProp)
-    val masks = props.collect {
-      case (k, v) if k.startsWith(MaskPropPrefix) =>
-        k.stripPrefix(MaskPropPrefix) -> v
-    }
-    if (filter.isEmpty && masks.isEmpty) None else Some((filter, masks))
-  }
-
   private def parse(sql: String): Expression =
     spark.sessionState.sqlParser.parseExpression(sql)
 
@@ -194,4 +174,39 @@ object GraftGovernance {
   val FilterProp = "graft.filter"
   val MaskPropPrefix = "graft.mask."
   private val WrappedTag = TreeNodeTag[Boolean]("graft.governance.wrapped")
+
+  /** The ONE property→policy extraction — shared by the catalog-identifier
+    * and path-relation routes so a policy-property change can never cover
+    * one route and silently miss the other. */
+  private[graft] def policiesOf(props: Map[String, String])
+      : Option[(Option[String], Map[String, String])] = {
+    val filter = props.get(FilterProp)
+    val masks = props.collect {
+      case (k, v) if k.startsWith(MaskPropPrefix) =>
+        k.stripPrefix(MaskPropPrefix) -> v
+    }
+    if (filter.isEmpty && masks.isEmpty) None else Some((filter, masks))
+  }
+
+  private def bypassed(spark: SparkSession): Boolean =
+    spark.sessionState.conf.getConfString("spark.graft.governance.bypass", "false") == "true"
+
+  /** Fail closed where this rule does not run (a session without
+    * `GraftExtensions`): refuse a governed table in the scope the rule
+    * covers — catalog reads always, path reads for a principal. */
+  private[graft] def requireEnforced(spark: SparkSession, s: GraftScan,
+      catalogRead: Boolean): Unit = {
+    val g = s.table
+    // policies come from the CURRENT table state (time travel is governed
+    // too); an unpinned scan's bound snapshot is that state
+    def current =
+      if (g.asOfVersion.isEmpty && g.asOfTimestampMs.isEmpty && g.branch.isEmpty) s.snap
+      else g.t.log.current
+    if ((catalogRead || GrantStore.sessionPrincipal.nonEmpty) && !bypassed(spark) &&
+        !spark.sessionState.analyzer.extendedResolutionRules.exists(_.isInstanceOf[GraftGovernance]) &&
+        policiesOf(current.properties).nonEmpty)
+      throw new SecurityException(s"${g.name()} carries row-filter or column-mask " +
+        s"policies ($FilterProp / $MaskPropPrefix*) that this session does not enforce: " +
+        "build it with spark.sql.extensions=graft.GraftExtensions")
+  }
 }

@@ -35,6 +35,12 @@ import graft.table.FileIO
   * a control-plane lookup — file size is O(grants), never data-shaped. */
 object GrantStore {
 
+  /** The session's principal (`spark.graft.principal`, the REST bearer
+    * identity's twin); a session with none is engine-internal/privileged. */
+  def sessionPrincipal: Option[String] =
+    scala.util.Try(org.apache.spark.sql.internal.SQLConf.get
+      .getConfString("spark.graft.principal", "")).toOption.filter(_.nonEmpty)
+
   /** Raised on a denied action; the REST layer maps it to HTTP 403. */
   final class AccessDeniedException(msg: String)
     extends RuntimeException(msg)

@@ -33,9 +33,9 @@ import graft.table.Snapshot
   *  - the snapshot has no merge-on-read delete files (deleted rows could
   *    hold the extremum / change the count — fall through to the scan).
   *
-  * Injected BEFORE [[GraftNativeScan]] (same optimizer batch): it must see
-  * the graft relation before the swap rewrites it into a parquet plan.
-  * Honors time travel — values come from the relation's pinned snapshot.
+  * An operator-optimization rule: it sees the graft relation before scan
+  * pushdown builds a scan of it. Honors time travel — values come from the
+  * relation's pinned snapshot.
   */
 case class GraftMetadataAggregate(spark: SparkSession) extends Rule[LogicalPlan] {
 
@@ -51,8 +51,8 @@ case class GraftMetadataAggregate(spark: SparkSession) extends Rule[LogicalPlan]
             // metadata values ARE reads: loadTable accepts SELECT-or-MODIFY
             // (write-only principals must resolve their DML target), so the
             // read privilege is enforced wherever data becomes visible —
-            // newScanBuilder, the native-scan swap, and HERE, or a
-            // MODIFY-only principal could lift counts and column extrema
+            // newScanBuilder, the MV rewrite, and HERE, or a MODIFY-only
+            // principal could lift counts and column extrema
             g.readGuard()
             LocalRelation(agg.output.asInstanceOf[Seq[Attribute]],
               Seq(InternalRow.fromSeq(answers.map(_.get))))

@@ -54,8 +54,10 @@ import graft.table.GraftTable
   * grain, never data IO. Disable it like any optimizer rule, with
   * `spark.sql.optimizer.excludedRules=graft.plans.GraftMvRewrite`.
   *
-  * Injected BEFORE [[GraftNativeScan]] (same optimizer batch): it must see
-  * the graft relation before the swap rewrites it into a parquet plan.
+  * An operator-optimization rule: it sees the graft relation before scan
+  * pushdown, and long before [[GraftNativeScan]] plans the read. An answer
+  * from the MV is a read of the source, so a rewrite checks the source's
+  * SELECT grant (`readGuard`) — no scan of the source is ever built.
   */
 case class GraftMvRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
 
@@ -69,7 +71,7 @@ case class GraftMvRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     sourceOf(agg.child).flatMap { case Walk(g, filterOpt, subst) =>
       freshCandidates(g).flatMap { case (mv, keys, sums, minMaxes) =>
         build(agg, filterOpt, subst, mv, keys, sums, minMaxes)
-      }.nextOption()
+      }.nextOption().map { rewritten => g.readGuard(); rewritten }
     }
 
   /** What the walk down to the relation found: the graft table, the

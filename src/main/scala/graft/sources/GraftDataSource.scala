@@ -24,10 +24,10 @@ import graft.table.GraftTable
   * }}}
   *
   * Reads and writes resolve through the same [[GraftDsv2Table]] the catalog
-  * serves (vectorized scan swap, stats, MOR deletes, exactly-once appends
-  * all identical); the table must already EXIST — creation stays with
-  * `GraftTable.create` / catalog DDL, where schema and properties are
-  * explicit rather than inferred from a dataframe.
+  * serves (the columnar read path, installed here as by the catalog,
+  * stats, MOR deletes, exactly-once appends all identical); the table must
+  * already EXIST — creation stays with `GraftTable.create` / catalog DDL,
+  * where schema and properties are explicit, not inferred from a dataframe.
   *
   * GOVERNANCE: when the session acts as a principal
   * (`spark.graft.principal`), the path entry enforces the same
@@ -43,10 +43,6 @@ class GraftDataSource extends TableProvider with DataSourceRegister
     with org.apache.spark.sql.sources.CreatableRelationProvider {
 
   override def shortName(): String = "graft"
-
-  private def principalOpt: Option[String] =
-    scala.util.Try(SparkSession.active.sessionState.conf
-      .getConfString("spark.graft.principal", "")).toOption.filter(_.nonEmpty)
 
   /** Nearest ancestor warehouse (`_grants.json` holder) and the securable
     * parts relative to it; None = no governing warehouse above `path`.
@@ -77,7 +73,7 @@ class GraftDataSource extends TableProvider with DataSourceRegister
     }
 
   private def enforce(path: String, privilege: String): Unit =
-    principalOpt.foreach { p =>
+    graft.catalog.GrantStore.sessionPrincipal.foreach { p =>
       governedBy(path).foreach { case (wh, parts) =>
         graft.catalog.GrantStore.check(wh, p, privilege, parts)
       }
@@ -125,6 +121,7 @@ class GraftDataSource extends TableProvider with DataSourceRegister
 
   private def tableFor(options: CaseInsensitiveStringMap): GraftDsv2Table = {
     val path = pathOf(options)
+    graft.plans.GraftNativeScan.install()
     val t = GraftTable.load(SparkSession.active, path)
     GraftDsv2Table(t, path,
       asOfVersion = Option(options.get("versionAsOf")).map(_.toLong),

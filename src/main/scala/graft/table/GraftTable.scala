@@ -62,7 +62,7 @@ class GraftTable private (val spark: SparkSession, rawPath: String,
     readVersion(r.version)
   }
 
-  def schema: StructType = schemaOf(log.current, log.current.currentSchemaId)
+  def schema: StructType = { val s = log.current; schemaOf(s, s.currentSchemaId) }
 
   /** The schema a given snapshot reads with (branch heads may have evolved
     * independently of main). */
@@ -302,8 +302,8 @@ class GraftTable private (val spark: SparkSession, rawPath: String,
         (eqKeyNames(d, cur), d.cols, byId && d.file.footerIds)).toSeq
       .foldLeft(base) { case (acc, ((curNames, storedNames, useIds), ds)) =>
         // dedup of the key sets goes through Bridge.distinctRows: this plan
-        // can be grafted into a catalog read during operator optimization,
-        // where a `Deduplicate` node would no longer be rewritten
+        // can be spliced in during operator optimization (a materialized
+        // view's read), where a `Deduplicate` node would no longer be rewritten
         val keys =
           if (useIds && ds.head.colIds.nonEmpty) {
             // imported tables: the delete parquet's own column names are
@@ -2062,11 +2062,10 @@ class GraftTable private (val spark: SparkSession, rawPath: String,
     try Option(spark.range(1).select(t.column(lit(v)).cast("string")).head.getString(0))
     catch { case scala.util.control.NonFatal(_) => None }
 
-  /** Pruned + projected read of a snapshot for the DSv2 V1 fallback scan
-    * (this is the production read path for catalog-routed SELECTs — the
-    * [[graft.plans.GraftNativeScan]] swap lands here). The file list is
-    * SERVER-planned when the table sits behind a REST catalog, locally
-    * pruned otherwise. */
+  /** File-pruned read of a snapshot: the production read path for catalog
+    * and path-source SELECTs, which the [[graft.plans.GraftNativeScan]]
+    * swap splices in for a graft scan. The file list is SERVER-planned
+    * when the table sits behind a REST catalog, locally pruned otherwise. */
   private[graft] def readPruned(s: Snapshot,
       filters: Seq[org.apache.spark.sql.sources.Filter]): DataFrame =
     readFilesOf(s, serverPlanned(s, filters).getOrElse(pruneFiles(s, filters)),

@@ -14,6 +14,10 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+  /** `c` converted now by `spark`, for a plan built without a Dataset
+    * ([[expression]] defers conversion to the Dataset that holds it). */
+  def expression(spark: SparkSession, c: Column): Expression =
+    spark.asInstanceOf[classic.SparkSession].expression(c)
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
@@ -89,10 +93,11 @@ object Bridge {
     * `Dataset.dropDuplicates` plans a `Deduplicate` node that only the
     * optimizer's replace-operators batch (which runs BEFORE operator
     * optimization) rewrites to an aggregate — so a plan grafted into the
-    * tree DURING operator optimization ([[graft.plans.GraftNativeScan]]'s
-    * relation swap) would reach physical planning with `Deduplicate`
-    * intact and crash with an internal error. The Aggregate form is what
-    * that rewrite produces anyway, and is valid at every optimizer stage. */
+    * tree DURING operator optimization ([[graft.plans.GraftMvRewrite]]
+    * splicing in a materialization's read) would reach physical planning
+    * with `Deduplicate` intact and crash with an internal error. The
+    * Aggregate form is what that rewrite produces anyway, and is valid at
+    * every optimizer stage. */
   def distinctRows(df: DataFrame): DataFrame = {
     val plan = df.asInstanceOf[classic.Dataset[org.apache.spark.sql.Row]]
       .queryExecution.analyzed
@@ -103,12 +108,6 @@ object Bridge {
   /** The session's catalog manager (`sessionState` is `private[sql]`). */
   def catalogManager(spark: SparkSession): org.apache.spark.sql.connector.catalog.CatalogManager =
     spark.asInstanceOf[classic.SparkSession].sessionState.catalogManager
-
-  /** Catalyst predicate → data-source `Filter` (the same translation Spark's
-    * own pushdown uses; `private[sql]` in Spark 4, hence bridged here). */
-  def translateFilter(e: Expression): Option[org.apache.spark.sql.sources.Filter] =
-    org.apache.spark.sql.execution.datasources.DataSourceStrategy
-      .translateFilter(e, supportNestedPredicatePushdown = false)
 
   /** A parquet DataFrame whose relation carries a BUCKET SPEC: file names
     * end in Spark's `_NNNNN` bucket suffix and the data was written

@@ -177,6 +177,34 @@ class GovernanceSpec extends SparkSpec {
     } finally spark.conf.unset("spark.graft.principal")
   }
 
+  test("a session without GraftExtensions refuses governed tables instead of reading them raw") {
+    // no GraftGovernance rule runs there, so the read path fails closed —
+    // catalog reads always, path reads when the session acts as a principal
+    val bare = SparkSpec.withoutExtensions()
+    bare.conf.set("spark.sql.catalog.graftgv", "graft.catalog.GraftCatalog")
+    bare.conf.set("spark.sql.catalog.graftgv.warehouse", SparkSpec.warehouse)
+    val path = s"${SparkSpec.warehouse}/db/gov_users"
+    def refused(read: => Any): Unit = {
+      val e = intercept[Exception](read)
+      val msg = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(_.getMessage).mkString(" | ")
+      assert(msg.contains("spark.sql.extensions=graft.GraftExtensions"), msg)
+    }
+    SparkSpec.active(bare) {
+      refused(bare.sql("SELECT count(*), max(spend) FROM graftgv.db.gov_users").collect())
+      refused(bare.sql("SELECT email FROM graftgv.db.gov_users VERSION AS OF 1").collect())
+      bare.conf.set("spark.graft.principal", "analyst")
+      try refused(bare.read.format("graft").load(path).collect())
+      finally bare.conf.unset("spark.graft.principal")
+      // unprincipaled path reads stay engine-internal, as with the extensions
+      assert(bare.read.format("graft").load(path).count() == 5)
+      // and the privileged bypass reads raw, as with the extensions
+      bare.conf.set("spark.graft.governance.bypass", "true")
+      try assert(bare.sql("SELECT * FROM graftgv.db.gov_users").count() == 5)
+      finally bare.conf.unset("spark.graft.governance.bypass")
+    }
+  }
+
   test("dropping the properties lifts the policies") {
     sql("ALTER TABLE graft.db.gov_users UNSET TBLPROPERTIES ('graft.filter', 'graft.mask.email')")
     val rows = sql("SELECT email FROM graft.db.gov_users").collect()

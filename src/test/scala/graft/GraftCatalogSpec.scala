@@ -206,8 +206,8 @@ class GraftCatalogSpec extends SparkSpec {
     assert(spark.sql("SELECT count(*) FROM graft.db.pr WHERE id > 5000").collect()(0).getLong(0) == 0)
     // column pruning: projecting one column works through the narrowed schema
     assert(spark.sql("SELECT v FROM graft.db.pr WHERE id = 42").collect()(0).getDouble(0) == 42.0)
-    // the DSv2 scan reports exact post-pruning statistics from the log (the
-    // broadcast-decision input on paths where the plan swap isn't installed)
+    // the DSv2 scan reports exact post-pruning statistics from the log (what
+    // join reordering and the runtime filter read before the scan is swapped)
     val dsv2 = graft.catalog.GraftDsv2Table(t, "db.pr")
     def statsFor(fs: org.apache.spark.sql.sources.Filter*): (Long, Long) = {
       val sb = dsv2.newScanBuilder(new org.apache.spark.sql.util.CaseInsensitiveStringMap(

@@ -199,6 +199,21 @@ class GrantsSpec extends SparkSpec {
       }
       assert(deepMsg(m).contains("lacks SELECT"), deepMsg(m))
     }
+    // ... and the MATERIALIZED-VIEW answers: a fresh MV serves GROUP BY
+    // aggregates without any scan of the source being built
+    spark.sql("DROP TABLE IF EXISTS graft.gdb.accounts_mv")
+    spark.sql("CALL graft.system.materialize_agg(" +
+      "'gdb.accounts', 'gdb.accounts_mv', 'region', 'id')")
+    try asPrincipal("frank") {
+      val g = intercept[Exception] {
+        spark.sql("SELECT region, count(*), sum(id) FROM graft.gdb.accounts GROUP BY region")
+          .collect()
+      }
+      assert(deepMsg(g).contains("lacks SELECT"), deepMsg(g))
+    } finally {
+      spark.sql("CALL graft.system.deregister_agg_rewrite('gdb.accounts_mv')")
+      spark.sql("DROP TABLE graft.gdb.accounts_mv")
+    }
     asPrincipal("admin") {
       assert(spark.sql("SELECT * FROM graft.gdb.accounts WHERE id = 42").count() == 1)
       spark.sql("DELETE FROM graft.gdb.accounts WHERE id = 42")

@@ -475,7 +475,7 @@ class PlanDisciplineSpec extends SparkSpec {
     }
   }
 
-  test("the V1 scan and the swap report the same statistics for an ANALYZEd table") {
+  test("the scan and the swap report the same statistics for an ANALYZEd table") {
     import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.connector.read.SupportsReportStatistics
     import org.apache.spark.sql.execution.datasources.LogicalRelation
@@ -493,36 +493,147 @@ class PlanDisciplineSpec extends SparkSpec {
         .collectFirst { case r: LogicalRelation => r.stats }
         .getOrElse(fail("the catalog read was not swapped"))
     }
-    // the V1 scan, built the way Spark's scan pushdown builds it
+    // the scan, built the way Spark's scan pushdown builds it
     val t = graft.table.GraftTable.load(spark, s"${SparkSpec.warehouse}/db/pd_stats")
-    val v1 = graft.catalog.GraftDsv2Table(t, "pd_stats")
+    val scan = graft.catalog.GraftDsv2Table(t, "pd_stats")
       .newScanBuilder(org.apache.spark.sql.util.CaseInsensitiveStringMap.empty())
       .build().asInstanceOf[SupportsReportStatistics].estimateStatistics()
     assert(swap.rowCount.contains(BigInt(300)))
-    assert(v1.numRows().getAsLong == 300L)
-    type Stat = (Option[BigInt], Option[BigInt], Option[Any], Option[Any])
+    assert(scan.numRows().getAsLong == 300L)
+    type Hist = Option[(Double, Seq[(Double, Double, Long)])]
+    type Stat = (Option[BigInt], Option[BigInt], Option[Any], Option[Any], Hist)
     val sw: Map[String, Stat] = swap.attributeStats.map { case (a, c) =>
-      a.name -> (c.nullCount, c.distinctCount, c.min, c.max) }.toMap
-    val vs: Map[String, Stat] = v1.columnStats().asScala.map { case (k, c) =>
+      a.name -> (c.nullCount, c.distinctCount, c.min, c.max,
+        c.histogram.map(h => (h.height, h.bins.toSeq.map(b => (b.lo, b.hi, b.ndv)))))
+    }.toMap
+    val sc: Map[String, Stat] = scan.columnStats().asScala.map { case (k, c) =>
       def big(v: java.util.OptionalLong) =
         if (v.isPresent) Some(BigInt(v.getAsLong)) else None
+      val hist = Option(c.histogram().orElse(null))
+        .map(h => (h.height(), h.bins().toSeq.map(b => (b.lo(), b.hi(), b.ndv()))))
       k.fieldNames().mkString(".") ->
         (big(c.nullCount()), big(c.distinctCount()),
-          Option(c.min().orElse(null)), Option(c.max().orElse(null)))
+          Option(c.min().orElse(null)), Option(c.max().orElse(null)), hist)
     }.toMap
-    assert(sw.keySet == Set("i", "l", "d", "s") && vs.keySet == sw.keySet,
-      s"swap columns ${sw.keySet}, V1 columns ${vs.keySet}")
+    assert(sw.keySet == Set("i", "l", "d", "s") && sc.keySet == sw.keySet,
+      s"swap columns ${sw.keySet}, scan columns ${sc.keySet}")
     sw.foreach { case (name, c) =>
-      val o = vs(name)
-      assert(o._1 == c._1, s"$name nulls: V1 ${o._1} swap ${c._1}")
-      assert(o._2 == c._2, s"$name NDV: V1 ${o._2} swap ${c._2}")
+      val o = sc(name)
+      assert(o._1 == c._1, s"$name nulls: scan ${o._1} swap ${c._1}")
+      assert(o._2 == c._2, s"$name NDV: scan ${o._2} swap ${c._2}")
       // same value AND the same runtime type (an INT bound is an Integer)
       Seq("min" -> (o._3, c._3), "max" -> (o._4, c._4)).foreach { case (what, (a, b)) =>
         assert(a == b && a.map(_.getClass) == b.map(_.getClass),
-          s"$name $what: V1 $a (${a.map(_.getClass)}) swap $b (${b.map(_.getClass)})")
+          s"$name $what: scan $a (${a.map(_.getClass)}) swap $b (${b.map(_.getClass)})")
       }
+      assert(o._5 == c._5, s"$name histogram: scan ${o._5} swap ${c._5}")
     }
     assert(sw("i")._3.contains(0) && sw("i")._4.contains(1099))
     assert(sw("l")._1.contains(BigInt(50)) && sw("s")._1.contains(BigInt(100)))
+    // ANALYZE's histograms reach the optimizer through the scan too
+    assert(Seq("i", "l", "d").forall(c => sc(c)._5.exists(_._2.nonEmpty)),
+      sc.map { case (k, v) => k -> v._5 })
+  }
+
+  // ---- one read path for every session: a session WITHOUT GraftExtensions
+  // (only the catalog conf set, like a foreign Spark) plans graft reads
+  // exactly like the extension session does
+
+  /** The no-extension session with the star warehouse behind `graftne`. */
+  private lazy val bare: org.apache.spark.sql.SparkSession = {
+    star
+    val s = SparkSpec.withoutExtensions()
+    s.conf.set("spark.sql.catalog.graftne", "graft.catalog.GraftCatalog")
+    s.conf.set("spark.sql.catalog.graftne.warehouse", SparkSpec.warehouse)
+    s
+  }
+
+  /** The two ways a bare session names a graft table. */
+  private val entries: Seq[(String, String => org.apache.spark.sql.DataFrame)] = Seq(
+    "catalog" -> (name => bare.table(s"graftne.db.$name")),
+    "path" -> (name => bare.read.format("graft").load(s"${SparkSpec.warehouse}/db/$name")))
+
+  private def withBareConfs[A](confs: (String, String)*)(body: => A): A = {
+    confs.foreach { case (k, v) => bare.conf.set(k, v) }
+    try body finally confs.foreach { case (k, _) => bare.conf.unset(k) }
+  }
+
+  entries.foreach { case (via, read) =>
+    test(s"no extensions, $via: FileScan parquet with PushedFilters and a pruned ReadSchema") {
+      SparkSpec.active(bare) {
+        import org.apache.spark.sql.functions.col
+        val df = read("pd_fact").where(col("k") === 42L).select("k")
+        assert(df.collect().length == 10)
+        val executed = df.queryExecution.executedPlan.toString
+        assert(executed.contains("FileScan parquet") && !executed.contains("BatchScan"), executed)
+        val plan = planOf(df)
+        assert(!plan.contains("GraftDsv2Table"), plan)
+        assert(plan.contains("PushedFilters: [IsNotNull(k), EqualTo(k,42)]"), plan)
+        val readSchema = plan.linesIterator.find(_.contains("ReadSchema")).getOrElse("")
+        assert(readSchema.contains("struct<k:bigint>"), s"unpruned scan: $readSchema")
+        assert(df.inputFiles.length <= 2, s"static pruning missing: ${df.inputFiles.toSeq}")
+      }
+    }
+
+    test(s"no extensions, $via: optimized-plan statistics are the manifest's") {
+      SparkSpec.active(bare) {
+        val snap = graft.table.GraftTable.load(bare, s"${SparkSpec.warehouse}/db/pd_dim").log.current
+        val (bytes, rows) = (BigInt(snap.files.map(_.bytes).sum), BigInt(snap.files.map(_.rows).sum))
+        withBareConfs("spark.sql.cbo.enabled" -> "false") {
+          assert(read("pd_dim").queryExecution.optimizedPlan.stats.sizeInBytes == bytes)
+        }
+        withBareConfs("spark.sql.cbo.enabled" -> "true") {
+          assert(read("pd_dim").queryExecution.optimizedPlan.stats.rowCount.contains(rows))
+        }
+      }
+    }
+
+    test(s"no extensions, $via: a small filtered dimension broadcasts without a hint") {
+      SparkSpec.active(bare) {
+        import org.apache.spark.sql.functions.col
+        val df = read("pd_fact").join(read("pd_dim").where(col("cat") === "x"), "k")
+        assert(df.count() == 50) // 5 keys × 10 fact rows each
+        val plan = planOf(df)
+        assert(plan.contains("BroadcastHashJoin") && !plan.contains("SortMergeJoin"), plan)
+      }
+    }
+
+    test(s"no extensions, $via: the bloom-filter runtime filter injects for a shuffle join") {
+      SparkSpec.active(bare) {
+        import org.apache.spark.sql.functions.col
+        def q = read("pd_fact").join(read("pd_dim").where(col("cat") === "x"), "k")
+        withBareConfs(
+            "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+            "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "32",
+            "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB") {
+          val df = q
+          val optimized = df.queryExecution.optimizedPlan.toString
+          assert(optimized.contains("might_contain"),
+            s"expected an injected bloom runtime filter in:\n$optimized")
+          val rows = df.collect().map(_.toString).sorted.toSeq
+          withBareConfs("spark.sql.optimizer.runtime.bloomFilter.enabled" -> "false") {
+            assert(q.collect().map(_.toString).sorted.toSeq == rows,
+              "bloom-filtered result diverged from the plain join")
+          }
+        }
+      }
+    }
+  }
+
+  test("no extensions: a second catalog instance installs the read rule once") {
+    SparkSpec.active(bare) {
+      // the bare session really runs none of GraftExtensions
+      assert(!bare.sessionState.functionRegistry.functionExists(
+        org.apache.spark.sql.catalyst.FunctionIdentifier("cosine_sim")))
+      assert(!bare.sessionState.analyzer.extendedResolutionRules
+        .exists(_.isInstanceOf[graft.catalog.GraftGovernance]))
+      bare.conf.set("spark.sql.catalog.graftne2", "graft.catalog.GraftCatalog")
+      bare.conf.set("spark.sql.catalog.graftne2.warehouse", SparkSpec.warehouse)
+      assert(bare.table("graftne.db.pd_dim").count() == 100)
+      assert(bare.table("graftne2.db.pd_dim").count() == 100)
+      assert(bare.experimental.extraOptimizations
+        .count(_ eq graft.plans.GraftNativeScan) == 1, bare.experimental.extraOptimizations)
+    }
   }
 }

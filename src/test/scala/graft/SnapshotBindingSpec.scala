@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.expressions.{Alias, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.Count
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LocalRelation}
 import org.apache.spark.sql.execution.datasources.LogicalRelation
-import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, DataSourceV2ScanRelation}
 import graft.catalog.GraftDsv2Table
 import graft.plans.{GraftMetadataAggregate, GraftNativeScan}
 import graft.table.{GraftTable, Snapshot, SnapshotLog}
@@ -78,8 +78,12 @@ class SnapshotBindingSpec extends SparkSpec {
       s.files.map(f => new java.io.File(f.path).getName).toSet -> s.files.map(_.rows).sum
     }.toMap
     val rel = DataSourceV2Relation.create(GraftDsv2Table(t, "t"), None, None)
-    log.stale = Some(0L) // the first read sees v0; the head is v1 after it
-    val swapped = GraftNativeScan(rel)
+    val builder = rel.table.asInstanceOf[GraftDsv2Table]
+      .newScanBuilder(org.apache.spark.sql.util.CaseInsensitiveStringMap.empty())
+    log.stale = Some(0L) // the scan's first read sees v0; the head is v1 after it
+    val scan = DataSourceV2ScanRelation(rel, builder.build(),
+      rel.output.map(_.asInstanceOf[org.apache.spark.sql.catalyst.expressions.AttributeReference]))
+    val swapped = GraftNativeScan(scan)
     val scans = swapped.collect { case lr: LogicalRelation => lr }
     assert(scans.size == 1, swapped.treeString)
     val read = scans.head.relation.asInstanceOf[
@@ -88,5 +92,6 @@ class SnapshotBindingSpec extends SparkSpec {
     val described = scans.head.catalogTable.flatMap(_.stats).flatMap(_.rowCount)
     assert(rowsByFiles.get(read).map(BigInt(_)) == described,
       s"read $read but stats describe $described rows")
+    assert(described.contains(BigInt(10)), "the scan's bound snapshot is v0")
   }
 }

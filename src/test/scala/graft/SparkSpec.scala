@@ -29,4 +29,27 @@ object SparkSpec {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** A fresh session over the shared SparkContext with NO session
+    * extensions — what a foreign Spark that only sets the catalog conf
+    * gets. The builder cannot drop the context's `spark.sql.extensions`,
+    * so it calls `classic.SparkSession`'s primary constructor (private in
+    * Scala, public in bytecode) with empty extensions. */
+  def withoutExtensions(): SparkSession = {
+    import org.apache.spark.sql.{SparkSessionExtensions, classic}
+    val shared = session.asInstanceOf[classic.SparkSession].sharedState
+    classOf[classic.SparkSession].getConstructor(classOf[org.apache.spark.SparkContext],
+        classOf[Option[_]], classOf[Option[_]],
+        classOf[SparkSessionExtensions], classOf[Map[String, String]],
+        classOf[Map[String, String]])
+      .newInstance(session.sparkContext, Some(shared), None, new SparkSessionExtensions,
+        Map.empty[String, String], Map.empty[String, String])
+  }
+
+  /** Run `body` with `s` as the thread's active session (the path source
+    * resolves through the active session), then restore the shared one. */
+  def active[A](s: SparkSession)(body: => A): A = {
+    SparkSession.setActiveSession(s)
+    try body finally SparkSession.setActiveSession(session)
+  }
 }
