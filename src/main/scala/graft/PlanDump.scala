@@ -16,18 +16,19 @@ import java.nio.charset.StandardCharsets
   * registered behind the in-process REST catalog ([[Harness.restFixtures]]).
   */
 object PlanDump {
+  /** The queries the optional third argument names, matched as
+    * `SPARK_GRAFT_BENCH_ONLY` is ([[Bench.select]]); all when absent. */
+  private[graft] def queryNames(args: Array[String]): Seq[String] =
+    Bench.select(SparkEntry.queries.keys, args.lift(2))
+
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val tag = if (args.length > 1) args(1) else "before"
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").map(_.trim).toSet) else None
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Harness.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     Files.createDirectories(Paths.get(outDir))
     val restServer = Harness.restFixtures(spark, sfDir)
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.exists(n.startsWith)))
-    names.foreach { name =>
+    queryNames(args).foreach { name =>
       try {
         val df = SparkEntry.queries(name)(spark, sfDir)
         val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted"))

@@ -68,11 +68,11 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
   // composes with row filters/masks: grants decide WHETHER loadTable
   // succeeds, [[GraftGovernance]] then decides WHAT the granted reader sees.
   private def enforce(privilege: String, parts: Seq[String]): Unit =
-    GrantStore.sessionPrincipal.foreach(p => GrantStore.check(warehouse, p, privilege, parts))
+    GrantStore.sessionPrincipal.foreach(p => GrantStore.check(io, warehouse, p, privilege, parts))
 
   private def enforceAny(privileges: Seq[String], parts: Seq[String]): Unit =
     GrantStore.sessionPrincipal.foreach(p =>
-      GrantStore.checkAny(warehouse, p, privileges, parts))
+      GrantStore.checkAny(io, warehouse, p, privileges, parts))
 
   private def identParts(ident: Identifier): Seq[String] =
     ident.namespace().toSeq :+ ident.name()

@@ -30,9 +30,11 @@ import graft.table.FileIO
   * behavior, and the right default for single-tenant embedded use).
   * Writing the FIRST grant flips the catalog to enforcing.
   *
-  * Reads are mtime-cached: enforcement sits on every loadTable/commit, and
-  * a hot loop must not re-read an unchanged file. At 100 TB scale this is
-  * a control-plane lookup — file size is O(grants), never data-shaped. */
+  * Every check reads the file through the caller's [[FileIO]] (the
+  * catalog's or the REST server's), and re-parses it only when its content
+  * differs from the last read: enforcement sits on every loadTable/commit.
+  * At 100 TB scale this is a control-plane lookup — file size is
+  * O(grants), never data-shaped. */
 object GrantStore {
 
   /** The session's principal (`spark.graft.principal`, the REST bearer
@@ -86,8 +88,7 @@ object GrantStore {
 
   /** All grants, or None when the grants file does not exist (=> access
     * control disabled, everything allowed). */
-  def load(warehouse: String): Option[Seq[Grant]] = {
-    val io = FileIO.forPath(warehouse)
+  def load(io: FileIO, warehouse: String): Option[Seq[Grant]] = {
     val p = file(warehouse)
     if (!io.exists(p)) { cache.remove(p); return None }
     // cache key: the CONTENT itself — every check re-reads the file anyway
@@ -104,27 +105,26 @@ object GrantStore {
     Some(gs)
   }
 
-  def grant(warehouse: String, g: Grant): Unit = synchronized {
+  def grant(io: FileIO, warehouse: String, g: Grant): Unit = synchronized {
     require(Privileges.contains(g.privilege),
       s"unknown privilege ${g.privilege} (one of ${Privileges.mkString(", ")})")
-    val cur = load(warehouse).getOrElse(Nil)
+    val cur = load(io, warehouse).getOrElse(Nil)
     val next = (cur :+ g).distinct
-    FileIO.forPath(warehouse).writeAtomicReplace(file(warehouse), render(next))
+    io.writeAtomicReplace(file(warehouse), render(next))
     cache.remove(file(warehouse))
   }
 
-  def revoke(warehouse: String, g: Grant): Unit = synchronized {
-    val cur = load(warehouse).getOrElse(Nil)
-    FileIO.forPath(warehouse)
-      .writeAtomicReplace(file(warehouse), render(cur.filterNot(_ == g)))
+  def revoke(io: FileIO, warehouse: String, g: Grant): Unit = synchronized {
+    val cur = load(io, warehouse).getOrElse(Nil)
+    io.writeAtomicReplace(file(warehouse), render(cur.filterNot(_ == g)))
     cache.remove(file(warehouse))
   }
 
   /** Does `principal` hold `privilege` (or OWNER) on the securable named by
     * `parts`, directly or through an ancestor? Returns true when access
     * control is disabled (no grants file). */
-  def allowed(warehouse: String, principal: String, privilege: String,
-      parts: Seq[String]): Boolean = load(warehouse) match {
+  def allowed(io: FileIO, warehouse: String, principal: String, privilege: String,
+      parts: Seq[String]): Boolean = load(io, warehouse) match {
     case None => true // not enforcing
     case Some(gs) => gs.exists { g =>
       g.principal == principal &&
@@ -134,9 +134,9 @@ object GrantStore {
   }
 
   /** `allowed` or throw — the enforcement entry point. */
-  def check(warehouse: String, principal: String, privilege: String,
+  def check(io: FileIO, warehouse: String, principal: String, privilege: String,
       parts: Seq[String]): Unit =
-    if (!allowed(warehouse, principal, privilege, parts))
+    if (!allowed(io, warehouse, principal, privilege, parts))
       throw new AccessDeniedException(
         s"principal '$principal' lacks $privilege on " +
           (if (parts.isEmpty) "catalog" else parts.mkString(".")))
@@ -144,15 +144,15 @@ object GrantStore {
   /** Any-of variant: UC semantics let MODIFY imply table resolution for
     * DML targets (a write-only principal can INSERT without SELECT), so
     * loadTable-style gates check "SELECT or MODIFY" rather than SELECT. */
-  def checkAny(warehouse: String, principal: String, privileges: Seq[String],
+  def checkAny(io: FileIO, warehouse: String, principal: String, privileges: Seq[String],
       parts: Seq[String]): Unit =
-    if (!privileges.exists(allowed(warehouse, principal, _, parts)))
+    if (!privileges.exists(allowed(io, warehouse, principal, _, parts)))
       throw new AccessDeniedException(
         s"principal '$principal' lacks ${privileges.mkString(" or ")} on " +
           (if (parts.isEmpty) "catalog" else parts.mkString(".")))
 
   /** Is `principal` a catalog administrator (OWNER at catalog level, or
     * access control disabled)? Gates GRANT/REVOKE administration. */
-  def isAdmin(warehouse: String, principal: String): Boolean =
-    allowed(warehouse, principal, "OWNER", Nil)
+  def isAdmin(io: FileIO, warehouse: String, principal: String): Boolean =
+    allowed(io, warehouse, principal, "OWNER", Nil)
 }

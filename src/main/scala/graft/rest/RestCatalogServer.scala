@@ -341,7 +341,7 @@ class RestCatalogServer(val warehouse: String,
         val principal = principalOf(ex).getOrElse(
           return err(ex, 401, "missing or invalid bearer token"))
         requiredPrivilege(m, segs).foreach { case (privs, parts) =>
-          GrantStore.checkAny(warehouse, principal, privs, parts)
+          GrantStore.checkAny(io, warehouse, principal, privs, parts)
         }
         segs match {
           case "grants" :: rest => grantsRoute(ex, m, rest, principal)
@@ -365,8 +365,9 @@ class RestCatalogServer(val warehouse: String,
     // is a concurrent drop/expire, not a server fault: the resource is
     // gone → 404. A shell-exec failure on a vanished temp file (Hadoop
     // local FS chmod during a raced write) is the write-side twin → 409,
-    // retryable. Surfaced by ConcurrencySoakSpec's drop/recreate races —
-    // both were 500s before.
+    // retryable; through graft's `LocalFs` that race throws
+    // NoSuchFileException instead (→ 404). Surfaced by ConcurrencySoakSpec's
+    // drop/recreate races — both were 500s before.
     case e: java.io.FileNotFoundException =>
       err(ex, 404, s"resource vanished (concurrent drop?): ${e.getMessage}",
         "NoSuchTableException")
@@ -397,20 +398,32 @@ class RestCatalogServer(val warehouse: String,
     case e: java.io.IOException
         if String.valueOf(e.getMessage)
           .startsWith("Invalid directory or I/O error occurred") &&
-          !vanishedDirStillExists(e.getMessage) =>
+          !namedPathStillExists(e.getMessage, "for dir: ") =>
       err(ex, 404, s"resource vanished (concurrent drop?): ${e.getMessage}",
         "NoSuchTableException")
+    // ...and the fifth face: Hadoop's local mkdirs stats its target twice
+    // (exists, then isDirectory), so a directory that a concurrent drop
+    // deletes between the two reads is reported as "not a directory". Only
+    // when the named path is gone; a real file in the way stays a 500.
+    // (Surfaced by ConcurrencySoakSpec: a recreate's Iceberg render racing
+    // a drop of the previous incarnation 500'd here.)
+    case e: org.apache.hadoop.fs.FileAlreadyExistsException
+        if String.valueOf(e.getMessage)
+          .startsWith("Destination exists and is not a directory") &&
+          !namedPathStillExists(e.getMessage, "not a directory: ") =>
+      err(ex, 409, s"storage mutation raced a concurrent operation, retry: " +
+        s"${e.getMessage}", "CommitFailedException")
     case e: Exception => err(ex, 500, s"${e.getClass.getSimpleName}: ${e.getMessage}")
   }
 
-  /** Hadoop's RawLocalFileSystem formats the null-File.list() IOException as
-    * "Invalid directory or I/O error occurred for dir: <path>"; parse the
-    * path back out and stat it. True = the directory is still there, so the
-    * failure was a real I/O/permission fault, not the drop race. A message
+  /** Hadoop's RawLocalFileSystem names the path after `marker` in the
+    * messages of the race faces above ("Invalid directory or I/O error
+    * occurred for dir: <path>", "Destination exists and is not a directory:
+    * <path>"); parse it back out and stat it. True = the path is still
+    * there, so the failure was a real fault, not the drop race. A message
     * without the marker (format drift) conservatively reports "exists" so
     * the error stays a 500 rather than masquerading as a concurrent drop. */
-  private def vanishedDirStillExists(msg: String): Boolean = {
-    val marker = "for dir: "
+  private def namedPathStillExists(msg: String, marker: String): Boolean = {
     val i = String.valueOf(msg).indexOf(marker)
     if (i < 0) true
     else new java.io.File(msg.substring(i + marker.length).trim).exists()
@@ -482,12 +495,12 @@ class RestCatalogServer(val warehouse: String,
     * rejected with 400 otherwise. */
   private def grantsRoute(ex: HttpExchange, method: String,
       segs: List[String], principal: String): Unit = {
-    if (!GrantStore.isAdmin(warehouse, principal))
+    if (!GrantStore.isAdmin(io, warehouse, principal))
       throw new GrantStore.AccessDeniedException(
         s"principal '$principal' is not a catalog OWNER")
     (method, segs) match {
       case ("GET", Nil) =>
-        val gs = GrantStore.load(warehouse).getOrElse(Nil)
+        val gs = GrantStore.load(io, warehouse).getOrElse(Nil)
         ok(ex, Serialization.write(Map("grants" -> gs.map(g => Map(
           "principal" -> g.principal, "privilege" -> g.privilege,
           "securable" -> g.parts)))))
@@ -498,14 +511,14 @@ class RestCatalogServer(val warehouse: String,
         // the CATALOG level (empty securable) — an OWNER grant scoped to a
         // namespace would enforce with no admin left, the exact lock-out
         // this check exists to prevent
-        if (GrantStore.load(warehouse).isEmpty &&
+        if (GrantStore.load(io, warehouse).isEmpty &&
             !(g.privilege == "OWNER" && g.parts.isEmpty))
           return err(ex, 400, "the first grant must create a catalog-level " +
             "OWNER (anything else locks every principal out, including yours)")
-        GrantStore.grant(warehouse, g)
+        GrantStore.grant(io, warehouse, g)
         ok(ex)
       case ("POST", "revoke" :: Nil) =>
-        GrantStore.revoke(warehouse, parseGrant(readJson(ex)))
+        GrantStore.revoke(io, warehouse, parseGrant(readJson(ex)))
         ok(ex)
       case _ => err(ex, 404, s"no grants route $method /${segs.mkString("/")}")
     }
@@ -792,8 +805,8 @@ class RestCatalogServer(val warehouse: String,
     // securable's — ADVICE r13). requiredPrivilege can't see the body, so
     // the check lives here.
     principalOf(ex).foreach { principal =>
-      GrantStore.check(warehouse, principal, "MODIFY", srcNs :+ srcName)
-      GrantStore.check(warehouse, principal, "CREATE_TABLE", dstNs)
+      GrantStore.check(io, warehouse, principal, "MODIFY", srcNs :+ srcName)
+      GrantStore.check(io, warehouse, principal, "CREATE_TABLE", dstNs)
     }
     if (!io.isDirectory(nsDir(dstNs)))
       return err(ex, 404, s"no namespace ${dstNs.mkString(".")}")
@@ -1767,7 +1780,7 @@ class RestCatalogServer(val warehouse: String,
       changes.foreach { c =>
         val ns = (c \ "identifier" \ "namespace").extract[Seq[String]]
         val t = (c \ "identifier" \ "name").extract[String]
-        GrantStore.check(warehouse, p, "MODIFY", ns :+ t)
+        GrantStore.check(io, warehouse, p, "MODIFY", ns :+ t)
       }
     }
     // phase 1: all requirements, no side effects. remove-snapshots is
@@ -1873,9 +1886,9 @@ class RestCatalogServer(val warehouse: String,
         // same grant shape as the spec rename: MODIFY on source,
         // CREATE_TABLE in the destination namespace (ADVICE r13)
         principalOf(ex).foreach { principal =>
-          GrantStore.check(warehouse, principal, "MODIFY",
+          GrantStore.check(io, warehouse, principal, "MODIFY",
             req.fromNamespace :+ req.fromName)
-          GrantStore.check(warehouse, principal, "CREATE_TABLE", req.toNamespace)
+          GrantStore.check(io, warehouse, principal, "CREATE_TABLE", req.toNamespace)
         }
         val from = tableRoot(req.fromNamespace, req.fromName)
         val to = tableRoot(req.toNamespace, req.toName)

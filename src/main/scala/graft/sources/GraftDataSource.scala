@@ -75,7 +75,7 @@ class GraftDataSource extends TableProvider with DataSourceRegister
   private def enforce(path: String, privilege: String): Unit =
     graft.catalog.GrantStore.sessionPrincipal.foreach { p =>
       governedBy(path).foreach { case (wh, parts) =>
-        graft.catalog.GrantStore.check(wh, p, privilege, parts)
+        graft.catalog.GrantStore.check(graft.table.FileIO.forPath(wh), wh, p, privilege, parts)
       }
     }
 

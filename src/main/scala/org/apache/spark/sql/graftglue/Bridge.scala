@@ -57,7 +57,8 @@ object Bridge {
     * their schema from `schema`: the frame's names, types and order, whose
     * field METADATA (parquet field ids) reaches the footers — the optimizer
     * strips Alias metadata before a plain write sees it. `options` are the
-    * writer options (`df.write.options`). `FileFormatWriter`, the session
+    * writer options (`df.write.options`). `file:` dirs are written through
+    * [[graft.table.LocalFs]]. `FileFormatWriter`, the session
     * state it reads and the execution id it needs are internals, hence
     * bridged. */
   def writeParquet(df: DataFrame, dir: String, schema: org.apache.spark.sql.types.StructType,
@@ -79,11 +80,14 @@ object Bridge {
     val committer = org.apache.spark.internal.io.FileCommitProtocol.instantiate(
       session.sessionState.conf.fileCommitProtocolClass,
       java.util.UUID.randomUUID().toString, dir)
+    val conf = graft.table.FileIO.withLocalFs(session.sessionState.newHadoopConfWithOptions(options))
+    // the staging caller keeps only the parquet files: a _SUCCESS marker
+    // and its .crc would be two wasted creates
+    conf.setBoolean("mapreduce.fileoutputcommitter.marksuccessfuljobs", false)
     SQLExecution.withNewExecutionId(qe, Some("graft write")) {
       FileFormatWriter.write(session, plan,
         new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
-        committer, FileFormatWriter.OutputSpec(dir, Map.empty, columns),
-        session.sessionState.newHadoopConfWithOptions(options),
+        committer, FileFormatWriter.OutputSpec(dir, Map.empty, columns), conf,
         partitionColumns = Nil, bucketSpec = None, statsTrackers = Seq(tracker),
         options = options)
     }

@@ -55,5 +55,9 @@ class BenchHygieneSpec extends SparkSpec {
       Seq("q100_pagerank", "q98_dsir_weights"))
     assert(Bench.select(names, None) == names.sorted)
     assert(Bench.select(SparkEntry.queries.keys, Some("q10")) == Seq("q10_join_anti"))
+    // PlanDump's third argument selects the same way: no q100-q129
+    assert(PlanDump.queryNames(Array("out", "tag", "q10,q11,q12")) ==
+      Seq("q10_join_anti", "q11_join_cross", "q12_join_range"))
+    assert(PlanDump.queryNames(Array("out", "tag")).size == SparkEntry.queries.size)
   }
 }

@@ -15,6 +15,7 @@ class GrantsSpec extends SparkSpec {
   import spark.implicits._
 
   private val wh = SparkSpec.warehouse
+  private lazy val whIo = graft.table.FileIO.forPath(wh)
 
   override def beforeAll(): Unit = {
     super.beforeAll()
@@ -49,7 +50,7 @@ class GrantsSpec extends SparkSpec {
 
   private def seedGrants(gs: Grant*): Unit = {
     graft.table.FileIO.forPath(wh).delete(s"$wh/_grants.json")
-    gs.foreach(GrantStore.grant(wh, _))
+    gs.foreach(GrantStore.grant(whIo, wh, _))
   }
 
   test("no grants file => not enforcing: any principal reads and writes") {
@@ -90,7 +91,7 @@ class GrantsSpec extends SparkSpec {
       }
       assert(deepMsg(d).contains("lacks MODIFY"), deepMsg(d))
     }
-    GrantStore.grant(wh, Grant("alice", "MODIFY", Seq("gdb", "accounts")))
+    GrantStore.grant(whIo, wh, Grant("alice", "MODIFY", Seq("gdb", "accounts")))
     asPrincipal("alice") {
       spark.sql("INSERT INTO graft.gdb.accounts VALUES (9, 'x@x', 'US')")
       assert(spark.sql("SELECT * FROM graft.gdb.accounts").count() == 4)
@@ -121,7 +122,7 @@ class GrantsSpec extends SparkSpec {
       }
       assert(deepMsg(w).contains("lacks MODIFY"), deepMsg(w))
     }
-    GrantStore.grant(wh, Grant("alice", "MODIFY", Seq("gdb", "accounts")))
+    GrantStore.grant(whIo, wh, Grant("alice", "MODIFY", Seq("gdb", "accounts")))
     asPrincipal("alice") {
       Seq((9L, "x@x", "US")).toDF("id", "email", "region")
         .write.format("graft").mode("append").save(path)
@@ -234,7 +235,7 @@ class GrantsSpec extends SparkSpec {
       }
       assert(deepMsg(e).contains("lacks CREATE_TABLE"), deepMsg(e))
     }
-    GrantStore.grant(wh, Grant("gina", "CREATE_TABLE", Seq("gdb")))
+    GrantStore.grant(whIo, wh, Grant("gina", "CREATE_TABLE", Seq("gdb")))
     asPrincipal("gina") {
       spark.sql("ALTER TABLE graft.gdb.accounts RENAME TO gdb.accounts2")
       spark.sql("ALTER TABLE graft.gdb.accounts2 RENAME TO gdb.accounts")
@@ -257,14 +258,14 @@ class GrantsSpec extends SparkSpec {
     seedGrants(
       Grant("admin", "OWNER", Nil),
       Grant("aaaa", "SELECT", Seq("gdb", "accounts")))
-    assert(GrantStore.allowed(wh, "aaaa", "SELECT", Seq("gdb", "accounts")))
+    assert(GrantStore.allowed(whIo, wh, "aaaa", "SELECT", Seq("gdb", "accounts")))
     // out-of-band rewrite with IDENTICAL byte size: swap principal aaaa->bbbb
     val raw = io.readString(s"$wh/_grants.json").replace("aaaa", "bbbb")
     io.writeAtomicReplace(s"$wh/_grants.json", raw)
     assert(io.size(s"$wh/_grants.json") < 4096) // the always-re-read regime
-    assert(!GrantStore.allowed(wh, "aaaa", "SELECT", Seq("gdb", "accounts")),
+    assert(!GrantStore.allowed(whIo, wh, "aaaa", "SELECT", Seq("gdb", "accounts")),
       "revoked principal kept access through a stale size-keyed cache")
-    assert(GrantStore.allowed(wh, "bbbb", "SELECT", Seq("gdb", "accounts")))
+    assert(GrantStore.allowed(whIo, wh, "bbbb", "SELECT", Seq("gdb", "accounts")))
   }
 
   test("time-travel reads are grant-checked too") {
