@@ -149,8 +149,6 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
     * the same file as spec Iceberg view metadata); Spark re-parses and
     * re-resolves the text at read time — late binding, same as
     * Iceberg/Trino views, so a view tracks table evolution. */
-  private implicit val jsonFmts: org.json4s.Formats = org.json4s.DefaultFormats
-
   private def viewPath(ident: Identifier): String =
     s"${nsPath(ident.namespace())}/_views/${ident.name()}.json"
   private def viewsDir(ns: Array[String]): String = s"${nsPath(ns)}/_views"
@@ -340,7 +338,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
         case "delete_files"     => t.deleteFilesMeta
         case "position_deletes" => t.positionDeletesMeta
         case "all_files"        => t.allFilesMeta
-        case other => throw new NoSuchTableException(ident)
+        case _ => throw new NoSuchTableException(ident)
       }
       return GraftMetadataTable(ident.toString, df)
     }

@@ -119,9 +119,6 @@ private[catalog] object GraftProcedures {
         Seq(tbl))((s, r) => load(s, r).computeColumnStats()),
       new Proc("refresh_stats", "re-record every data file's stats in the canonical pruning forms (UTC timestamp bounds, spec-integer transform values, all-null markers) — one distributed read, metadata-only commit, no data rewritten; the cheap cure for legacy tables whose stats carry no pruning claim",
         Seq(tbl))((s, r) => load(s, r).refreshStats()),
-      new Proc("replicate_table", "incrementally mirror the table's live snapshot lineage (metadata, data, tags/branches, rewritten positional deletes) to target_path — a readable replica with IDENTICAL version numbers; re-runs copy only new versions and resume a crashed copy",
-        Seq(tbl, in("target_path", StringType)))((s, r) =>
-        graft.table.Replicate.run(s, load(s, r).path, r.getUTF8String(1).toString)),
       new Proc("ancestors_of", "register a temp view of the HEAD's ancestor chain (version, timestamp, operation), newest first — Iceberg's ancestors_of",
         Seq(tbl, in("view_name", StringType)))((s, r) => {
         val t = load(s, r)
@@ -190,13 +187,6 @@ private[catalog] object GraftProcedures {
         Seq(tbl, in("source", StringType)))((s, r) =>
         graft.table.IcebergImport.importTable(s, r.getUTF8String(1).toString,
           tablePathOf(r.getUTF8String(0).toString))),
-      new Proc("import_delta", "replay a Delta Lake _delta_log (the reference's Databricks managed-table format) as a new graft table; unpartitioned data files register in place",
-        Seq(tbl, in("source", StringType)))((s, r) =>
-        graft.table.DeltaInterop.importTable(s, r.getUTF8String(1).toString,
-          tablePathOf(r.getUTF8String(0).toString))),
-      new Proc("export_delta", "write the table's current snapshot as a Delta transaction log under out_dir (data referenced in place); MOR deletes must be compacted first",
-        Seq(tbl, in("out_dir", StringType)))((s, r) =>
-        graft.table.DeltaInterop.export(load(s, r), r.getUTF8String(1).toString)),
       // the migration-out counterpart of import_iceberg: write the full
       // Iceberg v2 metadata tree (HadoopTables layout, real Avro manifests,
       // version-hint.text) for a graft table so any Iceberg reader opens it

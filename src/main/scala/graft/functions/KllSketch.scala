@@ -210,7 +210,7 @@ case class KllSketchAgg(
         case LongType => v.asInstanceOf[Long].toDouble
         case ShortType => v.asInstanceOf[Short].toDouble
         case ByteType => v.asInstanceOf[Byte].toDouble
-        case dt: DecimalType => v.asInstanceOf[org.apache.spark.sql.types.Decimal].toDouble
+        case _: DecimalType => v.asInstanceOf[org.apache.spark.sql.types.Decimal].toDouble
         case other => throw new IllegalArgumentException(s"kll_sketch: unsupported type $other")
       }
       buf.update(d)

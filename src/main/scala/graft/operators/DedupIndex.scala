@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Mat
 
@@ -172,33 +172,24 @@ object DedupIndex {
       maxProbeBuckets: Int = 100000): DataFrame = {
     val bb = bandTable(batch, idCol, textCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // materialize before releasing the bands cache (the caller gets a
-    // computed-through plan, not a lazy one over an unpersisted cache)
-    try probeTableBands(index, bb, minJaccard, maxProbeBuckets).transform(Mat.checkpoint)
-    finally bb.unpersist(blocking = false)
+    try {
+      val buckets = bb.select(col("bucket")).distinct()
+        .limit(maxProbeBuckets + 1).collect().map(_.getString(0))
+      val indexRows =
+        if (buckets.length > maxProbeBuckets) index.read
+        else index.readPruned(index.log.current,
+            Seq(org.apache.spark.sql.sources.In("bucket",
+              buckets.map(x => x: Any))))
+          .filter(col("bucket").isin(buckets.toSeq: _*))
+      // materialize before releasing the bands cache (the caller gets a
+      // computed-through plan, not a lazy one over an unpersisted cache)
+      probeBands(indexRows, bb, minJaccard).transform(Mat.checkpoint)
+    } finally bb.unpersist(blocking = false)
   }
 
-  /** [[probeTable]] over already-sketched (and ideally cached) batch bands
-    * — the streaming sink's entry, which reuses its bands for the
-    * within-batch join. Result is lazy over `batchBands`. */
-  private[graft] def probeTableBands(index: GraftTable, batchBands: DataFrame,
-      minJaccard: Double, maxProbeBuckets: Int = 100000): DataFrame = {
-    val buckets = batchBands.select(col("bucket")).distinct()
-      .limit(maxProbeBuckets + 1).collect().map(_.getString(0))
-    val snap = index.log.current
-    val indexRows =
-      if (buckets.length > maxProbeBuckets) index.read
-      else index.readPruned(snap,
-          Seq(org.apache.spark.sql.sources.In("bucket",
-            buckets.map(x => x: Any))))
-        .filter(col("bucket").isin(buckets.toSeq: _*))
-    probeBands(indexRows, batchBands, minJaccard)
-  }
-
-  /** [[probe]] over ALREADY-SKETCHED batch bands — callers that also need
-    * the batch's bands for their own joins (within-batch dedup, index
-    * append) sketch once and reuse. */
-  def probeBands(indexRows: DataFrame, batchBands: DataFrame,
+  /** [[probe]] over already-sketched batch bands: the join and estimate
+    * shared by [[probe]] and [[probeTable]]. */
+  private def probeBands(indexRows: DataFrame, batchBands: DataFrame,
       minJaccard: Double): DataFrame = {
     val bb = batchBands
       .select(col("_id").as("new_id"), col("b"), col("bucket"), col("sigs").as("new_sigs"))

@@ -211,7 +211,6 @@ object Pipeline {
   def q66(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    val cap = 512L
     val tok = documents(spark, dir)
       .select($"doc_id", ($"doc_id" / 100).cast("long").as("bucket"),
         size(split($"text", " ")).cast("long").as("ntok"))
@@ -363,6 +362,10 @@ object Pipeline {
     // (loaded box), mins 3.53 → 3.32.
     val ewd = edges.join(deg, "src").cache()
     val n = deg.count() // one scalar: the teleport term 0.15/N
+    if (n == 0L) { // no pair shares two rare shingles: no graph, no ranks
+      Seq(deg, ewd).foreach(_.unpersist())
+      return deg.select($"src".as("doc_id"), lit(0L).as("pr_scaled"))
+    }
     val base = PrScale * 15L / 100L / n
     var pr = deg.select($"src".as("node"), lit(PrScale / n).as("pr"))
     for (it <- 1 to PrIters) {

@@ -391,7 +391,8 @@ object Relational {
       check("order_nonpos_total", ord.filter($"o_totalprice" <= 0), ord))
     checks.reduce(_.unionAll(_))
       .select($"check_name", $"n_bad", $"n_checked",
-        round($"n_bad".cast("double") / $"n_checked", 6).as("bad_rate"))
+        // NULL over an empty table, as DuckDB's x / 0
+        round(try_divide($"n_bad".cast("double"), $"n_checked"), 6).as("bad_rate"))
       .orderBy($"check_name")
   }
 

@@ -160,21 +160,26 @@ object Similarity {
     // the probe = vec 0's embedding (same probe as q44's exact baseline);
     // single-row collect, metadata-grained
     val probe = vecs.filter(col("vec_id") === 0).select(col("embedding"))
-      .collect()(0).getAs[scala.collection.Seq[Float]](0).toSeq
-    val (index, cents) = ivfIndexFor(spark, dir)
-    val ivf = graft.operators.Ann.ivfSearchTable(index, cents, "vec_id", "embedding",
-      probe, k = 10, nprobe = 2)
-    val ivfIds = ivf.select(col("vec_id")).collect().map(_.getLong(0)).toSeq
-    // reference: UNPRUNED scan of the same probed lists, same top-k
-    val probes = graft.operators.Ann.probeLists(cents, probe, nprobe = 2)
-    val refIds = graft.operators.Ann.bruteForceTopK(
-        index.read.filter(col("centroid_id").isin(probes: _*)),
-        "vec_id", "embedding", probe, k = 10)
-      .select(col("vec_id")).collect().map(_.getLong(0)).toSeq
-    val exact = q44(spark, dir)
-    exact
-      .withColumn("ivf_pruned_exact", lit(ivfIds == refIds))
-      .withColumn("ivf_self_found", lit(ivfIds.contains(0L)))
+      .collect().headOption.map(_.getAs[scala.collection.Seq[Float]](0).toSeq)
+    val (prunedExact, selfFound) = probe match {
+      // no probe vector: q44's top-10 is empty, so there is nothing to check
+      case None => (true, true)
+      case Some(vec) =>
+        val (index, cents) = ivfIndexFor(spark, dir)
+        val ivf = graft.operators.Ann.ivfSearchTable(index, cents, "vec_id", "embedding",
+          vec, k = 10, nprobe = 2)
+        val ivfIds = ivf.select(col("vec_id")).collect().map(_.getLong(0)).toSeq
+        // reference: UNPRUNED scan of the same probed lists, same top-k
+        val probes = graft.operators.Ann.probeLists(cents, vec, nprobe = 2)
+        val refIds = graft.operators.Ann.bruteForceTopK(
+            index.read.filter(col("centroid_id").isin(probes: _*)),
+            "vec_id", "embedding", vec, k = 10)
+          .select(col("vec_id")).collect().map(_.getLong(0)).toSeq
+        (ivfIds == refIds, ivfIds.contains(0L))
+    }
+    q44(spark, dir)
+      .withColumn("ivf_pruned_exact", lit(prunedExact))
+      .withColumn("ivf_self_found", lit(selfFound))
   }
 
   /** Index-once, probe-many: the IVF index is a PERSISTED graft table
@@ -188,7 +193,6 @@ object Similarity {
     * changes must not re-key the cache. */
   private[graft] def ivfIndexFor(spark: SparkSession, dir: String)
       : (graft.table.GraftTable, graft.table.GraftTable) = {
-    import org.apache.spark.sql.functions.col
     val vecs = graft.Tables.embeddings(spark, dir)
     val sig = {
       val parts = Option(new java.io.File(s"$dir/embeddings.parquet").listFiles())

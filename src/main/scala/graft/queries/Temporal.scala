@@ -8,11 +8,8 @@ import graft.Tables._
 
 /** Event-time operators, batch form (SURVEY.md §2.9 "batch-over-events
   * equivalents … come first", §2.3 as-of join): tumbling / sliding /
-  * session windows over `events.ts` and the as-of join pattern. The same
-  * window semantics run unchanged under Structured Streaming — see
-  * `graft.streaming.Streams` for the readStream variants (watermarks,
-  * stateful dedup, custom state), which are spec-verified since DuckDB
-  * can't oracle a stream. */
+  * session windows over `events.ts` and the as-of join pattern, each
+  * hash-checked against its DuckDB oracle. */
 object Temporal {
 
   // ---------------------------------------------------------------- q50
@@ -89,7 +86,7 @@ object Temporal {
   // ---------------------------------------------------------------- q53
   /** Stateful-dedup batch equivalent: first event per (user, type) — the
     * batch semantics of `dropDuplicatesWithinWatermark` with an unbounded
-    * watermark (streaming variant spec-verified in StreamsSpec). */
+    * watermark. */
   def q53(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     events(spark, dir)

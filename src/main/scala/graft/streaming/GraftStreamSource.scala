@@ -301,7 +301,6 @@ class GraftStreamSource(ctx: SQLContext, path: String, fromVersion: Option[Long]
   // which is bound once, at stream start — valid across mid-stream schema
   // evolution. New columns simply don't appear until the stream restarts.
   private val pinnedSchemaId: Int = table.log.current.currentSchemaId
-  private val pinnedNames: Seq[String] = table.schema.fieldNames.toSeq
   // Pinned FIELD IDS + TYPES for the CDC branch: changelog batches carry
   // the END version's column names and types, so each batch re-resolves
   // the pinned ids against that version's schema and casts back — a

@@ -65,8 +65,6 @@ trait FileIO {
   def delete(p: String): Boolean
   def deleteRecursive(p: String): Unit
   def size(p: String): Long
-  /** Modification time of `p`, epoch millis. */
-  def mtime(p: String): Long
   /** Move `src` to a not-yet-existing `dst` (staging promote). */
   def rename(src: String, dst: String): Unit
 }
@@ -227,7 +225,6 @@ class HadoopFileIO(rootSpec: String, conf: Configuration = FileIO.activeConf())
   override def delete(p: String): Boolean = fs.delete(hp(p), false)
   override def deleteRecursive(p: String): Unit = fs.delete(hp(p), true)
   override def size(p: String): Long = fs.getFileStatus(hp(p)).getLen
-  override def mtime(p: String): Long = fs.getFileStatus(hp(p)).getModificationTime
 
   override def rename(src: String, dst: String): Unit =
     require(fs.rename(hp(src), hp(dst)), s"rename $src -> $dst failed")

@@ -1783,7 +1783,7 @@ class GraftTable private (val spark: SparkSession, rawPath: String,
     * id-bearing table schema (imports, legacy paths) writes without ids,
     * exactly as before. */
   private def fieldIdSchema(df: DataFrame, schemaId: Int,
-      explicitIdSchema: Option[StructType] = None): StructType = {
+      explicitIdSchema: Option[StructType]): StructType = {
     def addIds(dt: DataType): DataType = dt match {
       case st: StructType => StructType(st.fields.map { f =>
         val nested = f.copy(dataType = addIds(f.dataType))
@@ -2642,32 +2642,13 @@ object GraftTable {
       if (!srcIo.isDirectory(parquetDir)) Seq(parquetDir)
       else srcIo.listNames(parquetDir).filter(_.endsWith(".parquet"))
         .map(n => s"${parquetDir.stripSuffix("/")}/$n")
-    importFiles(spark, absPaths, spark.read.parquet(parquetDir).schema, path,
-      "import", Map.empty)
-  }
-
-  /** Register an explicit parquet file set (in place, one stats pass) as a
-    * new single-snapshot table — the importParquet core, shared with the
-    * Delta-log importer whose live file set comes from log replay rather
-    * than a directory listing. */
-  private[table] def importFiles(spark: SparkSession, absPaths: Seq[String],
-      schema: StructType, path: String, operation: String,
-      props: Map[String, String]): GraftTable = {
-    val (t, files) = statForImport(spark, absPaths, schema, path)
-    val snap = Snapshot(0L, -1L, System.currentTimeMillis(), operation,
-      0, Map("0" -> stampIds(schema).json), files, props)
-    t.log.commit(-1L, _ => snap)
-    t
-  }
-
-  /** Importer primitive: init an empty table at `path` and stat the given
-    * parquet files WITHOUT committing — history-replaying importers commit
-    * their own snapshot chain over the shared [[DataFile]] pool. */
-  private[table] def statForImport(spark: SparkSession, absPaths: Seq[String],
-      schema: StructType, path: String): (GraftTable, Seq[DataFile]) = {
+    val schema = spark.read.parquet(parquetDir).schema
     val t = new GraftTable(spark, path)
     require(!t.log.exists, s"graft table already exists at $path")
     t.log.initDirs()
-    (t, t.statFiles(absPaths, schema, 0, identity))
+    val files = t.statFiles(absPaths, schema, 0, identity)
+    t.log.commit(-1L, _ => Snapshot(0L, -1L, System.currentTimeMillis(), "import",
+      0, Map("0" -> stampIds(schema).json), files, Map.empty))
+    t
   }
 }

@@ -512,7 +512,7 @@ object IcebergExport {
   /** Manifest-entry Avro schema; `partitionFields` injects the typed slots
     * of the manifest's partition spec into the r102 record (empty for
     * spec-0 / unpartitioned manifests). */
-  private def manifestEntrySchema(partitionFields: String, v3: Boolean = false): String = {
+  private def manifestEntrySchema(partitionFields: String, v3: Boolean): String = {
     // v3 deletion-vector reference fields (Iceberg spec data_file 143-145);
     // only v3 manifests declare them so v2 output stays byte-identical
     val dvFields = if (!v3) "" else
@@ -571,7 +571,7 @@ object IcebergExport {
       fileFormat: String = "PARQUET",
       // v3 manifests declare the DV fields; a deletion-vector entry fills
       // them (referenced data file URI, blob offset, blob length)
-      v3: Boolean = false,
+      v3: Boolean,
       dv: Option[(String, Long, Long)] = None): Array[Byte] = {
     val b = new AvroBuf
     b.int(0)                    // status EXISTING
@@ -737,7 +737,6 @@ object IcebergExport {
     val schemaJsonById: Map[Int, JValue] = allSchemaIds.map(id =>
       id -> (icebergType(schemasWithIds(id), rootNextId).asInstanceOf[JObject] ~
         ("schema-id" -> id): JValue)).toMap
-    val schemaJson: JValue = schemaJsonById(head.currentSchemaId)
     val schemaJsonStrById: Map[Int, String] = schemaJsonById.view
       .mapValues(j => JsonMethods.compact(JsonMethods.render(j))).toMap
 

@@ -431,8 +431,8 @@ object IcebergImport {
       partSpecs: Map[Int, Seq[(String, String, Int)]] = Map.empty,
       // v3 deletion vectors materialize as graft positional-delete parquet
       // under this dir (the import path passes the target's data dir); the
-      // session-free REST commit path leaves it None and fails loudly
-      dvDir: Option[String] = None)
+      // session-free REST commit path passes None and fails loudly
+      dvDir: Option[String])
       : (Seq[DataFile], Seq[DataFile], Seq[EqDeleteFile]) = {
     val data = Seq.newBuilder[DataFile]
     val pos = Seq.newBuilder[DataFile]
@@ -635,7 +635,6 @@ object IcebergImport {
     }.getOrElse(Map.empty)
   }
 
-  private def stat1(v: String): ColumnStats = ColumnStats(v, v, "string", -1L)
   private def statN(v: Int): ColumnStats =
     ColumnStats(v.toString, v.toString, "long", -1L)
 

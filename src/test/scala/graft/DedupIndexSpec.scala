@@ -117,64 +117,25 @@ class DedupIndexSpec extends SparkSpec {
       s"pruning read ${touched.size} of ${snap.files.size} files")
   }
 
-  test("graftSinkDeduped: online near-dup filtering, batch-to-batch index catch-up") {
-    implicit val ctx = spark.sqlContext
+  test("probeTable finds rows appended after the build only after a refresh") {
     val base = GraftTable.create(spark, tmp("didx-"), docs(corpus: _*))
     val path = tmp("didx-i-")
     DedupIndex.buildIndexTableFrom(spark, base, "doc_id", "text", path)
-
-    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val q = ms.toDF().toDF("doc_id", "text")
-      .writeStream
-      .foreachBatch(graft.streaming.Streams.graftSinkDeduped(base, path, "doc_id", "text") _)
-      .outputMode("append").start()
-    try {
-      // batch 1: 20 = near-dup of corpus doc 1 (drops); 21 novel (kept);
-      // 22/23 = within-batch near-dups of each other (lower id 22 kept)
-      ms.addData(
-        20L -> "the quick brown fox jumps over the lazy dog today",
-        21L -> "a wholly novel document that resembles nothing stored so far anywhere",
-        22L -> "two peas in a pod share almost every single shingle right here",
-        23L -> "two peas in a pod share almost every single shingle right there")
-      q.processAllAvailable()
-      val t1 = GraftTable.load(spark, base.path)
-      val kept1 = t1.read.filter($"doc_id" >= 20L)
-        .select($"doc_id").collect().map(_.getLong(0)).toSet
-      assert(kept1 == Set(21L, 22L), kept1)
-      // the index caught up to the post-append head in the same batch
-      assert(GraftTable.load(spark, path).log.current
-        .properties(DedupIndex.IndexedVersionProp) == t1.log.currentVersion.toString)
-
-      // batch 2: 30 = near-dup of 22 — a doc kept by BATCH 1, so only the
-      // refreshed index knows it; 31 novel
-      ms.addData(
-        30L -> "two peas in a pod share almost every single shingle right here",
-        31L -> "yet another unique piece of text with its own vocabulary entirely")
-      q.processAllAvailable()
-      val kept2 = GraftTable.load(spark, base.path).read.filter($"doc_id" >= 30L)
-        .select($"doc_id").collect().map(_.getLong(0)).toSet
-      assert(kept2 == Set(31L), kept2)
-    } finally q.stop()
-
-    // replayed micro-batch id: a no-op (exactly-once rides the same stamp
-    // as graftSink)
-    val head = GraftTable.load(spark, base.path)
-    val v = head.log.currentVersion
-    graft.streaming.Streams.graftSinkDeduped(head, path, "doc_id", "text")(
-      docs(99L -> "replay should not land"), 1L)
-    assert(GraftTable.load(spark, base.path).log.currentVersion == v)
-
-    // crash window: rows appended WITHOUT an index refresh (a crash between
-    // a batch's append and its catch-up) must still be probe-visible to the
-    // next batch — the sink refreshes before probing
     GraftTable.load(spark, base.path).append(
-      docs(40L -> "a crashed batch left this sentence in the corpus unindexed"))
-    graft.streaming.Streams.graftSinkDeduped(
-      GraftTable.load(spark, base.path), path, "doc_id", "text")(
-      docs(41L -> "a crashed batch left this sentence in the corpus unindexed"), 99L)
-    val post = GraftTable.load(spark, base.path).read
-      .filter($"doc_id" === 41L).count()
-    assert(post == 0L, "near-dup of an unindexed crash-window row was ingested")
+      docs(40L -> "a late append left this sentence in the corpus unindexed"))
+    val batch = docs(41L -> "a late append left this sentence in the corpus unindexed")
+    def dupsOf(idx: GraftTable): Set[Long] =
+      DedupIndex.probeTable(idx, batch, "doc_id", "text", 0.5)
+        .select($"dup_of").collect().map(_.getLong(0)).toSet
+
+    // the index still stands at the build's version: the appended row is
+    // invisible to the probe until the catch-up reads the changelog
+    assert(dupsOf(GraftTable.load(spark, path)).isEmpty)
+    val head = GraftTable.load(spark, base.path)
+    val refreshed = DedupIndex.refreshIndexTable(spark, path, head, "doc_id", "text")
+    assert(refreshed.log.current.properties(DedupIndex.IndexedVersionProp)
+      == head.log.currentVersion.toString)
+    assert(dupsOf(refreshed) == Set(40L))
   }
 
   test("refresh at the indexed version is a no-op; rollback demands a rebuild") {

@@ -54,7 +54,6 @@ class FaultInjectionSpec extends SparkSpec {
     def delete(p: String): Boolean = { mut(); inner.delete(p) }
     def deleteRecursive(p: String): Unit = { mut(); inner.deleteRecursive(p) }
     def size(p: String): Long = { gate(); inner.size(p) }
-    def mtime(p: String): Long = { gate(); inner.mtime(p) }
     def rename(src: String, dst: String): Unit = { mut(); inner.rename(src, dst) }
   }
 

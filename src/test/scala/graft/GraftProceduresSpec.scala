@@ -217,6 +217,24 @@ class GraftProceduresSpec extends SparkSpec {
     assert(e.getMessage.contains("nope"))
   }
 
+  test("the system namespace lists exactly the supported procedures") {
+    init()
+    val cat = spark.sessionState.catalogManager.catalog("graft")
+      .asInstanceOf[graft.catalog.GraftCatalog]
+    val names = cat.listProcedures(Array("system")).map(_.name()).toSet
+    assert(names == Set(
+      "add_partition_field", "analyze_table", "ancestors_of", "build_dedup_index",
+      "cherrypick_snapshot", "compute_table_stats", "create_branch",
+      "create_changelog_view", "create_tag", "dedup_probe", "deregister_agg_rewrite",
+      "drop_partition_field", "drop_ref", "expire_snapshots", "export_iceberg",
+      "fast_forward", "import_iceberg", "import_parquet", "materialize_agg",
+      "publish_changes", "refresh_agg", "refresh_dedup_index", "refresh_stats",
+      "register_agg_rewrite", "remove_orphan_files", "rewrite_data_files",
+      "rewrite_manifests", "rewrite_position_delete_files", "rewrite_small_files",
+      "rollback_to_snapshot", "rollback_to_timestamp", "set_current_snapshot"),
+      names.toSeq.sorted.mkString(", "))
+  }
+
   test("write-audit-publish: spark.wap.id stages, publish_changes releases, dup publish rejected") {
     init()
     spark.sql("CREATE TABLE graft.proc.wap (id BIGINT) " +

@@ -196,6 +196,22 @@ class GraftTableSpec extends SparkSpec {
     assert(t.read.count() == 2)
   }
 
+  test("import stats files whose names the scan renders percent-encoded") {
+    val src = tmpDir()
+    Seq((1L, "x"), (2L, "y")).toDF("k", "v").coalesce(1).write.mode("overwrite").parquet(src)
+    val part = new java.io.File(src).listFiles().find(_.getName.endsWith(".parquet")).get.toPath
+    // `_metadata.file_path` renders a space as %20; a literal '+' must not
+    // decode to a space
+    Files.copy(part, Paths.get(src, "doc+1.parquet"))
+    Files.move(part, Paths.get(src, "part one.parquet"))
+    val t = GraftTable.importParquet(spark, src, tmpDir())
+    val files = t.log.current.files
+    assert(files.map(f => new java.io.File(f.path).getName).toSet ==
+      Set("part one.parquet", "doc+1.parquet"), files.map(_.path))
+    assert(files.forall(f => f.rows == 2L && f.bytes == Files.size(Paths.get(f.path))))
+    assert(t.read.count() == 4)
+  }
+
   test("file pruning from stats: lookup keeps only candidate files") {
     val t = mk(Seq((1L, "a", 10.0)))
     t.append(Seq((100L, "b", 20.0)).toDF("id", "name", "amount"))

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.queries.{Dedup, Pipeline}
+import graft.queries.{Dedup, Pipeline, Relational, Similarity}
 
 /** Invariants for the pipeline-assembly operators (q62–q66) beyond the
   * DuckDB hash oracle: structural properties the hash can't state. */
@@ -28,17 +28,48 @@ class PipelineSpec extends SparkSpec {
       assert(labels(a) == labels(c))
   }
 
+  private def fixtureDir(prefix: String): String = java.nio.file.Files
+    .createTempDirectory(java.nio.file.Paths.get("target"), prefix).toString
+
   test("q62: a corpus with no near-duplicate pairs yields no clusters, not a crash") {
     // five fixture documents whose texts share no word, so q41 finds no
     // pair: the label frame is empty and SUM(chg) over it is NULL
-    val dir = java.nio.file.Files
-      .createTempDirectory(java.nio.file.Paths.get("target"), "q62-nodup-").toString
+    val dir = fixtureDir("q62-nodup-")
     Tables.documents(spark, sf).orderBy("doc_id").limit(5)
       .withColumn("text", expr(
         "array_join(transform(sequence(1, 8), i -> concat('w', doc_id, '_', i)), ' ')"))
       .write.parquet(s"$dir/documents.parquet")
     assert(Dedup.q41(spark, dir).isEmpty, "fixture must have no near-dup pairs")
     assert(Pipeline.q62(spark, dir).collect().isEmpty)
+  }
+
+  test("q100: a one-document corpus has no rank graph and yields no rows, not a crash") {
+    // one document shares no shingle with another, so no edge and N = 0
+    val dir = fixtureDir("q100-onedoc-")
+    Tables.documents(spark, sf).orderBy("doc_id").limit(1)
+      .write.parquet(s"$dir/documents.parquet")
+    val out = Pipeline.q100(spark, dir)
+    assert(out.columns.toSeq == Seq("doc_id", "pr_scaled"))
+    assert(out.collect().isEmpty)
+  }
+
+  test("q70: an empty embeddings table yields q70's columns and no rows, not a crash") {
+    val dir = fixtureDir("q70-empty-")
+    Tables.embeddings(spark, sf).limit(0).write.parquet(s"$dir/embeddings.parquet")
+    val out = Similarity.q70(spark, dir)
+    assert(out.columns.toSeq ==
+      Seq("vec_id", "cos_sim", "ivf_pruned_exact", "ivf_self_found"))
+    assert(out.collect().isEmpty)
+  }
+
+  test("q130: empty tables give zero counts and a NULL bad_rate, not a crash") {
+    val dir = fixtureDir("q130-empty-")
+    for (t <- Seq("lineitem", "orders", "customer", "part"))
+      Tables.table(spark, sf, t).limit(0).write.parquet(s"$dir/$t.parquet")
+    val rows = Relational.q130(spark, dir).collect()
+    assert(rows.length == 7)
+    assert(rows.forall(r => r.getLong(1) == 0L && r.getLong(2) == 0L && r.isNullAt(3)),
+      rows.mkString("; "))
   }
 
   test("q63: bm25 scores are positive and capped by top-k contract") {
