@@ -25,18 +25,22 @@ object Harness {
     spark
   }
 
-  /** Under `SPARK_GRAFT_PLAN_MODE=server` (`server-async` also plans via
-    * submit/poll): register the fixtures in place (zero data copies) behind
-    * an in-process REST catalog and point the declared queries at them, so
-    * every scan plans through `/plan`. Returns the server for the caller to
-    * stop; None otherwise. */
+  /** `SPARK_GRAFT_PLAN_MODE` is `local` (the default: read the fixture
+    * files directly) or `server`: register the fixtures in place (zero data
+    * copies) behind an in-process REST catalog and point the declared
+    * queries at them, so every scan plans through `/plan`. Returns the
+    * server for the caller to stop; None in local mode. */
   def restFixtures(spark: SparkSession, sfDir: String): Option[graft.rest.RestCatalogServer] = {
     val planMode = sys.env.getOrElse("SPARK_GRAFT_PLAN_MODE", "local")
-    if (planMode != "server" && planMode != "server-async") return None
+    planMode match {
+      case "local" => return None
+      case "server" =>
+      case other => throw new IllegalArgumentException(
+        s"SPARK_GRAFT_PLAN_MODE must be 'local' or 'server', got '$other'")
+    }
     val srv = new graft.rest.RestCatalogServer(
       Files.createTempDirectory("graft-verify-wh").toString,
-      Map("verify" -> "verify-secret"),
-      planAsync = planMode == "server-async").start()
+      Map("verify" -> "verify-secret")).start()
     try {
       spark.conf.set("spark.sql.catalog.graftv", "graft.catalog.GraftCatalog")
       spark.conf.set("spark.sql.catalog.graftv.uri", srv.uri)

@@ -31,13 +31,11 @@ import org.apache.spark.sql.catalyst.trees.TreeNodeTag
   * which catches relations spliced in LATE by view expansion
   * ([[GraftViewRead]]): a view over a governed table is governed too.
   *
-  * Scope and bypass, by design:
+  * Scope, by design:
   *  - DML and write TARGETS (UPDATE/MERGE/DELETE/INSERT) read the raw
   *    table — the writer role; row images must not be masked or the write
   *    would corrupt. MERGE/INSERT *sources* that are governed tables ARE
   *    masked (what the writer may read is policy-bound).
-  *  - `SET spark.graft.governance.bypass=true` disables enforcement for
-  *    the session — the privileged-reader escape hatch.
   *  - The direct path API (`GraftTable.read`) and maintenance procedures
   *    are engine-internal and privileged, like Iceberg's own action APIs.
   *  - The path-based DSv2 entry (`spark.read.format("graft").load(path)`)
@@ -56,7 +54,6 @@ case class GraftGovernance(spark: SparkSession) extends Rule[LogicalPlan] {
   import GraftGovernance._
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (bypassed(spark)) return plan
     // write/DML targets keep the raw table: collect them BY REFERENCE
     val exempt = java.util.Collections.newSetFromMap(
       new java.util.IdentityHashMap[LogicalPlan, java.lang.Boolean]())
@@ -188,9 +185,6 @@ object GraftGovernance {
     if (filter.isEmpty && masks.isEmpty) None else Some((filter, masks))
   }
 
-  private def bypassed(spark: SparkSession): Boolean =
-    spark.sessionState.conf.getConfString("spark.graft.governance.bypass", "false") == "true"
-
   /** Fail closed where this rule does not run (a session without
     * `GraftExtensions`): refuse a governed table in the scope the rule
     * covers — catalog reads always, path reads for a principal. */
@@ -202,7 +196,7 @@ object GraftGovernance {
     def current =
       if (g.asOfVersion.isEmpty && g.asOfTimestampMs.isEmpty && g.branch.isEmpty) s.snap
       else g.t.log.current
-    if ((catalogRead || GrantStore.sessionPrincipal.nonEmpty) && !bypassed(spark) &&
+    if ((catalogRead || GrantStore.sessionPrincipal.nonEmpty) &&
         !spark.sessionState.analyzer.extendedResolutionRules.exists(_.isInstanceOf[GraftGovernance]) &&
         policiesOf(current.properties).nonEmpty)
       throw new SecurityException(s"${g.name()} carries row-filter or column-mask " +

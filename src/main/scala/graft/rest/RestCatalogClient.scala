@@ -48,6 +48,10 @@ class RestCatalogClient(val baseUri: String, credential: Option[String],
   private def enc(s: String) = java.net.URLEncoder.encode(s, StandardCharsets.UTF_8)
   private val Sep = "\u001f" // Iceberg REST multipart-namespace separator
   private def encNs(ns: Seq[String]): String = enc(ns.mkString(Sep))
+  // Listing, probing, dropping, planning and credential re-vends go to the
+  // spec routes foreign engines use; the native `/v1/` routes remain only
+  // where the spec route answers differently (see RestCatalogServer).
+  private val Spec = "/v1/iceberg"
 
   private def dispatch(method: String, path: String, body: Option[String]): HttpResponse[String] = {
     val b = HttpRequest.newBuilder(URI.create(s"$baseUri$path"))
@@ -128,10 +132,8 @@ class RestCatalogClient(val baseUri: String, credential: Option[String],
   }
   private def errMsg(resp: HttpResponse[String]): String =
     try {
-      val e = JsonMethods.parse(resp.body()) \ "error"
-      // spec ErrorModel object ({"message","type","code"}) or the legacy
-      // flat string — accept both so the client survives older servers
-      (e \ "message").extractOpt[String].getOrElse(e.extract[String])
+      // spec ErrorModel: {"error": {"message", "type", "code"}}
+      (JsonMethods.parse(resp.body()) \ "error" \ "message").extract[String]
     } catch { case _: Exception => resp.body() }
 
   // ---- config / namespaces -------------------------------------------------
@@ -143,7 +145,7 @@ class RestCatalogClient(val baseUri: String, credential: Option[String],
     (expect(send("GET", "/v1/config"), "config") \ "overrides" \ "warehouse").extract[String]
 
   def listNamespaces(): Seq[Seq[String]] =
-    (expect(send("GET", "/v1/namespaces"), "list namespaces") \ "namespaces")
+    (expect(send("GET", s"$Spec/namespaces"), "list namespaces") \ "namespaces")
       .extract[Seq[Seq[String]]]
 
   def createNamespace(ns: Seq[String]): Unit =
@@ -164,7 +166,7 @@ class RestCatalogClient(val baseUri: String, credential: Option[String],
   }
 
   def namespaceExists(ns: Seq[String]): Boolean =
-    probe(s"/v1/namespaces/${encNs(ns)}", "namespace existence check")
+    probe(s"$Spec/namespaces/${encNs(ns)}", "namespace existence check")
 
   /** Returns false on 404; propagates 409 (non-empty). `cascade` asks the
     * server to drop the whole namespace tree — tables, stored views, and
@@ -180,7 +182,7 @@ class RestCatalogClient(val baseUri: String, credential: Option[String],
   // ---- tables --------------------------------------------------------------
 
   def listTables(ns: Seq[String]): Seq[String] =
-    (expect(send("GET", s"/v1/namespaces/${encNs(ns)}/tables"), "list tables") \ "identifiers")
+    (expect(send("GET", s"$Spec/namespaces/${encNs(ns)}/tables"), "list tables") \ "identifiers")
       .extract[Seq[Map[String, Any]]].map(_("name").toString)
 
   def tableExists(ns: Seq[String], table: String): Boolean =
@@ -199,12 +201,18 @@ class RestCatalogClient(val baseUri: String, credential: Option[String],
       Some(Serialization.write(CreateTableReq(table, schemaJson, properties)))),
       "create table") \ "location").extract[String]
 
-  /** Returns false only on 404 (no such table); auth/server errors raise
-    * instead of masquerading as "nothing to drop". */
+  /** Spec dropTable with `purgeRequested=true`: the table's whole tree,
+    * data included, goes. Returns false only on 404 (no such table);
+    * auth/server errors raise instead of masquerading as "nothing to
+    * drop". */
   def dropTable(ns: Seq[String], table: String): Boolean = {
-    val resp = send("DELETE", s"/v1/namespaces/${encNs(ns)}/tables/${enc(table)}")
-    if (resp.statusCode() == 404) false
-    else { expect(resp, "drop table"); true }
+    val resp = send("DELETE",
+      s"$Spec/namespaces/${encNs(ns)}/tables/${enc(table)}?purgeRequested=true")
+    resp.statusCode() match {
+      case 204 => true
+      case 404 => false
+      case _ => expect(resp, "drop table"); true // expect throws for non-200
+    }
   }
 
   def renameTable(fromNs: Seq[String], from: String, toNs: Seq[String], to: String): Unit =
@@ -230,40 +238,13 @@ class RestCatalogClient(val baseUri: String, credential: Option[String],
       snapshotId: Option[Long] = None): Seq[PlannedTask] = {
     val body = "{" + (filterJson.map(f => s""""filter":$f""").toSeq ++
       snapshotId.map(v => s""""snapshot-id":$v""").toSeq).mkString(",") + "}"
-    val submitted = expect(send("POST",
-      s"/v1/iceberg/namespaces/${encNs(ns)}/tables/${enc(table)}/plan",
+    val first = expect(send("POST",
+      s"$Spec/namespaces/${encNs(ns)}/tables/${enc(table)}/plan",
       Some(body)), "plan scan")
-    // spec async leg (ADVICE r16): a conforming catalog may answer
-    // "submitted" + plan-id; poll GET …/plan/{plan-id} until it completes.
-    // Bounded (100 polls, linear backoff) so a catalog stuck in
-    // "submitted" fails loudly instead of hanging the engine.
-    val first = (submitted \ "plan-status").extractOpt[String] match {
-      case Some("completed") => submitted
-      case Some("submitted") =>
-        val id = (submitted \ "plan-id").extractOpt[String].getOrElse(
-          throw new IllegalStateException(
-            "plan scan: server answered 'submitted' without a plan-id"))
-        var polls = 0
-        var result: Option[JValue] = None
-        while (result.isEmpty) {
-          polls += 1
-          if (polls > 100) throw new IllegalStateException(
-            s"plan scan: plan $id still not completed after $polls polls")
-          val got = expect(send("GET",
-            s"/v1/iceberg/namespaces/${encNs(ns)}/tables/${enc(table)}/plan/${enc(id)}"),
-            "fetch planning result")
-          (got \ "plan-status").extractOpt[String] match {
-            case Some("completed") => result = Some(got)
-            case Some("submitted") => Thread.sleep(20L * polls)
-            case other => throw new IllegalStateException(
-              s"plan scan: plan $id ended in status $other")
-          }
-        }
-        result.get
-      case other => throw new IllegalStateException(
-        s"plan scan: unsupported plan-status $other (this client speaks the " +
-          "synchronous 'completed' and async 'submitted' legs)")
-    }
+    // graft's server always plans synchronously
+    val status = (first \ "plan-status").extractOpt[String]
+    if (!status.contains("completed")) throw new IllegalStateException(
+      s"plan scan: plan-status ${status.getOrElse("missing")}, expected 'completed'")
     // each response carries its OWN delete-files array (task references
     // index into it), plus optional chained `plan-tasks` tokens — drain
     // them through spec fetchScanTasks until no page points onward, so
@@ -296,7 +277,7 @@ class RestCatalogClient(val baseUri: String, credential: Option[String],
       require(seen.add(tok), "plan-tasks cycle: the server repeated a page token")
       require(seen.size <= 100000, "plan-tasks chain exceeded 100k pages")
       val page = expect(send("POST",
-        s"/v1/iceberg/namespaces/${encNs(ns)}/tables/${enc(table)}/tasks",
+        s"$Spec/namespaces/${encNs(ns)}/tables/${enc(table)}/tasks",
         Some(s"""{"plan-task":${Serialization.write(tok)}}""")), "fetch scan tasks")
       out ++= tasksOf(page)
       pending = pending ++ (page \ "plan-tasks").extractOpt[Seq[String]].getOrElse(Nil)
@@ -323,7 +304,7 @@ class RestCatalogClient(val baseUri: String, credential: Option[String],
       case Some(live) => live.config
       case None => // first ask, or expired: (re-)vend
         val body = expect(send("GET",
-          s"/v1/iceberg/namespaces/${encNs(ns)}/tables/${enc(table)}/credentials"),
+          s"$Spec/namespaces/${encNs(ns)}/tables/${enc(table)}/credentials"),
           "load credentials")
         val cfg = (body \ "storage-credentials") match {
           case JArray(item :: _) => (item \ "config").extract[Map[String, String]]

@@ -44,37 +44,52 @@ private[rest] case class RenameReq(fromNamespace: Seq[String], fromName: String,
   * grant issues a bearer token; every other endpoint requires
   * `Authorization: Bearer <token>` and answers 401 otherwise.
   *
-  * Endpoints (Iceberg-REST-shaped, namespace parts joined with the spec's
-  * 0x1F unit separator):
+  * Endpoints (namespace parts joined with the spec's 0x1F unit
+  * separator). The spec surface under `/v1/iceberg/` is the one every
+  * engine uses, graft's own [[RestCatalogClient]] included; the native
+  * routes under `/v1/` remain only where the spec route answers
+  * differently from what graft's catalog needs:
   * {{{
   *   POST   /v1/oauth/tokens                         client_credentials -> token
-  *   GET    /v1/config                               {"overrides":{"warehouse":...}}
-  *   GET    /v1/namespaces                           list namespaces
-  *   POST   /v1/namespaces                           create namespace
-  *   GET    /v1/namespaces/{ns}                      namespace exists
-  *   DELETE /v1/namespaces/{ns}                      drop (409 if non-empty)
-  *   GET    /v1/namespaces/{ns}/tables               list tables
-  *   POST   /v1/namespaces/{ns}/tables               create table
-  *   GET    /v1/namespaces/{ns}/tables/{t}           location + current version
-  *   DELETE /v1/namespaces/{ns}/tables/{t}           drop table
+  *   GET    /v1/config                               overrides + advertised endpoints
+  *   GET    /v1/grants                               list grants (catalog OWNERs)
+  *   POST   /v1/grants                               grant
+  *   POST   /v1/grants/revoke                        revoke
+  *
+  *   native (graft's catalog only):
+  *   POST   /v1/namespaces                           create namespace (idempotent; spec: 409)
+  *   DELETE /v1/namespaces/{ns}                      drop (?cascade=true drops the tree)
+  *   POST   /v1/namespaces/{ns}/tables               create from a Spark schema + graft.* properties
+  *   GET    /v1/namespaces/{ns}/tables/{t}           location + current version (no metadata render)
   *   POST   /v1/namespaces/{ns}/tables/{t}/commit    CAS commit (409 on conflict)
   *   POST   /v1/namespaces/{ns}/tables/{t}/head      move HEAD (rollback)
   *   POST   /v1/namespaces/{ns}/tables/{t}/refs      set a branch/tag
   *   DELETE /v1/namespaces/{ns}/tables/{t}/refs/{r}  drop a ref
-  *   POST   /v1/tables/rename                        rename across namespaces
-  *   POST   /v1/iceberg/transactions/commit          spec multi-table commit
-  *   POST   /v1/iceberg/namespaces                   spec createNamespace
-  *   DELETE /v1/iceberg/namespaces/{ns}              spec dropNamespace
-  *   POST   /v1/iceberg/namespaces/{ns}/tables       spec createTable
-  *   DELETE /v1/iceberg/namespaces/{ns}/tables/{t}   spec dropTable (?purgeRequested=true deletes data)
-  *   GET    /v1/iceberg/namespaces/{ns}/views        spec listViews
-  *   GET    /v1/iceberg/namespaces/{ns}/views/{v}    spec loadView (view metadata)
-  *   POST   /v1/iceberg/namespaces/{ns}/register     spec registerTable (existing Iceberg metadata)
-  *   POST   /v1/iceberg/namespaces/{ns}/views        spec createView
-  *   POST   /v1/iceberg/namespaces/{ns}/views/{v}    spec view commit (replace / set-properties)
-  *   DELETE /v1/iceberg/namespaces/{ns}/views/{v}    spec dropView
-  *   POST   /v1/iceberg/tables/rename                spec renameTable (history preserved)
-  *   POST   /v1/iceberg/views/rename                 spec renameView
+  *   POST   /v1/tables/rename                        rename, creating a missing destination namespace
+  *
+  *   spec (prefix = iceberg):
+  *   GET    /v1/iceberg/namespaces                   listNamespaces
+  *   POST   /v1/iceberg/namespaces                   createNamespace (409 if it exists)
+  *   GET    /v1/iceberg/namespaces/{ns}              loadNamespaceMetadata (HEAD: exists)
+  *   DELETE /v1/iceberg/namespaces/{ns}              dropNamespace (409 if non-empty)
+  *   GET    /v1/iceberg/namespaces/{ns}/tables       listTables
+  *   POST   /v1/iceberg/namespaces/{ns}/tables       createTable
+  *   POST   /v1/iceberg/namespaces/{ns}/register     registerTable (existing Iceberg metadata)
+  *   GET    /v1/iceberg/namespaces/{ns}/tables/{t}   loadTable (HEAD: exists)
+  *   POST   /v1/iceberg/namespaces/{ns}/tables/{t}   updateTable commit
+  *   DELETE /v1/iceberg/namespaces/{ns}/tables/{t}   dropTable (?purgeRequested=true deletes data)
+  *   GET    /v1/iceberg/namespaces/{ns}/tables/{t}/credentials  loadCredentials
+  *   POST   /v1/iceberg/namespaces/{ns}/tables/{t}/metrics      reportMetrics
+  *   POST   /v1/iceberg/namespaces/{ns}/tables/{t}/plan         planTableScan (always completed)
+  *   POST   /v1/iceberg/namespaces/{ns}/tables/{t}/tasks        fetchScanTasks
+  *   POST   /v1/iceberg/transactions/commit          multi-table commit
+  *   GET    /v1/iceberg/namespaces/{ns}/views        listViews
+  *   POST   /v1/iceberg/namespaces/{ns}/views        createView
+  *   GET    /v1/iceberg/namespaces/{ns}/views/{v}    loadView (HEAD: exists)
+  *   POST   /v1/iceberg/namespaces/{ns}/views/{v}    view commit (replace / set-properties)
+  *   DELETE /v1/iceberg/namespaces/{ns}/views/{v}    dropView
+  *   POST   /v1/iceberg/tables/rename                renameTable (history preserved)
+  *   POST   /v1/iceberg/views/rename                 renameView
   * }}}
   */
 class RestCatalogServer(val warehouse: String,
@@ -106,15 +121,7 @@ class RestCatalogServer(val warehouse: String,
     // re-introduces an O(pages × files) prune per drain. Eviction is
     // NEVER a correctness event — plan-task tokens are stateless, a miss
     // re-prunes — so this is purely the memory-vs-recompute knob.
-    planCacheSize: Int = 64,
-    // Spec ASYNC planning leg (VERDICT r16 #6): when true, POST /plan
-    // answers {"plan-status":"submitted","plan-id"} and the result is
-    // fetched via GET …/plan/{plan-id} (cancel via DELETE). graft's
-    // pruning is O(in-memory metadata) so the synchronous completed
-    // answer (default) is always available — the async mode exists for
-    // spec completeness and to prove the CLIENT's polling leg against a
-    // spec-conforming async catalog.
-    planAsync: Boolean = false) {
+    planCacheSize: Int = 64) {
 
   require(planPageSize > 0, // 0 would page forever at the same offset
     s"planPageSize must be positive, got $planPageSize")
@@ -296,7 +303,7 @@ class RestCatalogServer(val warehouse: String,
       case _ if !authorized(ex) => err(ex, 401, "missing or invalid bearer token")
       case ("GET", "/v1/config") =>
         // `prefix` routes SPEC-conformant Iceberg REST clients to the
-        // /v1/iceberg/... surface below; graft's own protocol stays at /v1/.
+        // /v1/iceberg/... surface below; graft's native routes stay at /v1/.
         // `endpoints` is the spec's capability advertisement — clients
         // feature-detect optional surfaces (scan planning, metrics,
         // credential re-vend, views, transactions) from this list instead
@@ -319,8 +326,6 @@ class RestCatalogServer(val warehouse: String,
           "GET /v1/{prefix}/namespaces/{namespace}/tables/{table}/credentials",
           "POST /v1/{prefix}/namespaces/{namespace}/tables/{table}/metrics",
           "POST /v1/{prefix}/namespaces/{namespace}/tables/{table}/plan",
-          "GET /v1/{prefix}/namespaces/{namespace}/tables/{table}/plan/{plan-id}",
-          "DELETE /v1/{prefix}/namespaces/{namespace}/tables/{table}/plan/{plan-id}",
           "POST /v1/{prefix}/namespaces/{namespace}/tables/{table}/tasks",
           "GET /v1/{prefix}/namespaces/{namespace}/views",
           "GET /v1/{prefix}/namespaces/{namespace}/views/{view}",
@@ -456,11 +461,6 @@ class RestCatalogServer(val warehouse: String,
       // to start)
       case ("POST", "namespaces" :: ns :: "tables" :: t :: ("plan" | "tasks") :: Nil) =>
         Some(Seq("SELECT", "MODIFY") -> (decNs(ns) :+ t))
-      // the async leg's fetch/cancel are part of the same READ: a
-      // SELECT-only principal that submitted a plan must be able to
-      // fetch and cancel it (the MODIFY catch-all below would 403 both)
-      case ("GET" | "DELETE", "namespaces" :: ns :: "tables" :: t :: "plan" :: _ :: Nil) =>
-        Some(Seq("SELECT", "MODIFY") -> (decNs(ns) :+ t))
       // commit / head / refs / drop / view-commit: MODIFY on the table
       case ("POST" | "DELETE", "namespaces" :: ns :: ("tables" | "views") :: t :: _) =>
         Some(Seq("MODIFY") -> (decNs(ns) :+ t))
@@ -579,7 +579,9 @@ class RestCatalogServer(val warehouse: String,
         val (page, next) = paged(ex, all)
         ok(ex, withNextToken(Map("namespaces" -> page.map(Seq(_))), next))
       case ("GET" | "HEAD", "namespaces" :: ns :: Nil) =>
-        if (!io.isDirectory(nsDir(decNs(ns)))) err(ex, 404, s"no namespace $ns")
+        // a table's directory is not a namespace (db\u001ft for table db.t)
+        val dir = nsDir(decNs(ns))
+        if (!io.isDirectory(dir) || isTable(dir)) err(ex, 404, s"no namespace $ns")
         else if (method == "HEAD") { ex.sendResponseHeaders(204, -1); ex.close() }
         else ok(ex, Serialization.write(Map(
           "namespace" -> decNs(ns), "properties" -> Map.empty[String, String])))
@@ -687,43 +689,14 @@ class RestCatalogServer(val warehouse: String,
       // the engine ready FileScanTasks with correctly SCOPED delete files.
       // At 100 TB this is the difference between every engine listing and
       // filtering manifests itself and one metadata-sized response.
-      // Default: synchronous completed (pruning is O(files) over in-memory
-      // metadata, never long-running); `planAsync` answers the spec's
-      // submitted + plan-id leg instead (GET/DELETE …/plan/{id} below).
-      // Either way the RESPONSE is bounded: at most [[planPageSize]]
-      // inline tasks, the rest behind spec `plan-tasks` tokens served by
-      // the fetchScanTasks route below.
+      // Always synchronous `completed`: pruning is O(files) over in-memory
+      // metadata, never long-running. The RESPONSE is bounded: at most
+      // [[planPageSize]] inline tasks, the rest behind spec `plan-tasks`
+      // tokens served by the fetchScanTasks route below.
       case ("POST", "namespaces" :: ns :: "tables" :: t :: "plan" :: Nil) =>
         val body = readJson(ex)
-        if (planAsync)
-          icebergPlanSubmit(ex, decNs(ns), t,
-            (body \ "snapshot-id").extractOpt[Long], body \ "filter")
-        else icebergPlanScan(ex, decNs(ns), t,
+        icebergPlanScan(ex, decNs(ns), t,
           (body \ "snapshot-id").extractOpt[Long], body \ "filter", offset = 0)
-      // async leg: fetch / cancel a submitted plan by id. The registry
-      // entry is only (pinned snapshot version, filter) — fetching
-      // re-prunes through the same snapshot-pinned path the task tokens
-      // use, so results are identical to the synchronous leg.
-      case ("GET", "namespaces" :: ns :: "tables" :: t :: "plan" :: id :: Nil) =>
-        val root = tableRoot(decNs(ns), t)
-        Option(asyncPlans.get((root, id))) match {
-          case None => err(ex, 404, s"no plan $id", "NoSuchPlanIdException")
-          case Some((_, _, true)) => // tombstone: spec cancelled read-back
-            ok(ex, """{"plan-status":"cancelled"}""")
-          case Some((snapV, filterJson, _)) =>
-            icebergPlanScan(ex, decNs(ns), t, Some(snapV),
-              JsonMethods.parse(filterJson), offset = 0)
-        }
-      case ("DELETE", "namespaces" :: ns :: "tables" :: t :: "plan" :: id :: Nil) =>
-        val root = tableRoot(decNs(ns), t)
-        Option(asyncPlans.get((root, id))) match {
-          case None => err(ex, 404, s"no plan $id", "NoSuchPlanIdException")
-          case Some((snapV, filterJson, _)) =>
-            // keep a tombstone (idempotent cancel; GET reads back
-            // "cancelled" per spec instead of 404ing the next poller)
-            asyncPlans.put((root, id), (snapV, filterJson, true))
-            ex.sendResponseHeaders(204, -1); ex.close()
-        }
       // spec fetchScanTasks: {"plan-task": <opaque token>} → the next page
       // of FileScanTasks. The token is stateless — base64 JSON pinning
       // (snapshot version, filter, offset) — so the single-threaded server
@@ -1205,16 +1178,6 @@ class RestCatalogServer(val warehouse: String,
     ok(ex, tableResult(root, metaUri, metadataJson))
   }
 
-  /** One page of spec scan planning — serves BOTH the /plan route (offset
-    * 0, with `plan-status`) and the /tasks fetch route (offset from the
-    * token). Prunes the snapshot's file list against the filter with the
-    * SAME pruning body the engine's own reads use
-    * ([[graft.table.GraftTable.pruneFilesByStats]], minus the session's
-    * Spark-eval fallback for bucket literals), then inlines at most
-    * [[planPageSize]] FileScanTasks; the remainder rides behind one
-    * chained `plan-tasks` token per page. delete-files are repeated per
-    * page because `delete-file-references` index into the SAME response's
-    * array — deletes are metadata-sized next to a 100×-file data page. */
   /** (table root, snapshot version, snapshot commit stamp, canonical
     * filter) → pruned file list. Access-ordered LRU of [[planCacheSize]]:
     * the plan-task tokens stay STATELESS (a miss simply re-prunes, so
@@ -1247,64 +1210,14 @@ class RestCatalogServer(val warehouse: String,
       planCache.keySet.removeIf(k =>
         k._1 == root || (prefix && k._1.startsWith(root + "/")))
     }
-    asyncPlans.synchronized {
-      asyncPlans.keySet.removeIf(k =>
-        k._1 == root || (prefix && k._1.startsWith(root + "/")))
-    }
   }
 
-  /** Async-leg plan registry: (table root, plan-id) → (pinned snapshot
-    * version, filter, cancelled). Entries are only a POINTER — the GET leg
-    * serves from the plan cache the submit seeded (falling back to the
-    * same stateless re-prune path plan-task tokens use), so an evicted or
-    * restarted registry costs a 404 and a re-plan, never a wrong file
-    * list. A cancelled plan stays as a TOMBSTONE so pollers read back the
-    * spec's `"plan-status":"cancelled"` instead of an ambiguous 404
-    * (VERDICT r17 #6). Bounded LRU ([[AsyncPlanSize]]), evicted with the
-    * plan cache on drop/rename. */
-  private val AsyncPlanSize = 128 // beyond it the oldest unfetched plan-ids 404 (the client re-plans)
-  private val asyncPlans = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(String, String), (Long, String, Boolean)](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String), (Long, String, Boolean)]): Boolean =
-        size() > AsyncPlanSize
-    })
-
-  /** Async submit (planAsync mode): validate exactly like the sync leg
-    * (404s must not differ by mode), pin the snapshot VERSION, register
-    * the (version, filter) pointer, answer spec `submitted` + plan-id. */
-  private def icebergPlanSubmit(ex: HttpExchange, ns: Seq[String], t: String,
-      snapshotId: Option[Long], filter: JValue): Unit = {
-    val root = tableRoot(ns, t)
-    if (!isTable(root)) return err(ex, 404, s"no table $t", "NoSuchTableException")
-    val log = logOf(root)
-    val snapV = snapshotId match {
-      case Some(v) =>
-        if (scala.util.Try(log.snapshot(v)).isFailure)
-          return err(ex, 404, s"no snapshot $v")
-        v
-      case None => log.currentVersion
-    }
-    val id = java.util.UUID.randomUUID().toString
-    asyncPlans.put((root, id), (snapV, filterCanon(filter), false))
-    // Seed the plan cache NOW so pollers — N clients × GET …/plan/{id},
-    // each of which used to re-prune O(files) when cold — are O(1) cache
-    // hits from the first poll (VERDICT r17 #6). A bad-request filter is
-    // left for the GET leg to surface as its 400.
-    prunedCached(root, scala.util.Try(log.snapshot(snapV)).getOrElse(null), filter)
-    ok(ex, s"""{"plan-status":"submitted","plan-id":${Serialization.write(id)}}""")
-  }
-
-  /** Cache-through prune shared by the sync/poll scan leg and the async
-    * submit's cache seeding: (root, snapshot version, commit stamp,
-    * canonical filter) → pruned file list via [[planCache]]. Left = the
-    * bad-request message (a non-numeric literal against a numeric column
-    * is the CALLER's fault, not a server fault). Null snapshot → Right(Nil)
-    * without caching (seed-time race with a concurrent drop; the GET leg
-    * re-validates and 404s). */
+  /** Cache-through prune for the scan leg: (root, snapshot version, commit
+    * stamp, canonical filter) → pruned file list via [[planCache]]. Left =
+    * the bad-request message (a non-numeric literal against a numeric
+    * column is the CALLER's fault, not a server fault). */
   private def prunedCached(root: String, snap: graft.table.Snapshot,
       filter: JValue): Either[String, Seq[graft.table.DataFile]] = {
-    if (snap == null) return Right(Nil)
     val filterKey = filterCanon(filter)
     // O(1) snapshot identity beyond (root, version): commit wall-clock plus
     // file-list shape — two same-versioned incarnations commit at different
@@ -1326,6 +1239,16 @@ class RestCatalogServer(val warehouse: String,
     }
   }
 
+  /** One page of spec scan planning — serves BOTH the /plan route (offset
+    * 0, with `plan-status`) and the /tasks fetch route (offset from the
+    * token). Prunes the snapshot's file list against the filter with the
+    * SAME pruning body the engine's own reads use
+    * ([[graft.table.GraftTable.pruneFilesByStats]], minus the session's
+    * Spark-eval fallback for bucket literals), then inlines at most
+    * [[planPageSize]] FileScanTasks; the remainder rides behind one
+    * chained `plan-tasks` token per page. delete-files are repeated per
+    * page because `delete-file-references` index into the SAME response's
+    * array — deletes are metadata-sized next to a 100×-file data page. */
   private def icebergPlanScan(ex: HttpExchange, ns: Seq[String], t: String,
       snapshotId: Option[Long], filter: JValue, offset: Int): Unit = {
     val root = tableRoot(ns, t)
@@ -1426,9 +1349,8 @@ class RestCatalogServer(val warehouse: String,
         .getBytes(StandardCharsets.UTF_8))
 
   /** THE canonical string rendering of a plan filter — shared by the plan
-    * cache key, the stateless task tokens, and the async-plan registry so
-    * a future canonicalization change cannot desynchronize them (review
-    * r17). */
+    * cache key and the stateless task tokens so a future canonicalization
+    * change cannot desynchronize them (review r17). */
   private def filterCanon(filter: JValue): String = filter match {
     case JNothing | JNull => "null"
     case other => JsonMethods.compact(JsonMethods.render(other))
@@ -1821,20 +1743,10 @@ class RestCatalogServer(val warehouse: String,
     (method, segs) match {
       case (m, "iceberg" :: rest) => icebergRoute(ex, m, rest)
       // ---- namespaces ----------------------------------------------------
-      case ("GET", "namespaces" :: Nil) =>
-        val all = io.listNames(warehouse)
-          .filter(n => io.isDirectory(s"$warehouse/$n") && !isTable(s"$warehouse/$n"))
-          .map(Seq(_))
-        ok(ex, Serialization.write(Map("namespaces" -> all)))
       case ("POST", "namespaces" :: Nil) =>
         val req = readJson(ex).extract[CreateNsReq]
         io.mkdirs(nsDir(req.namespace))
         ok(ex)
-      case ("GET", "namespaces" :: ns :: Nil) =>
-        val dir = nsDir(decNs(ns))
-        if (io.isDirectory(dir) && !isTable(dir))
-          ok(ex, Serialization.write(Map("namespace" -> decNs(ns))))
-        else err(ex, 404, s"no namespace $ns")
       case ("DELETE", "namespaces" :: ns :: Nil) =>
         val dir = nsDir(decNs(ns))
         val cascade = Option(ex.getRequestURI.getQuery).getOrElse("").contains("cascade=true")
@@ -1853,12 +1765,6 @@ class RestCatalogServer(val warehouse: String,
         else { io.delete(dir); ok(ex) }
 
       // ---- tables --------------------------------------------------------
-      case ("GET", "namespaces" :: ns :: "tables" :: Nil) =>
-        val dir = nsDir(decNs(ns))
-        if (!io.isDirectory(dir)) return err(ex, 404, s"no namespace $ns")
-        val names = io.listNames(dir).filter(n => isTable(s"$dir/$n"))
-        ok(ex, Serialization.write(Map("identifiers" ->
-          names.map(n => Map("namespace" -> decNs(ns), "name" -> n)))))
       case ("POST", "namespaces" :: ns :: "tables" :: Nil) =>
         val req = readJson(ex).extract[CreateTableReq]
         val root = tableRoot(decNs(ns), req.name)
@@ -1877,10 +1783,6 @@ class RestCatalogServer(val warehouse: String,
         if (!isTable(root)) err(ex, 404, s"no table $t")
         else ok(ex, Serialization.write(Map(
           "location" -> root, "currentVersion" -> logOf(root).currentVersion)))
-      case ("DELETE", "namespaces" :: ns :: "tables" :: t :: Nil) =>
-        val root = tableRoot(decNs(ns), t)
-        if (!isTable(root)) err(ex, 404, s"no table $t")
-        else { io.deleteRecursive(root); logs.remove(root); invalidatePlans(root); ok(ex) }
       case ("POST", "tables" :: "rename" :: Nil) =>
         val req = readJson(ex).extract[RenameReq]
         // same grant shape as the spec rename: MODIFY on source,

@@ -1,6 +1,6 @@
 package graft.table
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.Paths
 import java.util.UUID
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
@@ -1642,28 +1642,6 @@ class GraftTable private (val spark: SparkSession, rawPath: String,
     rows.toDF("snapshot_version", "status", "file_path", "rows", "bytes", "schema_id")
   }
 
-  /** Export the current snapshot as a SYMLINK-FORMAT MANIFEST — a text file
-    * of absolute data-file URIs, the lingua-franca external engines (Trino,
-    * Presto, Athena, DuckDB's read_parquet list) use to read a CONSISTENT
-    * table snapshot without speaking the native log format. The reference
-    * stack's whole purpose is this multi-engine read path (reference
-    * `main.tf:809-820`); the manifest is the catalog-less equivalent.
-    * Re-export after commits to publish a newer snapshot. */
-  def exportSymlinkManifest(outDir: String): Path = {
-    val dir = Paths.get(outDir)
-    Files.createDirectories(dir)
-    val manifest = dir.resolve("manifest.txt")
-    val tmp = dir.resolve(s".manifest.tmp${UUID.randomUUID()}")
-    val uris = log.current.files.map { f =>
-      val p = resolve(f.path)
-      if (p.contains("://")) p else s"file://$p" // schemed roots keep their URI
-    }
-    Files.writeString(tmp, uris.mkString("\n") + (if (uris.isEmpty) "" else "\n"))
-    Files.move(tmp, manifest, java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    manifest
-  }
-
   /** Export the table as a spec-compliant Apache Iceberg v2 metadata tree
     * (`metadata.json` + Avro manifest lists/manifests under
     * `outDir/metadata`, data files referenced in place) so a real Iceberg
@@ -2033,15 +2011,6 @@ class GraftTable private (val spark: SparkSession, rawPath: String,
   private def qmaybe(df: DataFrame, c: String): Column =
     if (df.columns.contains(c)) GraftTable.qcol(c) else col(c)
 
-  /** File-level pruning from snapshot-log stats: files whose [min,max] range
-    * can contain `value` for `column` (the `SupportsPushDownFilters` seed —
-    * SURVEY.md §4 row 1). Files lacking stats are kept (safe). */
-  def filesPossiblyContaining(column: String, value: String): Seq[DataFile] = {
-    val s = log.current
-    val cmp = GraftTable.comparatorOf(s) // schema parsed once, not per file
-    s.files.filter(cmp.canContain(_, column, value))
-  }
-
   /** Prune a snapshot's file list with data-source filters (the pushdown
     * entry used by the DSv2 scan): a file is dropped only when a filter
     * PROVES no row can match its [min,max] bounds; unknown filter shapes and
@@ -2255,10 +2224,6 @@ object GraftTable {
     def allNull(f: DataFile, st: ColumnStats): Boolean =
       st.min.isEmpty && st.max.isEmpty && st.nullCount >= 0 && st.nullCount == f.rows
   }
-
-  private[graft] def comparatorOf(s: Snapshot): StatsComparator =
-    new StatsComparator(DataType.fromJson(
-      s.schemas(s.currentSchemaId.toString)).asInstanceOf[StructType])
 
   /** True iff `flt` PROVES no row of `f` can match, from min/max/null-count
     * bounds alone; unknown filter shapes, stat-less files, and literals or

@@ -136,34 +136,6 @@ class ForeignWriterSpec extends SparkSpec {
     assert(resp.statusCode() == 401)
   }
 
-  test("symlink-manifest export round-trips through a plain parquet scan, deletes applied") {
-    // The read-side interop invariant (SURVEY.md §3 EP3): a second engine
-    // that understands only "a list of parquet URIs" — Trino's symlink
-    // table, DuckDB's read_parquet, the reference's cross-engine promise —
-    // must see EXACTLY the table, including the effect of deletes.
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "symlink-rt-").toString
-    val t = graft.table.GraftTable.create(spark, s"$dir/tbl",
-      (1L to 200L).map(i => (i, s"name$i", i * 1.5)).toDF("id", "name", "amount"))
-    t.append((201L to 250L).map(i => (i, s"name$i", i * 1.5)).toDF("id", "name", "amount"))
-    // copy-on-write delete: the live FILE LIST itself reflects the delete,
-    // which is what makes a bare file-list export complete
-    t.delete(org.apache.spark.sql.functions.col("id") % 7 === 0)
-
-    val manifest = t.exportSymlinkManifest(s"$dir/export")
-    val uris = java.nio.file.Files.readAllLines(manifest).asScala.filter(_.nonEmpty)
-    assert(uris.nonEmpty && uris.forall(_.startsWith("file://")))
-
-    // a foreign engine's view: nothing but a parquet scan of the URIs
-    val foreign = spark.read.parquet(uris.map(u => java.net.URI.create(u).getPath).toSeq: _*)
-    val table = t.read
-    assert(foreign.count() == table.count())
-    assert(foreign.exceptAll(table).count() == 0 && table.exceptAll(foreign).count() == 0)
-    // and the deletes really are gone from the exported view
-    assert(foreign.filter(org.apache.spark.sql.functions.col("id") % 7 === 0).count() == 0)
-  }
-
   test("Iceberg REST surface: config advertises the prefix; loadTable serves spec metadata a real importer loads") {
     // The server doubles as a SPEC Iceberg REST catalog (the Unity-Catalog-
     // IRC role in the reference): a conformant client reads /v1/config,
@@ -189,6 +161,8 @@ class ForeignWriterSpec extends SparkSpec {
         "GET /v1/{prefix}/namespaces/{namespace}/tables/{table}/credentials",
         "POST /v1/{prefix}/transactions/commit")
       .foreach(e => assert(eps.contains(e), s"missing endpoint $e"))
+    // planning is synchronous only: no async plan-id leg is advertised
+    assert(!eps.exists(_.contains("/plan/")), s"async planning advertised: $eps")
 
     spark.sql("CREATE TABLE graftr.db.ice_srv (id BIGINT, name STRING)")
     spark.sql("INSERT INTO graftr.db.ice_srv VALUES (1, 'a'), (2, 'b'), (3, 'c')")

@@ -212,16 +212,6 @@ class GraftTableSpec extends SparkSpec {
     assert(t.read.count() == 4)
   }
 
-  test("file pruning from stats: lookup keeps only candidate files") {
-    val t = mk(Seq((1L, "a", 10.0)))
-    t.append(Seq((100L, "b", 20.0)).toDF("id", "name", "amount"))
-    t.append(Seq((200L, "c", 30.0)).toDF("id", "name", "amount"))
-    assert(t.log.current.files.size == 3)
-    val candidates = t.filesPossiblyContaining("id", "100")
-    assert(candidates.size == 1)
-    assert(t.filesPossiblyContaining("id", "150").isEmpty)
-  }
-
   test("zorder rewrite survives a file that is all-null in the zorder column") {
     val t = mk(Seq((1L, "a", 10.0), (2L, "b", 20.0)))
     // this file's `amount` is entirely null -> its stats entry is the

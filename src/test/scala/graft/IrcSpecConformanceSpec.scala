@@ -235,57 +235,16 @@ class IrcSpecConformanceSpec extends SparkSpec {
     } finally paged.stop()
   }
 
-  test("async planning leg conforms: submitted result, fetch, cancel") {
+  test("the namespace probe answers 404 for a table's name, GET and HEAD alike") {
     fixture
-    val async = new graft.rest.RestCatalogServer(server.warehouse,
-      Map("engine-a" -> "secret-a"), planAsync = true).start()
-    try {
-      val t2 = {
-        val r = http.send(HttpRequest.newBuilder(
-            URI.create(s"${async.uri}/v1/oauth/tokens"))
-          .header("Content-Type", "application/x-www-form-urlencoded")
-          .POST(HttpRequest.BodyPublishers.ofString(
-            "grant_type=client_credentials&client_id=engine-a&client_secret=secret-a"))
-          .build(), HttpResponse.BodyHandlers.ofString())
-        (JsonMethods.parse(r.body()) \ "access_token").extract[String]
-      }
-      def req(method: String, path: String, body: String = "{}") = {
-        val b = HttpRequest.newBuilder(URI.create(s"${async.uri}$path"))
-          .header("Authorization", s"Bearer $t2")
-        val built = method match {
-          case "GET" => b.GET()
-          case "DELETE" => b.DELETE()
-          case _ => b.header("Content-Type", "application/json")
-            .POST(HttpRequest.BodyPublishers.ofString(body))
-        }
-        http.send(built.build(), HttpResponse.BodyHandlers.ofString())
-      }
-      val sub = req("POST", "/v1/iceberg/namespaces/conf/tables/shapes/plan",
-        """{"filter":{"type":"gt","term":"id","value":5}}""")
-      assert(sub.statusCode() == 200, sub.body())
-      conforms("AsyncPlanningResult", sub.body())
-      val id = (JsonMethods.parse(sub.body()) \ "plan-id").extract[String]
-      // fetch: the spec FetchPlanningResult's completed form == the
-      // synchronous CompletedPlanningResult shape
-      val got = req("GET", s"/v1/iceberg/namespaces/conf/tables/shapes/plan/$id")
-      assert(got.statusCode() == 200, got.body())
-      conforms("CompletedPlanningResult", got.body())
-      // cancel: 204, then pollers read back the spec's cancelled status
-      // (EmptyPlanningResult), NOT an ambiguous 404 (VERDICT r17 #6)
-      assert(req("DELETE",
-        s"/v1/iceberg/namespaces/conf/tables/shapes/plan/$id").statusCode() == 204)
-      val cancelled = req("GET", s"/v1/iceberg/namespaces/conf/tables/shapes/plan/$id")
-      assert(cancelled.statusCode() == 200, cancelled.body())
-      conforms("EmptyPlanningResult", cancelled.body())
-      assert((JsonMethods.parse(cancelled.body()) \ "plan-status")
-        .extract[String] == "cancelled")
-      // cancel is idempotent on the tombstone; an UNKNOWN id still 404s
-      assert(req("DELETE",
-        s"/v1/iceberg/namespaces/conf/tables/shapes/plan/$id").statusCode() == 204)
-      val gone = req("GET", "/v1/iceberg/namespaces/conf/tables/shapes/plan/no-such-id")
-      assert(gone.statusCode() == 404, gone.body())
-      conforms("IcebergErrorResponse", gone.body())
-    } finally async.stop()
+    // conf.shapes is a TABLE: its directory sits where namespace
+    // conf\u001fshapes would, and the probe must not report it as one
+    val tableAsNs = "/v1/iceberg/namespaces/conf%1Fshapes"
+    val got = get(tableAsNs)
+    assert(got.statusCode() == 404, got.body())
+    conforms("IcebergErrorResponse", got.body())
+    assert(req("HEAD", tableAsNs, None, auth).statusCode() == 404)
+    assert(req("HEAD", "/v1/iceberg/namespaces/conf", None, auth).statusCode() == 204)
   }
 
   test("spec DDL responses conform: createNamespace and createTable") {

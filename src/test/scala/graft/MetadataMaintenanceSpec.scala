@@ -86,23 +86,6 @@ class MetadataMaintenanceSpec extends SparkSpec {
     assert(t.read.filter($"id" === 4321L).count() == 1)
   }
 
-  test("symlink manifest export lists exactly the current snapshot's files") {
-    import spark.implicits._
-    val path = tmp("symlink-")
-    val t = GraftTable.create(spark, path, Seq(1L, 2L).toDF("id"))
-    t.append(Seq(3L).toDF("id"))
-    val out = Files.createTempDirectory(Paths.get("target"), "manifest-")
-    val manifest = t.exportSymlinkManifest(out.toString)
-    val uris = Files.readString(manifest).trim.split("\n").toSeq
-    assert(uris.size == t.log.current.files.size)
-    assert(uris.forall(_.startsWith("file:///")))
-    // globbing the listed files reproduces the snapshot exactly
-    val paths = uris.map(_.stripPrefix("file://"))
-    val back = spark.read.parquet(paths: _*)
-    assert(back.count() == 3)
-    assert(back.collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L, 3L))
-  }
-
   test("binpack rewrite compacts only small files; big files carry over untouched") {
     import spark.implicits._
     val path = tmp("binpack-")

@@ -375,40 +375,6 @@ class RestDmlSpec extends SparkSpec {
       s"endpoint planned $planned, local pruned $localFiles")
   }
 
-  test("client drains an ASYNC-planning catalog identically to the sync leg") {
-    init()
-    spark.sql("DROP TABLE IF EXISTS graftr.dml.asyncplan")
-    spark.sql("CREATE TABLE graftr.dml.asyncplan (id BIGINT)")
-    spark.sql("INSERT INTO graftr.dml.asyncplan VALUES (1), (2)")
-    spark.sql("INSERT INTO graftr.dml.asyncplan VALUES (10), (11)")
-    // an async-mode server over the SAME warehouse: POST answers
-    // submitted + plan-id, the client polls GET …/plan/{id} (ADVICE r16 —
-    // the spec allows this leg; the client used to hard-require
-    // 'completed')
-    val async = new RestCatalogServer(server.warehouse,
-      Map("engine-a" -> "secret-a"), planAsync = true).start()
-    try {
-      val syncClient = new RestCatalogClient(server.uri, Some("engine-a:secret-a"), None)
-      val asyncClient = new RestCatalogClient(async.uri, Some("engine-a:secret-a"), None)
-      val filter = Some("""{"type":"gt","term":"id","value":5}""")
-      val viaAsync = asyncClient.planScan(Seq("dml"), "asyncplan", filter)
-      val viaSync = syncClient.planScan(Seq("dml"), "asyncplan", filter)
-      assert(viaAsync.nonEmpty && viaAsync.toSet == viaSync.toSet,
-        s"async $viaAsync vs sync $viaSync")
-      // and the engine's server-planned read path works through it too
-      spark.conf.set("spark.sql.catalog.graftasync", "graft.catalog.GraftCatalog")
-      spark.conf.set("spark.sql.catalog.graftasync.uri", async.uri)
-      spark.conf.set("spark.sql.catalog.graftasync.credential", "engine-a:secret-a")
-      val before = graft.table.GraftTable.serverPlanCount.get()
-      val rows = spark.sql(
-        "SELECT id FROM graftasync.dml.asyncplan WHERE id > 5 ORDER BY id")
-        .collect().map(_.getLong(0)).toSeq
-      assert(rows == Seq(10L, 11L))
-      assert(graft.table.GraftTable.serverPlanCount.get() > before,
-        "read did not plan through the async endpoint")
-    } finally async.stop()
-  }
-
   test("IcebergFilterJson: canonical timestamp literals, not-null, and OR conservatism") {
     import org.apache.spark.sql.sources._
     import graft.rest.IcebergFilterJson
